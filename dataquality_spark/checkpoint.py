@@ -22,21 +22,33 @@ The north rule requires exact resume after executor/driver loss. Design
     their directories; completed chunks' data and state are untouched).
   * The state file carries the chunk's lineage: input row count, keep count,
     per-rule pass counts — the `lineage(partition_id, …, checkpoint_state)`
-    table of SURVEY.md §1.4. Lineage is computed from the just-written
-    decisions parquet (column-pruned scan; rules/keep only, never
-    scrubbed_text), not by re-running the dedup join.
+    table of SURVEY.md §1.4. Lineage is ONE grouped aggregate over the
+    just-written decisions of this call's chunks only: their ``chunk=i``
+    directories are read with the decisions schema given (no schema-
+    inference job, no listing of completed chunks) and column-pruned to
+    ``keep`` and ``rules`` (never scrubbed_text), and the per-rule counts
+    are ``rules.heuristics.rule_counts``, the definition
+    ``pipeline.metrics_from_decisions`` uses. A todo chunk that wrote no
+    directory (no rows) commits zero counts; ``out_dir`` must therefore be
+    a local path (a URI the write can reach but ``os`` cannot is refused
+    after the write, before any state commits). Not computed with
+    ``observe()`` on the write: per-chunk conditional counts there (chunks
+    × rules × 2 aggregates) made the whole pass slower, not faster.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dataquality_spark import pipeline as P
 from dataquality_spark.functions import text as TX
+from dataquality_spark.rules.heuristics import rule_counts, rule_score
 
 
 def _chunk_col(n_chunks: int):
@@ -93,56 +105,78 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame, out_dir: str,
      .mode("overwrite").parquet(data_dir))
     for frame in cleanup:
         frame.unpersist()
+    if not os.path.isdir(data_dir):
+        # the lineage finds the written chunks through the local file
+        # system, like the state files: a URI Spark wrote to (file:, s3a:,
+        # hdfs:) would commit zero-row lineage for chunks that have rows
+        raise ValueError(
+            f"decisions were written to {data_dir!r} but it is not a local "
+            f"directory; run_checkpointed needs a local out_dir path")
 
-    # Lineage from the written decisions: rules map + keep flag only — the
-    # parquet reader prunes scrubbed_text, so this is a cheap second scan of
-    # the OUTPUT, not the input.
-    # Empty-input guard: when every todo chunk had zero rows the dynamic
-    # write emits no data files (possibly just a _SUCCESS marker), and the
-    # read fails UNABLE_TO_INFER_SCHEMA — the chunks are still DONE
-    # (rows_in=0) and must commit state, or resume wedges forever.
-    from pyspark.errors import AnalysisException
-    try:
-        written = spark.read.parquet(data_dir).where(
-            F.col("chunk").isin(todo))
-    except AnalysisException:
-        counts = {}
-        metrics_by_chunk: dict[int, list[dict]] = {i: [] for i in todo}
-        return _commit_states(out_dir, data_dir, todo, n_chunks, counts,
-                              metrics_by_chunk)
-    counts = {r["chunk"]: r for r in
-              written.groupBy("chunk")
-              .agg(F.count(F.lit(1)).alias("rows_in"),
-                   F.sum(F.col("keep").cast("long")).alias("rows_kept"))
-              .collect()}
-    # one definition of the rule score: the pipeline's, grouped by chunk
-    per_rule = P.metrics_from_decisions(written,
-                                        group_cols=("chunk",)).collect()
-    metrics_by_chunk: dict[int, list[dict]] = {i: [] for i in todo}
-    for r in per_rule:
-        metrics_by_chunk[r["chunk"]].append({
-            "rule_id": r["rule_id"],
-            "pass_count": r["pass_count"],
-            "fail_count": r["fail_count"],
-            "score": r["score"],
-        })
+    return _commit_states(out_dir, data_dir, todo, n_chunks,
+                          _lineage(spark, data_dir, todo,
+                                   P.pipeline_rules(with_classifier)))
 
-    return _commit_states(out_dir, data_dir, todo, n_chunks, counts,
-                          metrics_by_chunk)
+
+# what the lineage reads of the decisions; given, so nothing is inferred
+_LINEAGE_SCHEMA = T.StructType([
+    T.StructField("keep", T.BooleanType()),
+    T.StructField("rules", T.MapType(T.StringType(), T.BooleanType())),
+    T.StructField("chunk", T.IntegerType()),
+])
+
+
+def _lineage(spark: SparkSession, data_dir: str, todo: list[int],
+             rules: list[str]) -> dict[int, dict]:
+    """chunk → rows_in, rows_kept and per-rule metrics of the written
+    ``todo`` chunks, in one grouped aggregate; chunks with no rows are
+    absent."""
+    dirs = [os.path.join(data_dir, f"chunk={i}") for i in todo]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return {}
+    aggs, out = _lineage_exprs(tuple(rules))
+    rows = (spark.read.schema(_LINEAGE_SCHEMA)
+            .option("basePath", data_dir).parquet(*dirs)
+            .groupBy("chunk").agg(*aggs).select(*out).collect())
+    return {r["chunk"]: {"rows_in": r["rows_in"],
+                         "rows_kept": r["rows_kept"],
+                         "rule_metrics": [m.asDict()
+                                          for m in r["rule_metrics"]]}
+            for r in rows}
+
+
+@functools.lru_cache(maxsize=4)
+def _lineage_exprs(rules: tuple[str, ...]
+                   ) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """The lineage aggregates and the projection over them, built once per
+    rule set."""
+    aggs = [F.count(F.lit(1)).alias("rows_in"),
+            F.sum(F.col("keep").cast("long")).alias("rows_kept")]
+    metrics = []
+    for k, r in enumerate(rules):
+        p, f = rule_counts(F.col("rules")[r])
+        aggs += [p.alias(f"p{k}"), f.alias(f"f{k}")]
+        metrics.append(F.struct(
+            F.lit(r).alias("rule_id"), F.col(f"p{k}").alias("pass_count"),
+            F.col(f"f{k}").alias("fail_count"),
+            rule_score(F.col(f"p{k}"), F.col(f"f{k}")).alias("score")))
+    out = (F.col("chunk"), F.col("rows_in"), F.col("rows_kept"),
+           F.array(*metrics).alias("rule_metrics"))
+    return tuple(aggs), out
 
 
 def _commit_states(out_dir: str, data_dir: str, todo: list[int],
-                   n_chunks: int, counts: dict,
-                   metrics_by_chunk: dict[int, list[dict]]) -> dict:
+                   n_chunks: int, lineage_by_chunk: dict[int, dict]) -> dict:
     processed = []
     for i in todo:
-        c = counts.get(i)
+        c = lineage_by_chunk.get(i)
         state = {
             "chunk": i,
             "n_chunks": n_chunks,
             "rows_in": c["rows_in"] if c else 0,
             "rows_kept": c["rows_kept"] if c else 0,
-            "rule_metrics": sorted(metrics_by_chunk[i],
+            "rule_metrics": sorted(c["rule_metrics"] if c else [],
                                    key=lambda m: m["rule_id"]),
             "data_dir": os.path.join(data_dir, f"chunk={i}"),
         }

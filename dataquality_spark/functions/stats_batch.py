@@ -153,7 +153,7 @@ def stats_batch(texts) -> dict[str, np.ndarray]:
         "nb_distinct": np.zeros(n, dtype=np.int64),
         "fast": np.ones(n, dtype=np.bool_),
         "letterless": np.zeros(n, dtype=np.int64),
-        "stop_cnts": np.zeros((n, len(_KEYMAT)), dtype=np.int64),
+        "stop_cnts": np.zeros((n, _KEYMAT.shape[1]), dtype=np.int64),
     }
     if n == 0:
         return out

@@ -9,6 +9,9 @@ never re-pickling driver globals per batch.
 
 from __future__ import annotations
 
+import functools
+import threading
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -90,6 +93,12 @@ def _emit_stats(out: pd.DataFrame, text: pd.Series) -> pd.DataFrame:
     return out
 
 
+# artifact ids → (SparkContext, artifacts..., udf); an entry made under
+# another SparkContext holds broadcasts that context took with it
+_FUSED_UDFS: dict[tuple[int, int, int], tuple] = {}
+_FUSED_LOCK = threading.Lock()
+
+
 def make_score_scrub_udf(spark: SparkSession, langid_art: dict, lm_art: dict,
                          quality_art: dict | None = None):
     """Fused langid+perplexity+scrub UDF: ONE Arrow transfer of the text
@@ -99,9 +108,27 @@ def make_score_scrub_udf(spark: SparkSession, langid_art: dict, lm_art: dict,
     (``score_batch`` + ``scrub_series``) — parity tests on each kernel
     cover the fused path. When ``quality_art`` is given, the learned quality
     classifier (models/quality.py) rides the SAME Arrow crossing as one more
-    struct field instead of a second Python runner."""
-    from dataquality_spark.scrub import scrub_series_sparse
+    struct field instead of a second Python runner.
+
+    Built once per SparkContext and artifact set (``_FUSED_UDFS``): the
+    model broadcasts pickle ~8.5 MB, and a new UDF re-pickles its closure,
+    so a per-call build is pure driver overhead. A new SparkContext (stop
+    and restart) gets fresh broadcasts."""
     sc = spark.sparkContext
+    key = (id(langid_art), id(lm_art), id(quality_art))
+    with _FUSED_LOCK:
+        hit = _FUSED_UDFS.get(key)
+        if hit is None or hit[0] is not sc:
+            # the entry holds the artifacts, so no live object reuses an id
+            hit = _FUSED_UDFS[key] = (
+                sc, langid_art, lm_art, quality_art,
+                _build_score_scrub_udf(sc, langid_art, lm_art, quality_art))
+    return hit[-1]
+
+
+def _build_score_scrub_udf(sc, langid_art: dict, lm_art: dict,
+                           quality_art: dict | None):
+    from dataquality_spark.scrub import scrub_series_sparse
     b_langid = sc.broadcast(langid_art)
     b_lm = sc.broadcast(lm_art)
     b_q = sc.broadcast(quality_art) if quality_art is not None else None
@@ -143,37 +170,44 @@ def with_model_scores_and_scrub(spark: SparkSession, df: DataFrame,
     ``lang_optional=True`` is the raw-crawl mode: pages straight from WARC
     carry no claimed language, so a NULL ``lang`` passes the language rule
     whenever the model is confident (the claimed-vs-predicted agreement
-    check only applies where a claim exists)."""
+    check only applies where a claim exists).
+
+    Two projections: the UDF call, then every output read straight off its
+    struct (the UDF is nondeterministic, so it must sit in its own
+    projection to run once per row)."""
     udf = make_score_scrub_udf(spark, langid_art, lm_art,
                                quality_art=quality_art)
-    df = df.withColumn("_m", udf(F.col(text_col)))
-    fields = ["_m.pred_lang", "_m.lang_conf", "_m.logprob",
-              "_m.lp_ok", "_m.scrubbed_text", "_m.word_cnt",
-              "_m.nonws_len", "_m.symbol_cnt", "_m.nb_lines",
-              "_m.nb_distinct", "_m.letterless", "_m.stop_cnts"]
-    if quality_art is not None:
-        fields.append("_m.q_prob")
-    agree = F.col("pred_lang") == F.col(lang_col)
+    outputs = _fused_outputs(text_col, lang_col, lang_optional,
+                             quality_art is not None)
+    return (df.withColumn("_m", udf(F.col(text_col)))
+            .select(*df.columns, *outputs))
+
+
+@functools.lru_cache(maxsize=16)
+def _fused_outputs(text_col: str, lang_col: str, lang_optional: bool,
+                   with_quality: bool) -> tuple[Column, ...]:
+    """The fused stage's output columns over the UDF struct ``_m``, in
+    output order; built once per argument set."""
+    pred_lang = F.col("_m.pred_lang")
+    agree = pred_lang == F.col(lang_col)
     if lang_optional:
         agree = F.col(lang_col).isNull() | agree
-    out = (
-        df.select("*", *fields)
-        .drop("_m")
-        .withColumn("scrubbed_text",
-                    F.coalesce(F.col("scrubbed_text"), F.col(text_col)))
-        .withColumn(
-            "r_lang_match",
-            F.col("pred_lang").isNotNull()
-            & agree
-            & (F.col("lang_conf") >= spec.MIN_LANGID_CONF),
-        )
-        .withColumn("r_perplexity", F.col("lp_ok"))
-        .drop("lp_ok")
-    )
-    if quality_art is not None:
-        out = out.withColumn(
-            "r_quality", F.col("q_prob") >= spec.MIN_QUALITY_PROB)
-    return out
+    cols = [F.col(f"_m.{f}") for f in ("pred_lang", "lang_conf", "logprob")]
+    cols.append(F.coalesce(F.col("_m.scrubbed_text"), F.col(text_col))
+                .alias("scrubbed_text"))
+    cols += [F.col(f"_m.{f}") for f in (
+        "word_cnt", "nonws_len", "symbol_cnt", "nb_lines", "nb_distinct",
+        "letterless", "stop_cnts")]
+    if with_quality:
+        cols.append(F.col("_m.q_prob"))
+    cols.append((pred_lang.isNotNull() & agree
+                 & (F.col("_m.lang_conf") >= spec.MIN_LANGID_CONF))
+                .alias("r_lang_match"))
+    cols.append(F.col("_m.lp_ok").alias("r_perplexity"))
+    if with_quality:
+        cols.append((F.col("_m.q_prob") >= spec.MIN_QUALITY_PROB)
+                    .alias("r_quality"))
+    return tuple(cols)
 
 
 def with_model_scores(spark: SparkSession, df: DataFrame,

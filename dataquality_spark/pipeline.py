@@ -20,7 +20,9 @@ from pyspark.sql import functions as F
 from dataquality_spark import spec
 from dataquality_spark.models import langid, ngram_lm
 from dataquality_spark.models.udf import with_model_scores_and_scrub
-from dataquality_spark.rules.heuristics import rule_metrics, with_rule_flags
+from dataquality_spark.rules.heuristics import (
+    rule_counts, rule_metrics, rule_score, with_rule_flags,
+)
 
 PIPELINE_RULES = spec.ALL_RULES + ["dedup"]
 
@@ -49,6 +51,16 @@ def get_artifacts() -> dict:
 # the heap bill. The threshold keeps the bench-scale (≤ sf0.1, ~1 GB)
 # fast path byte-identical.
 CACHE_MEM_MAX_BYTES = 2 << 30
+
+# Winners (content_hash + the winning id struct, one narrow row per
+# distinct kept document) are broadcast for the join-back when their own
+# plan estimate is at most this. The broadcast is collected and built on
+# the driver, single-threaded, so the bound sits well below the cache
+# bound above. Measured on bench.py's 600k-page input (seed 42, 100
+# files): input 945,809,894 B, winners 97,137,231 B, so bench keeps the
+# broadcast with 2x headroom; at that 10.3% ratio the bound cuts over at
+# ~1.2M pages, just under where the cache bound alone used to (~1.36M).
+WINNERS_BROADCAST_MAX_BYTES = 192 << 20
 
 
 def input_bytes_estimate(df: DataFrame) -> int:
@@ -134,18 +146,17 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     gate = F.col("heuristic_pass") & F.col("r_lang_match") & F.col("r_perplexity")
     if with_classifier:
         gate = gate & F.col("r_quality")
-    df = df.withColumn("pre_dedup_pass", gate)
     if not with_dedup:
-        return (df.withColumn("content_hash", F.lit(None).cast("long"))
-                  .withColumn("r_dedup", F.col("pre_dedup_pass"))
-                  .withColumn("keep", F.col("pre_dedup_pass")))
-    df = df.withColumn(
-        "content_hash",
-        F.when(F.col("pre_dedup_pass"), TX.content_hash(F.col("text"))),
-    )
+        return df.withColumns({"pre_dedup_pass": gate,
+                               "content_hash": F.lit(None).cast("long"),
+                               "r_dedup": gate, "keep": gate})
     # raw text is dead weight after hashing + scrubbing (decisions carry
     # scrubbed_text only): keep it out of the persisted frame and the join
-    df = df.drop("text")
+    df = df.select(
+        *[c for c in df.columns if c != "text"],
+        gate.alias("pre_dedup_pass"),
+        F.when(gate, TX.content_hash(F.col("text"))).alias("content_hash"),
+    )
     if persist:
         from pyspark import StorageLevel
         level = (StorageLevel.DISK_ONLY
@@ -161,15 +172,13 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     # Join-back strategy (guide §3.1/§8): the probe side carries the
     # pipeline's heaviest column (scrubbed_text), while winners is three
     # narrow columns — the classic "heavy bytes shuffled to meet a small
-    # decision table" shape. SIZE-GATED broadcast: when the INPUT is small
-    # enough that winners (≤ one narrow row per input doc) is a safe
-    # broadcast, broadcasting deletes the full-frame exchange outright
-    # (measured warm at 600k rows: 18.1s → 16.9s end-to-end, identical
-    # keep count). The gate reuses the same driver-side size estimate as
-    # the cache-level decision above (no extra job); past it — every real
-    # corpus — winners ≈ one row per distinct kept document, far too big
-    # to broadcast, and the plan stays shuffle-hash with AQE skew
-    # handling covering hot hashes.
+    # decision table" shape. SIZE-GATED broadcast: when winners' own plan
+    # estimate (driver-side, no job) is a safe broadcast, broadcasting
+    # deletes the full-frame exchange outright (measured warm at 600k
+    # rows: 18.1s → 16.9s end-to-end, identical keep count). Past it,
+    # winners ≈ one row per distinct kept document, far too big to
+    # broadcast, and the plan stays shuffle-hash with AQE skew handling
+    # covering hot hashes.
     #
     # The shuffle path's join/write partition count scales with the input
     # via AQE's initialPartitionNum (session.py): exchanges start at 1024
@@ -177,20 +186,27 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     # bounded as data grows. (A pre-join repartition(N) cannot do this —
     # EnsureRequirements collapses it back to the conf count when
     # aligning the join sides; observed at 18M pages.)
-    est = input_bytes_estimate(pages)
-    winners = (F.broadcast(winners) if 0 <= est <= CACHE_MEM_MAX_BYTES
+    est = input_bytes_estimate(winners)
+    winners = (F.broadcast(winners)
+               if 0 <= est <= WINNERS_BROADCAST_MAX_BYTES
                else winners.hint("shuffle_hash"))
     joined = df.join(winners, "content_hash", "left")
-    return (
-        joined.withColumn(
-            "r_dedup",
-            F.col("pre_dedup_pass")
-            & (F.col("win.warc_ts") == F.col("warc_ts"))
-            & (F.col("win.url") == F.col("url")),
-        )
-        .drop("win")
-        .withColumn("keep", F.col("pre_dedup_pass") & F.col("r_dedup"))
+    r_dedup = (F.col("pre_dedup_pass")
+               & (F.col("win.warc_ts") == F.col("warc_ts"))
+               & (F.col("win.url") == F.col("url")))
+    return joined.select(
+        *[c for c in joined.columns if c != "win"],
+        r_dedup.alias("r_dedup"),
+        (F.col("pre_dedup_pass") & r_dedup).alias("keep"),
     )
+
+
+def pipeline_rules(with_classifier: bool) -> list[str]:
+    """The rule ids of a run's decisions, in ``rules`` map order."""
+    rules = list(PIPELINE_RULES)
+    if with_classifier:  # opt-in classifier stage
+        rules.insert(rules.index("dedup"), "quality")
+    return rules
 
 
 def decisions_table(annotated: DataFrame,
@@ -199,11 +215,8 @@ def decisions_table(annotated: DataFrame,
     decisions(url, keep, rules map<string,boolean>, scores map<string,double>,
     scrubbed_text[, *extra_cols]). ``extra_cols`` lets the checkpoint path
     carry its chunk key through to a partitioned write."""
-    rules = list(PIPELINE_RULES)
-    if "r_quality" in annotated.columns:  # opt-in classifier stage
-        rules.insert(rules.index("dedup"), "quality")
     rule_entries = []
-    for r in rules:
+    for r in pipeline_rules("r_quality" in annotated.columns):
         rule_entries += [F.lit(r), F.col(f"r_{r}")]
     score_entries = [
         F.lit("lang_conf"), F.col("lang_conf"),
@@ -225,10 +238,8 @@ def decisions_table(annotated: DataFrame,
 
 def pipeline_metrics(annotated: DataFrame) -> DataFrame:
     """rule_metrics(rule_id, pass_count, fail_count, score) over all rules."""
-    rules = list(PIPELINE_RULES)
-    if "r_quality" in annotated.columns:
-        rules.insert(rules.index("dedup"), "quality")
-    return rule_metrics(annotated, rules)
+    return rule_metrics(annotated,
+                        pipeline_rules("r_quality" in annotated.columns))
 
 
 def metrics_from_decisions(decisions: DataFrame,
@@ -236,20 +247,18 @@ def metrics_from_decisions(decisions: DataFrame,
     """Same rule_metrics schema, computed from a written decisions table's
     `rules` map — lets callers that already materialized decisions get
     metrics without re-running the dedup join (one cheap scan + agg).
-    ``group_cols`` prepends grouping keys (e.g. the checkpoint chunk) so
-    the per-chunk lineage metrics use THIS definition of score rather than
-    re-implementing it."""
+    ``group_cols`` prepends grouping keys (e.g. the checkpoint chunk).
+    The counts and score are ``rule_counts``/``rule_score``, shared with
+    the checkpoint lineage."""
     gc = list(group_cols)
     exploded = decisions.select(
         *gc, F.explode("rules").alias("rule_id", "passed"))
-    return (exploded.groupBy(*gc, "rule_id").agg(
-        F.count(F.when(F.col("passed"), 1)).alias("pass_count"),
-        F.count(F.when(~F.col("passed"), 1)).alias("fail_count"))
-        .select(*gc, "rule_id", "pass_count", "fail_count",
-                F.when((F.col("pass_count") + F.col("fail_count")) > 0,
-                       F.round(F.col("pass_count")
-                               / (F.col("pass_count") + F.col("fail_count")), 6))
-                .alias("score")))
+    p, f = rule_counts(F.col("passed"))
+    return (exploded.groupBy(*gc, "rule_id")
+            .agg(p.alias("pass_count"), f.alias("fail_count"))
+            .select(*gc, "rule_id", "pass_count", "fail_count",
+                    rule_score(F.col("pass_count"), F.col("fail_count"))
+                    .alias("score")))
 
 
 def run_from_crawl(spark: SparkSession, warc_path: str,

@@ -13,6 +13,8 @@ Flag-column convention mirrors the reference's `{col}_invalid` /
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,7 +36,7 @@ STAT_COLS = [
 def with_text_stats(df: DataFrame, text_col: str = "text",
                     lang_col: str = "lang",
                     precomputed: bool = False) -> DataFrame:
-    """Append the canonical text statistics (spec.py) in one projection.
+    """Append the canonical text statistics (spec.py).
 
     Uses the single-pass regexp_count forms (functions/text.py §regex stats)
     — whole-stage-codegen'd, no interpreted higher-order functions in the
@@ -52,53 +54,62 @@ def with_text_stats(df: DataFrame, text_col: str = "text",
     fraction arithmetic — spelled EXACTLY like the default branch so the
     IEEE results match bit-for-bit — run in the JVM. The helper count
     columns are dropped; the output schema is identical either way.
+
+    Each dependency layer is one projection (every DataFrame call
+    re-analyzes the whole plan), and the expressions are built once per
+    process (``_stat_layers``).
     """
+    layers = _stat_layers(text_col, lang_col, precomputed)
+    for layer in layers[:-1]:
+        df = df.withColumns(dict(layer))
+    if not precomputed:
+        return df.withColumns(dict(layers[-1]))
+    keep = [c for c in df.columns if c not in _FUSED_HELPERS]
+    return df.select(*keep, *(e.alias(n) for n, e in layers[-1]))
+
+
+# the fused UDF's count columns that only feed the precomputed stats
+_FUSED_HELPERS = frozenset(("nonws_len", "symbol_cnt", "nb_lines",
+                            "nb_distinct", "letterless", "stop_cnts"))
+
+
+@functools.lru_cache(maxsize=16)
+def _stat_layers(text_col: str, lang_col: str, precomputed: bool
+                 ) -> tuple[tuple[tuple[str, Column], ...], ...]:
+    """The stat expressions of ``with_text_stats`` grouped into dependency
+    layers, in output column order. Built once per argument set: the
+    13-language stopword CASE alone is ~100 expression-builder calls."""
     t = F.col(text_col)
-    if precomputed:
-        wc = F.col("word_cnt")
-        return (
-            df.withColumn(
-                "mean_wlen",
-                F.when(wc > 0, F.col("nonws_len") / wc).otherwise(F.lit(None)))
-            # letterless / stop_cnts: the gated ASCII fast-path counts —
-            # NULL rows (gate-rejected) fall back to the regex forms
-            # inside the helpers, so the regex passes run only on the
-            # non-ASCII residue (functions/stats_batch)
-            .withColumn("alpha_frac",
-                        TX.alpha_ratio_rx(t, wc, pre=F.col("letterless")))
-            .withColumn(
-                "symbol_frac",
-                F.when(wc > 0,
-                       F.col("symbol_cnt") / wc).otherwise(F.lit(None)))
-            .withColumn("stop_cnt",
-                        TX.stopword_count_rx(t, F.col(lang_col),
-                                             pre=F.col("stop_cnts")))
-            .withColumn(
-                "stop_frac",
-                F.when(wc > 0, F.col("stop_cnt") / wc).otherwise(F.lit(None)))
-            .withColumn(
-                "dupline_frac",
-                F.when(F.col("nb_lines") > 0,
-                       F.lit(1.0) - F.col("nb_distinct") / F.col("nb_lines"))
-                .otherwise(F.lit(None)))
-            .drop("nonws_len", "symbol_cnt", "nb_lines", "nb_distinct",
-                  "letterless", "stop_cnts")
-        )
-    df = df.withColumn("word_cnt", TX.word_count_rx(t))
     wc = F.col("word_cnt")
+    stop_frac = F.when(wc > 0, F.col("stop_cnt") / wc).otherwise(F.lit(None))
+    if precomputed:
+        return (
+            (("mean_wlen",
+              F.when(wc > 0, F.col("nonws_len") / wc).otherwise(F.lit(None))),
+             # letterless / stop_cnts: the gated ASCII fast-path counts —
+             # NULL rows (gate-rejected) fall back to the regex forms
+             # inside the helpers, so the regex passes run only on the
+             # non-ASCII residue (functions/stats_batch)
+             ("alpha_frac", TX.alpha_ratio_rx(t, wc, pre=F.col("letterless"))),
+             ("symbol_frac",
+              F.when(wc > 0, F.col("symbol_cnt") / wc).otherwise(F.lit(None))),
+             ("stop_cnt", TX.stopword_count_rx(t, F.col(lang_col),
+                                               pre=F.col("stop_cnts")))),
+            (("stop_frac", stop_frac),
+             ("dupline_frac",
+              F.when(F.col("nb_lines") > 0,
+                     F.lit(1.0) - F.col("nb_distinct") / F.col("nb_lines"))
+              .otherwise(F.lit(None)))),
+        )
     return (
-        df.withColumn("mean_wlen", TX.mean_word_len_rx(t, wc))
-        .withColumn("alpha_frac", TX.alpha_ratio_rx(t, wc))
-        .withColumn(
-            "symbol_frac",
-            F.when(wc > 0, TX.symbol_count(t) / wc).otherwise(F.lit(None)),
-        )
-        .withColumn("stop_cnt", TX.stopword_count_rx(t, F.col(lang_col)))
-        .withColumn(
-            "stop_frac",
-            F.when(wc > 0, F.col("stop_cnt") / wc).otherwise(F.lit(None)),
-        )
-        .withColumn("dupline_frac", TX.dup_line_fraction(t))
+        (("word_cnt", TX.word_count_rx(t)),),
+        (("mean_wlen", TX.mean_word_len_rx(t, wc)),
+         ("alpha_frac", TX.alpha_ratio_rx(t, wc)),
+         ("symbol_frac",
+          F.when(wc > 0, TX.symbol_count(t) / wc).otherwise(F.lit(None))),
+         ("stop_cnt", TX.stopword_count_rx(t, F.col(lang_col)))),
+        (("stop_frac", stop_frac),
+         ("dupline_frac", TX.dup_line_fraction(t))),
     )
 
 
@@ -136,16 +147,41 @@ def with_rule_flags(df: DataFrame, text_col: str = "text",
                     params: dict | None = None,
                     precomputed_stats: bool = False) -> DataFrame:
     """stats + one ``r_{rule}: boolean`` column per heuristic rule +
-    ``heuristic_pass`` conjunction. Single projection, no shuffle.
+    ``heuristic_pass`` conjunction. No shuffle.
     ``precomputed_stats`` — see ``with_text_stats``."""
     df = with_text_stats(df, text_col, lang_col, precomputed=precomputed_stats)
-    flags = rule_flags(text_col, params)
-    for rule_id, flag in flags.items():
-        df = df.withColumn(f"r_{rule_id}", flag)
+    flags = (dict(_default_flags(text_col)) if params is None
+             else rule_flags(text_col, params))
+    return (df.withColumns({f"r_{r}": flag for r, flag in flags.items()})
+            .withColumn("heuristic_pass", _heuristic_pass()))
+
+
+@functools.lru_cache(maxsize=16)
+def _default_flags(text_col: str) -> tuple[tuple[str, Column], ...]:
+    """``rule_flags`` at the default parameters, built once per process."""
+    return tuple(rule_flags(text_col).items())
+
+
+@functools.lru_cache(maxsize=1)
+def _heuristic_pass() -> Column:
     conj = F.lit(True)
     for r in spec.HEURISTIC_RULES:
         conj = conj & F.col(f"r_{r}")
-    return df.withColumn("heuristic_pass", conj)
+    return conj
+
+
+def rule_counts(passed: Column) -> tuple[Column, Column]:
+    """The per-rule counts, as aggregate expressions: rows where the rule
+    passed, rows where it failed (a NULL flag counts as neither). The one
+    definition behind ``rule_metrics``, ``pipeline.metrics_from_decisions``
+    and the checkpoint lineage."""
+    return (F.count(F.when(passed, 1)), F.count(F.when(~passed, 1)))
+
+
+def rule_score(pass_count: Column, fail_count: Column) -> Column:
+    """score = 1 - failure rate, rounded to 6 places; NULL with no counts."""
+    total = pass_count + fail_count
+    return F.when(total > 0, F.round(pass_count / total, 6))
 
 
 def rule_metrics(df: DataFrame, rules: list[str] | None = None) -> DataFrame:
@@ -159,9 +195,8 @@ def rule_metrics(df: DataFrame, rules: list[str] | None = None) -> DataFrame:
     rules = rules or [r for r in spec.ALL_RULES if f"r_{r}" in df.columns]
     aggs = []
     for r in rules:
-        flag = F.col(f"r_{r}").cast("boolean")
-        aggs.append(F.count(F.when(flag, 1)).alias(f"{r}__pass"))
-        aggs.append(F.count(F.when(~flag, 1)).alias(f"{r}__fail"))
+        p, f = rule_counts(F.col(f"r_{r}").cast("boolean"))
+        aggs += [p.alias(f"{r}__pass"), f.alias(f"{r}__fail")]
     wide = df.agg(*aggs)
     # unpivot wide one-row frame → (rule_id, pass_count, fail_count, score)
     pairs = ", ".join(
@@ -173,11 +208,6 @@ def rule_metrics(df: DataFrame, rules: list[str] | None = None) -> DataFrame:
             "rule_id",
             F.col("pf.p").alias("pass_count"),
             F.col("pf.f").alias("fail_count"),
-            F.when(
-                (F.col("pf.p") + F.col("pf.f")) > 0,
-                F.round(F.col("pf.p") / (F.col("pf.p") + F.col("pf.f")), 6),
-            )
-            .otherwise(F.lit(None))
-            .alias("score"),
+            rule_score(F.col("pf.p"), F.col("pf.f")).alias("score"),
         )
     )

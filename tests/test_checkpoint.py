@@ -1,6 +1,9 @@
 """Kill/resume test (SURVEY.md §5.2): partial run + resume must produce a
 decisions table identical to a one-shot run."""
 
+import os
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,3 +123,90 @@ def test_empty_input_commits_zero_row_states(spark, tmp_path):
     # and the resume is a clean no-op
     again = C.run_checkpointed(spark, pages, out, n_chunks=3)
     assert again == {"processed": [], "completed": [0, 1, 2]}
+
+
+def test_non_local_out_dir_refused_before_commit(spark, artifacts, tmp_path,
+                                                 monkeypatch):
+    """The lineage finds written chunks through the local file system. A
+    ``file:`` URI is written by Spark where ``os`` cannot see it; the call
+    must fail instead of committing zero-row states for written chunks."""
+    monkeypatch.chdir(tmp_path)   # os resolves "file:/..." under the cwd
+    pages = generate_pages(spark, 120, seed=9, partitions=2)
+    out = f"file:{tmp_path}/uri"
+    with pytest.raises(ValueError, match="not a local directory"):
+        run_checkpointed(spark, pages, out, n_chunks=2)
+    assert os.path.isdir(tmp_path / "uri" / "data")   # Spark wrote it
+    assert completed_chunks(out) == set()              # nothing committed
+
+
+def test_resumed_chunk_states_equal_decisions_metrics(spark, artifacts,
+                                                      tmp_path):
+    """After a crash at half the chunks and a resume, each committed state
+    carries exactly the lineage a rescan of the decisions gives: the
+    per-rule metrics of ``metrics_from_decisions`` grouped by chunk, and
+    rows_in / rows_kept counted from the decisions."""
+    from dataquality_spark.checkpoint import _state_path
+    pages = generate_pages(spark, N, seed=21, partitions=4)
+    out = str(tmp_path / "run")
+    run_checkpointed(spark, pages, out, n_chunks=CHUNKS, max_chunks=2)
+    run_checkpointed(spark, pages, out, n_chunks=CHUNKS)
+    dec = read_decisions(spark, out)
+    want_metrics = {}
+    for r in pipeline.metrics_from_decisions(
+            dec, group_cols=("chunk",)).collect():
+        want_metrics.setdefault(r["chunk"], []).append(
+            {k: r[k] for k in ("rule_id", "pass_count", "fail_count",
+                               "score")})
+    want_rows = {r["chunk"]: (r["n"], r["k"]) for r in dec.groupBy("chunk")
+                 .agg(F.count(F.lit(1)).alias("n"),
+                      F.sum(F.col("keep").cast("long")).alias("k"))
+                 .collect()}
+    assert set(want_rows) == set(range(CHUNKS))
+    states = lineage(out)
+    assert [s["chunk"] for s in states] == list(range(CHUNKS))
+    for s in states:
+        i = s["chunk"]
+        assert (s["rows_in"], s["rows_kept"]) == want_rows[i]
+        assert s["rule_metrics"] == sorted(want_metrics[i],
+                                           key=lambda m: m["rule_id"])
+        assert s["n_chunks"] == CHUNKS
+        assert s["data_dir"] == str(tmp_path / "run" / "data" / f"chunk={i}")
+        assert list(s) == ["chunk", "n_chunks", "rows_in", "rows_kept",
+                           "rule_metrics", "data_dir"]
+        assert os.path.exists(_state_path(out, i))
+        # a chunk that wrote rows never commits a zero-row lineage
+        assert s["rows_in"] > 0
+        assert os.path.isdir(s["data_dir"])
+
+
+def test_one_call_runs_no_inference_and_one_lineage_query(spark, artifacts,
+                                                         tmp_path):
+    """Regression guard on the per-call fixed cost: a resumed call's jobs
+    all belong to two SQL executions — the partitioned write and ONE
+    lineage aggregate. A parquet schema-inference job runs outside any
+    execution, and a second read-back aggregate would be a third one."""
+    pages = generate_pages(spark, 300, seed=7, partitions=4)
+    out = str(tmp_path / "jobs")
+    run_checkpointed(spark, pages, out, n_chunks=4, max_chunks=2)
+    sc = spark.sparkContext
+    group = f"checkpoint-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        r = run_checkpointed(spark, pages, out, n_chunks=4)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r["completed"] == [0, 1, 2, 3]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert job_ids
+    executions = []
+    store = spark._jsparkSession.sharedState().statusStore()
+    listed = store.executionsList()
+    for k in range(listed.size()):
+        jobs = listed.apply(k).jobs().keys().toList()
+        ids = {int(jobs.apply(j)) for j in range(jobs.size())}
+        if ids & job_ids:
+            executions.append(ids)
+    in_executions = set().union(*executions)
+    assert job_ids <= in_executions, "a job ran outside a query execution"
+    assert len(executions) == 2

@@ -173,3 +173,51 @@ def test_quality_logit_udf_parity_and_edges(spark):
     assert (got["logit_num"].to_numpy() == lg).all()
     for j in (1, 2, 3, 4):
         assert nf[j] == 0 and lg[j] == 0
+
+
+def test_fused_udf_once_per_spark_context():
+    """The fused UDF and its model broadcasts are built once per
+    SparkContext; after a stop and a restart the new context gets its own
+    (a broadcast of the stopped context cannot be read) and the pipeline
+    gives the same decisions. Runs in a fresh interpreter, because it
+    stops its session."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent("""
+        from dataquality_spark import pipeline as P
+        from dataquality_spark.models import udf as U
+        from dataquality_spark.session import get_spark
+        from dataquality_spark.synth import generate_pages
+
+        art = P.get_artifacts()
+
+        def decisions(spark):
+            pages = generate_pages(spark, 120, seed=5, partitions=2)
+            cleanup = []
+            ann = P.run_pipeline(spark, pages, cleanup=cleanup)
+            rows = sorted(tuple(r) for r in P.decisions_table(ann)
+                          .select("url", "keep", "scrubbed_text").collect())
+            for f in cleanup:
+                f.unpersist()
+            return rows
+
+        s1 = get_spark(master="local[2]", shuffle_partitions=4)
+        u1 = U.make_score_scrub_udf(s1, art["langid"], art["lm"])
+        assert U.make_score_scrub_udf(s1, art["langid"], art["lm"]) is u1
+        first = decisions(s1)
+        s1.stop()
+        s2 = get_spark(master="local[2]", shuffle_partitions=4)
+        u2 = U.make_score_scrub_udf(s2, art["langid"], art["lm"])
+        assert u2 is not u1
+        assert decisions(s2) == first and len(first) == 120
+        s2.stop()
+        print("ok")
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_DRIVER_MEM="1g")
+    r = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                       text=True, cwd=root, env=env, timeout=600)
+    assert r.returncode == 0 and "ok" in r.stdout, r.stderr[-2000:]

@@ -204,9 +204,11 @@ def test_pipeline_heap_scale_mechanisms(spark, tmp_path):
     finally:
         for f in cleanup:
             f.unpersist()
-    old = P.CACHE_MEM_MAX_BYTES
+    old = P.CACHE_MEM_MAX_BYTES, P.WINNERS_BROADCAST_MAX_BYTES
     try:
-        P.CACHE_MEM_MAX_BYTES = 1            # force the big-input branch
+        # force the big-input branch: disk cache, winners too big to
+        # broadcast (each gated on its own estimate)
+        P.CACHE_MEM_MAX_BYTES = P.WINNERS_BROADCAST_MAX_BYTES = 1
         cleanup2 = []
         ann2 = P.run_pipeline(spark, pages, cleanup=cleanup2)
         assert cleanup2[0].storageLevel == StorageLevel.DISK_ONLY
@@ -216,8 +218,55 @@ def test_pipeline_heap_scale_mechanisms(spark, tmp_path):
         plan2 = ann2._jdf.queryExecution().sparkPlan().toString()
         assert "ShuffledHashJoin" in plan2
     finally:
-        P.CACHE_MEM_MAX_BYTES = old
+        P.CACHE_MEM_MAX_BYTES, P.WINNERS_BROADCAST_MAX_BYTES = old
         for f in cleanup2:
+            f.unpersist()
+
+
+# bench.py's 600k-page pipeline input (seed 42, 100 files), measured with
+# input_bytes_estimate: (input, winners) plan estimates in bytes
+_BENCH_600K_ESTIMATES = (945_809_894, 97_137_231)
+
+
+@pytest.mark.parametrize("case", ["top", "over", "bench_600k"])
+def test_winners_broadcast_gated_on_winners_estimate(spark, monkeypatch,
+                                                     case):
+    """The join-back broadcasts winners iff winners' own plan estimate is
+    at most WINNERS_BROADCAST_MAX_BYTES. Probed at the top of that range
+    with the input estimate at the cache bound, where a gate on the input
+    alone would always broadcast, and at the estimates measured on
+    bench.py's input, which must keep the broadcast. The input is
+    estimated once per call."""
+    from dataquality_spark import pipeline as P
+    from dataquality_spark.synth import generate_pages
+
+    input_est, winners_est = {
+        "top": (P.CACHE_MEM_MAX_BYTES, P.WINNERS_BROADCAST_MAX_BYTES),
+        "over": (P.CACHE_MEM_MAX_BYTES, P.WINNERS_BROADCAST_MAX_BYTES + 1),
+        "bench_600k": _BENCH_600K_ESTIMATES,
+    }[case]
+    calls = []
+
+    def estimate(df):
+        winners = df.columns == ["content_hash", "win"]
+        calls.append(winners)
+        return winners_est if winners else input_est
+
+    monkeypatch.setattr(P, "input_bytes_estimate", estimate)
+    pages = generate_pages(spark, 200, seed=5)
+    cleanup = []
+    ann = P.run_pipeline(spark, pages, cleanup=cleanup)
+    try:
+        plan = ann._jdf.queryExecution().sparkPlan().toString()
+        assert sorted(calls) == [False, True]
+        if case == "over":
+            assert "ShuffledHashJoin" in plan
+            assert "BroadcastHashJoin" not in plan
+        else:
+            assert "BroadcastHashJoin" in plan
+            assert "ShuffledHashJoin" not in plan
+    finally:
+        for f in cleanup:
             f.unpersist()
 
 

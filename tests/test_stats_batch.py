@@ -167,3 +167,18 @@ def test_precomputed_branch_bit_equals_default(spark, rows):
         for helper in ("nonws_len", "symbol_cnt", "nb_lines", "nb_distinct",
                        "letterless", "stop_cnts"):
             assert helper not in got[i]
+
+
+def test_stop_cnts_width_is_the_language_count_without_hits():
+    """A batch with no stopword hit at all still emits one count per
+    language (the zero default used to be one column per distinct
+    stopword), so the array width never varies between batches."""
+    from dataquality_spark import spec
+    from dataquality_spark.models.udf import _emit_stats
+    texts = pd.Series(["xyzzy qqq", "12 34 #", "", None, "plugh"],
+                      dtype=object)
+    st_ = stats_batch(texts)
+    assert st_["stop_cnts"].shape == (len(texts), len(spec.LANGS))
+    emitted = _emit_stats(pd.DataFrame(index=texts.index), texts)
+    widths = {len(a) for a in emitted["stop_cnts"] if a is not None}
+    assert widths == {len(spec.LANGS)}
