@@ -55,11 +55,6 @@ _SYM_LUT[list(_SYM_BYTES)] = True
 _FASTGATE_BAD = np.zeros(256, dtype=np.bool_)
 _FASTGATE_BAD[0x80:] = True
 _FASTGATE_BAD[0x1C:0x20] = True
-# A/B kill switch: reject every row (the JVM regex forms then decide all
-# rows, exactly the pre-fast-path plan). Read at import in each worker.
-import os as _os
-if _os.environ.get("SPARK_GRAFT_NO_STATS_FASTPATH"):
-    _FASTGATE_BAD[:] = True
 
 
 # The fast branch works on the row's raw BYTES (sliced straight off the

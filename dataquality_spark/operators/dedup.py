@@ -301,45 +301,88 @@ def with_dedup_flag(df: DataFrame, id_cols: tuple[str, str] = ("warc_ts", "url")
 
 def _lsh_candidate_pairs(base: DataFrame, max_bucket_size: int | None,
                          skew_metrics: dict | None = None) -> DataFrame:
-    """Banded-LSH candidate generation over a signature frame with columns
-    (_id, _bands): explode band keys → hot-bucket drop → bucket self-join
-    → distinct (id_a < id_b) pairs. Shared by ``near_dup_pairs`` and
-    ``minhash_pair_diagnostics`` so the two can never disagree on which
-    pairs LSH surfaces.
+    """THE banded-LSH candidate generator for MinHash, SimHash and the
+    embedding near-dup path: explode ``_bands`` → hot-bucket cap → bucket
+    self-join → keep id_a < id_b. ``base`` holds ``_id`` and ``_bands``
+    (array<long> of bucket keys, band number packed in so different bands
+    never collide); every other column rides the join as ``<col>_a`` /
+    ``<col>_b``. Pairs are NOT deduplicated — a pair sharing k buckets
+    appears k times; each caller dedups where it is cheapest.
 
-    The hot-bucket drop is a count-over-bucket WINDOW on the same exchange
-    the self-join needs (guide §2.4: operations keyed the same way share
-    one exchange): the window's partition-by-_bucket sort is exactly the
-    sort-merge join's required ordering, and both join sides reuse the one
-    shuffled+sorted subtree (ReusedExchange in-plan). The round-5 spelling
-    (groupBy count → broadcast anti-join) paid a separate aggregation
-    shuffle plus an eager broadcast-build job for the same row set; it is
-    kept for ``skew_metrics`` callers, who ask for the hot-bucket count as
-    an eager diagnostic."""
-    buckets = base.select("_id", F.explode("_bands").alias("_bucket"))
+    Hot-bucket cap: a bucket with m members emits O(m²) pairs, so one viral
+    boilerplate page pins the join at web scale; buckets with more than
+    ``max_bucket_size`` members are DROPPED (standard banded-LSH practice —
+    each pair has other bands to collide in, and exact-duplicate
+    mega-groups are exact dedup's job). The cap is a count WINDOW over
+    ``_bucket``, whose bucket-partitioned, bucket-sorted output is what the
+    sort-merge self-join requires: in the sort-merge regime
+    (``spark.sql.autoBroadcastJoinThreshold=-1``) the join adds no exchange
+    or sort of its own, but each join side runs its own Sort + Window over
+    its own Exchange hashpartitioning(_bucket). With AQE off the second
+    side's exchange is a ReusedExchange; with AQE on (the session default)
+    each side reads the persisted frame through its own
+    TableCacheQueryStage, so the final plan holds two bucket
+    ShuffleQueryStages and nothing is reused. ``skew_metrics``: pass a
+    dict to receive {"hot_buckets": n}, one eager distinct count over the
+    same window frame."""
+    extra = [c for c in base.columns if c not in ("_id", "_bands")]
+    buckets = base.select("_id", *extra, F.explode("_bands").alias("_bucket"))
     if max_bucket_size is not None:
+        from pyspark.sql import Window
+        counted = buckets.withColumn(
+            "_bn", F.count(F.lit(1)).over(Window.partitionBy("_bucket")))
         if skew_metrics is not None:
-            hot = (buckets.groupBy("_bucket")
-                   .agg(F.count(F.lit(1)).alias("_bn"))
-                   .where(F.col("_bn") > max_bucket_size)
-                   .select("_bucket"))
-            skew_metrics["hot_buckets"] = hot.count()
-            buckets = buckets.join(F.broadcast(hot), "_bucket", "left_anti")
-        else:
-            from pyspark.sql import Window
-            w = Window.partitionBy("_bucket")
-            buckets = (buckets
-                       .withColumn("_bn", F.count(F.lit(1)).over(w))
-                       .where(F.col("_bn") <= max_bucket_size)
-                       .drop("_bn"))
-    a = buckets.select(F.col("_id").alias("id_a"), "_bucket")
-    b = buckets.select(F.col("_id").alias("id_b"), "_bucket")
-    return (
-        a.join(b, "_bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+            skew_metrics["hot_buckets"] = (
+                counted.where(F.col("_bn") > max_bucket_size)
+                .select("_bucket").distinct().count())
+        buckets = counted.where(F.col("_bn") <= max_bucket_size).drop("_bn")
+
+    def side(s: str) -> DataFrame:
+        return buckets.select(F.col("_id").alias(f"id_{s}"), "_bucket",
+                              *[F.col(c).alias(f"{c}_{s}") for c in extra])
+
+    return (side("a").join(side("b"), "_bucket")
+            .where(F.col("id_a") < F.col("id_b")).drop("_bucket"))
+
+
+def _minhash_pairs(df: DataFrame, id_col: str, text_col: str,
+                   shingle_n: int, banding: tuple[int, int],
+                   signature_spec: str, emit_sig: bool,
+                   max_bucket_size: int | None,
+                   skew_metrics: dict | None,
+                   cleanup: list[DataFrame] | None) -> DataFrame:
+    """Deduplicated MinHash-LSH candidate pairs with their shingle sets
+    attached: (id_a, id_b, _sh_a, _sh_b[, _sig_a, _sig_b]). Shared by
+    ``near_dup_pairs`` and ``minhash_pair_diagnostics`` so the two can
+    never disagree on which pairs LSH surfaces.
+
+    The signature frame is persisted — it feeds the bucketing AND both
+    verify sides, so the UDF runs once; ``cleanup`` receives the handle
+    (same contract as ``pipeline.run_pipeline``). Only (_id, _bands)
+    enters the bucket-join shuffle; the shingle arrays (and ``sig``) attach
+    to the deduplicated pairs afterwards."""
+    from pyspark import StorageLevel
+
+    udf = shingle_bands_udf(shingle_n, bands=banding[0], rows=banding[1],
+                            signature_spec=signature_spec, emit_sig=emit_sig)
+    cols = ["_sh", "_sig"] if emit_sig else ["_sh"]
+    base = df.select(
+        F.col(id_col).alias("_id"), udf(F.col(text_col)).alias("_sb")
+    ).select(
+        "_id", F.col("_sb.bands").alias("_bands"),
+        *[F.col(f"_sb.{c[1:]}").alias(c) for c in cols]
+    ).where(F.col("_sh").isNotNull() & (F.size("_sh") > 0)) \
+     .persist(StorageLevel.MEMORY_AND_DISK)
+    if cleanup is not None:
+        cleanup.append(base)
+    cand = (_lsh_candidate_pairs(base.select("_id", "_bands"),
+                                 max_bucket_size, skew_metrics)
+            .dropDuplicates(["id_a", "id_b"]))
+    for s in ("a", "b"):
+        cand = cand.join(base.select(F.col("_id").alias(f"id_{s}"),
+                                     *[F.col(c).alias(f"{c}_{s}")
+                                       for c in cols]), f"id_{s}")
+    return cand
 
 
 def minhash_pair_diagnostics(df: DataFrame, id_col: str = "url",
@@ -356,38 +399,19 @@ def minhash_pair_diagnostics(df: DataFrame, id_col: str = "url",
     "is 64 permutations enough at this threshold" and "what does the
     hot-bucket cap cost in recall" with data instead of folklore.
 
-    Same plan shape as ``near_dup_pairs`` (shared candidate generation,
-    signature frame persisted once and re-attached to both pair sides);
+    Same candidates and plan shape as ``near_dup_pairs`` (``_minhash_pairs``);
     the extra sig column rides the verify join, never the bucket-join
     shuffle. Returns (id_a, id_b, est_jaccard, exact_jaccard, abs_err).
     """
-    from pyspark import StorageLevel
-
-    udf = shingle_bands_udf(shingle_n, bands=banding[0], rows=banding[1],
-                            signature_spec=signature_spec, emit_sig=True)
-    base = df.select(
-        F.col(id_col).alias("_id"), udf(F.col(text_col)).alias("_sb")
-    ).select(
-        "_id", F.col("_sb.sh").alias("_sh"), F.col("_sb.bands").alias("_bands"),
-        F.col("_sb.sig").alias("_sig")
-    ).where(F.col("_sh").isNotNull() & (F.size("_sh") > 0)) \
-     .persist(StorageLevel.MEMORY_AND_DISK)
-    if cleanup is not None:
-        cleanup.append(base)
-    cand = _lsh_candidate_pairs(base, max_bucket_size)
-    pairs = (
-        cand.join(base.select(F.col("_id").alias("id_a"),
-                              F.col("_sh").alias("sh_a"),
-                              F.col("_sig").alias("sig_a")), "id_a")
-        .join(base.select(F.col("_id").alias("id_b"),
-                          F.col("_sh").alias("sh_b"),
-                          F.col("_sig").alias("sig_b")), "id_b")
-    )
+    pairs = _minhash_pairs(df, id_col, text_col, shingle_n, banding,
+                           signature_spec, emit_sig=True,
+                           max_bucket_size=max_bucket_size,
+                           skew_metrics=None, cleanup=cleanup)
     n_perms = banding[0] * banding[1]
     matches = F.size(F.filter(
-        F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+        F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda m: m))
+    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
+    union = F.size("_sh_a") + F.size("_sh_b") - inter
     out = pairs.select(
         "id_a", "id_b",
         F.round(matches / F.lit(float(n_perms)), 6).alias("est_jaccard"),
@@ -417,48 +441,23 @@ def near_dup_pairs(df: DataFrame, id_col: str = "url", text_col: str = "text",
     instead of the 16×4 whose midpoint IS 0.5 and would lose ~half the
     borderline pairs); pass an explicit (bands, rows) to pin it.
 
-    Plan shape: explode band keys → self-join on (band, key) → distinct pairs
-    → exact verify. The join is equi-join on bucket keys (shuffle hash / AQE);
-    no cross join ever materializes (SURVEY.md J-2 requirement).
-
-    Hot-bucket cap: a band bucket with m members emits O(m²) candidate pairs
-    into the self-join — one viral boilerplate page at web scale pins the
-    whole join. Buckets with more than ``max_bucket_size`` members are
-    DROPPED before the join (standard banded-LSH practice; each pair has
-    LSH_BANDS more chances to collide in a non-hot band, and mega-groups of
-    EXACT duplicates are the salted exact-dedup stage's job, not LSH's).
-    The blocklist of hot buckets is tiny by construction and broadcast
-    (map-side anti-join — no extra shuffle on the candidate path).
-    ``skew_metrics``: pass a dict to receive {"hot_buckets": n} eagerly.
-    ``cleanup``: the signature frame is persisted (it feeds bucketing and
-    both verify sides); pass a list to receive the handle and unpersist
-    after your terminal action — same contract as ``pipeline.run_pipeline``.
+    Plan shape: explode band keys → self-join on the bucket → distinct
+    pairs → exact verify (``_lsh_candidate_pairs``); no cross join ever
+    materializes (SURVEY.md J-2 requirement). Buckets with more than
+    ``max_bucket_size`` members are dropped before the join (the hot-bucket
+    cap). ``skew_metrics``: pass a dict to receive {"hot_buckets": n}
+    eagerly. ``cleanup``: the signature frame is persisted; pass a list to
+    receive the handle and unpersist after your terminal action — same
+    contract as ``pipeline.run_pipeline``.
     """
-    from pyspark import StorageLevel
-
     if banding == "auto":
         banding = choose_banding(jaccard_threshold)
-    udf = shingle_bands_udf(shingle_n, bands=banding[0], rows=banding[1],
-                            signature_spec=signature_spec)
-    base = df.select(
-        F.col(id_col).alias("_id"), udf(F.col(text_col)).alias("_sb")
-    ).select(
-        "_id", F.col("_sb.sh").alias("_sh"), F.col("_sb.bands").alias("_bands")
-    ).where(F.col("_sh").isNotNull() & (F.size("_sh") > 0)) \
-     .persist(StorageLevel.MEMORY_AND_DISK)
-    if cleanup is not None:
-        cleanup.append(base)
-    # candidate generation joins on (bucket, id) ONLY — the shingle arrays
-    # never enter the bucket-join shuffle; they re-attach for the verify step
-    cand = _lsh_candidate_pairs(base, max_bucket_size, skew_metrics)
-    pairs = (
-        cand.join(base.select(F.col("_id").alias("id_a"),
-                              F.col("_sh").alias("sh_a")), "id_a")
-        .join(base.select(F.col("_id").alias("id_b"),
-                          F.col("_sh").alias("sh_b")), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    pairs = _minhash_pairs(df, id_col, text_col, shingle_n, banding,
+                           signature_spec, emit_sig=False,
+                           max_bucket_size=max_bucket_size,
+                           skew_metrics=skew_metrics, cleanup=cleanup)
+    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
+    union = F.size("_sh_a") + F.size("_sh_b") - inter
     # "containment" scores |A∩B| / min(|A|,|B|): a short doc fully embedded
     # in a long one scores 1.0 where symmetric Jaccard (inter/union) stays
     # low — the quote-page / article-with-boilerplate case. NOTE the LSH
@@ -467,7 +466,7 @@ def near_dup_pairs(df: DataFrame, id_col: str = "url", text_col: str = "text",
     # their Jaccard still reaches a band. For systematic containment mining,
     # lower jaccard_threshold and verify with this measure.
     if measure == "containment":
-        sim = inter / F.least(F.size("sh_a"), F.size("sh_b"))
+        sim = inter / F.least(F.size("_sh_a"), F.size("_sh_b"))
     elif measure == "jaccard":
         sim = inter / union
     else:
@@ -764,9 +763,9 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "url",
     least one band (pigeonhole), so candidate generation is four equi-joins
     on (band_no, band_value) expressed as one explode + self-join, and the
     verify stage is a cheap popcount on the XOR. Same plan skeleton as the
-    MinHash path (`near_dup_pairs`): bucket keys only in the join shuffle,
-    hot-bucket cap against boilerplate mega-buckets, dropDuplicates before
-    verify. Returns (id_a, id_b, hamming).
+    MinHash path (``_lsh_candidate_pairs``): hot-bucket cap against
+    boilerplate mega-buckets, dropDuplicates before verify. Returns
+    (id_a, id_b, hamming).
 
     Guarantee is exact, not probabilistic: recall for distance ≤
     ``max_hamming`` ≤ 3 is 100% (pigeonhole over 4 bands); wider distances
@@ -777,42 +776,23 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "url",
     from pyspark import StorageLevel
 
     # the signature frame feeds both self-join sides — persist it so the
-    # UDF runs once, not once per side (same contract as near_dup_pairs;
-    # measured 7.5s → signature-once via the cache)
+    # UDF runs once, not once per side (measured 7.5s → signature-once)
     base = df.select(F.col(id_col).alias("_id"),
                      simhash_udf(shingle_n, signature_spec)(
                          F.col(text_col)).alias("_sh")) \
              .persist(StorageLevel.MEMORY_AND_DISK)
     if cleanup is not None:
         cleanup.append(base)
-    bands = base.select(
-        "_id", "_sh",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("b"),
-                     F.shiftrightunsigned("_sh", 16 * b)
-                     .bitwiseAND(F.lit(0xFFFF)).alias("v"))
-            for b in range(4)])).alias("_band"))
-    buckets = bands.select("_id", "_sh", F.col("_band.b").alias("_b"),
-                           F.col("_band.v").alias("_v"))
-    if max_bucket_size is not None:
-        # count window on the self-join's own (_b, _v) exchange — same
-        # rows dropped as the old groupBy + broadcast anti-join, minus
-        # one aggregation shuffle and its eager broadcast-build job
-        # (see _lsh_candidate_pairs)
-        from pyspark.sql import Window
-        wb = Window.partitionBy("_b", "_v")
-        buckets = (buckets
-                   .withColumn("_n", F.count(F.lit(1)).over(wb))
-                   .where(F.col("_n") <= max_bucket_size).drop("_n"))
-    a = buckets.select(F.col("_id").alias("id_a"),
-                       F.col("_sh").alias("sh_a"), "_b", "_v")
-    b = buckets.select(F.col("_id").alias("id_b"),
-                       F.col("_sh").alias("sh_b"), "_b", "_v")
-    cand = (a.join(b, ["_b", "_v"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sh_a", "sh_b")
+    # band b of value v is bucket (b << 16) | v — one-to-one with (b, v)
+    # since v < 2^16; the 8-byte _sh rides the join, so no attach joins
+    bands = F.array(*[
+        F.shiftrightunsigned("_sh", 16 * b).bitwiseAND(F.lit(0xFFFF))
+        .bitwiseOR(F.lit(b << 16)) for b in range(4)])
+    cand = (_lsh_candidate_pairs(base.select("_id", "_sh",
+                                             bands.alias("_bands")),
+                                 max_bucket_size)
             .dropDuplicates(["id_a", "id_b"]))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    ham = F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
     return (cand.withColumn("hamming", ham)
             .where(F.col("hamming") <= max_hamming)
             .select("id_a", "id_b", "hamming"))

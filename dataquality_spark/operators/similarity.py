@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataquality_spark.models.corpus import mix64
+from dataquality_spark.operators.dedup import _lsh_candidate_pairs
 
 
 _TOPK_SCHEMA = "query_id long, neighbor_id long, cos_sim double, rn int"
@@ -51,8 +52,7 @@ ANN_MAX_QUERIES = 100_000
 # OOM). Probed with ONE bounded limit-collect over the already-persisted
 # signature frame, the same idiom as COSINE_ALLPAIRS_MAX_ROWS, except the
 # overflow here FALLS BACK instead of raising (both paths are exact).
-EMB_VERIFY_LOOKUP_MAX_ROWS = int(
-    __import__("os").environ.get("SPARK_GRAFT_EMB_LOOKUP_MAX", "200000"))
+EMB_VERIFY_LOOKUP_MAX_ROWS = 200_000
 
 
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str
@@ -159,61 +159,102 @@ def _bucket_udf(spark: SparkSession, dim: int, n_planes: int, seed: int = 42):
     return bucket
 
 
-def seq_cos_udf():
-    """SEQUENTIAL cosine fold, vectorized ACROSS rows: the dim-loop adds
+def _cos_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two [n, dim] float64 matrices in BLAS/numpy
+    reduction order, norm product clamped at 1e-12 (the gauss-spec and
+    ANN re-rank kernel)."""
+    num = (A * B).sum(axis=1)
+    den = np.maximum(np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1),
+                     1e-12)
+    return num / den
+
+
+def _seq_cos_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """SEQUENTIAL row-wise cosine, vectorized ACROSS rows: the dim-loop adds
     a_j·b_j in index order, so every row's accumulation is bit-identical
     to the oracle's left-to-right list_aggregate fold (0.0 + p_1 + p_2 …)
     — unlike BLAS/np.sum, whose blocked order splits round(·,4) at knife
     edges. A zip_with/aggregate HOF spelling is exact too but evaluates
     INTERPRETED per element (measured 12-16s at 20k candidates × 64
-    dims); this Arrow kernel is the same arithmetic at numpy speed.
-    Per-factor norm clamps mirror the oracle's greatest(·, 1e-12), so an
-    all-zero vector yields sim 0 on both engines, never NaN. Shared by
-    semantic_dedup and the portable embedding_near_dup_pairs verify."""
+    dims); this is the same arithmetic at numpy speed. Per-factor norm
+    clamps mirror the oracle's greatest(·, 1e-12), so an all-zero vector
+    yields sim 0 on both engines, never NaN."""
+    dot = np.zeros(len(A))
+    na = np.zeros(len(A))
+    nb = np.zeros(len(A))
+    for j in range(A.shape[1]):
+        dot += A[:, j] * B[:, j]
+        na += A[:, j] * A[:, j]
+        nb += B[:, j] * B[:, j]
+    return dot / (np.maximum(np.sqrt(na), 1e-12)
+                  * np.maximum(np.sqrt(nb), 1e-12))
+
+
+def _vec_cos_udf(kernel):
+    """pandas UDF (vec, vec) → double applying ``kernel`` row-wise."""
 
     @F.pandas_udf("double")
-    def _seq_cos(a: pd.Series, b: pd.Series) -> pd.Series:
+    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series(np.zeros(0))
-        A = np.array(a.tolist(), dtype=np.float64)
-        B = np.array(b.tolist(), dtype=np.float64)
-        dot = np.zeros(len(A))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(A))
-        for j in range(A.shape[1]):
-            dot += A[:, j] * B[:, j]
-            na += A[:, j] * A[:, j]
-            nb += B[:, j] * B[:, j]
-        den = (np.maximum(np.sqrt(na), 1e-12)
-               * np.maximum(np.sqrt(nb), 1e-12))
-        return pd.Series(dot / den)
+        return pd.Series(kernel(np.array(a.tolist(), dtype=np.float64),
+                                np.array(b.tolist(), dtype=np.float64)))
 
-    return _seq_cos
+    return cos
+
+
+def _lookup_table(ids: np.ndarray, M: np.ndarray
+                  ) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, rows of M) sorted by id — the broadcast side of the lookup
+    verify. Raises ValueError on a duplicated id: the lookup would pick one
+    of its vectors where the attach joins pair every copy."""
+    order = np.argsort(ids)
+    ids, M = ids[order], M[order]
+    dup = ids[1:] == ids[:-1]
+    if dup.any():
+        raise ValueError(
+            f"embedding ids must be unique for the lookup verify; id "
+            f"{int(ids[1:][dup][0])} appears more than once")
+    return ids, M
+
+
+def _gather_rows(ids: np.ndarray, M: np.ndarray, q: np.ndarray
+                 ) -> np.ndarray:
+    """Rows of M for the queried ids ``q`` by binary search over the
+    sorted ``ids``. Raises ValueError when a queried id is absent, instead
+    of silently returning a neighbour's vector."""
+    pos = np.searchsorted(ids, q)
+    np.minimum(pos, len(ids) - 1, out=pos)
+    if len(q) and (len(ids) == 0 or (ids[pos] != q).any()):
+        miss = q if len(ids) == 0 else q[ids[pos] != q]
+        raise ValueError(f"id {int(miss[0])} is missing from the "
+                         f"embedding lookup table")
+    return M[pos]
+
+
+def _pack_band_keys(bits: np.ndarray, bands: int,
+                    band_bits: int) -> np.ndarray:
+    """[n, bands*band_bits] sign bits → [n, bands] int64 bucket keys,
+    key = (band << band_bits) | the band's bits read in block order (first
+    bit most significant), so different bands never collide."""
+    w = np.left_shift(np.int64(1), np.arange(band_bits - 1, -1, -1,
+                                             dtype=np.int64))
+    blocks = bits.reshape(len(bits), bands, band_bits).astype(np.int64)
+    return ((blocks * w).sum(axis=2)
+            | (np.arange(bands, dtype=np.int64) << band_bits))
 
 
 def _band_bucket_udf(spark: SparkSession, dim: int, bands: int,
                      band_bits: int, seed: int = 7):
-    """vec → array of ``bands`` bucket keys; key b packs (b, sign bits of the
-    b-th plane block) so different bands never collide."""
-    P = _planes(dim, bands * band_bits, seed)
-    b_p = spark.sparkContext.broadcast(P)
+    """vec → array of ``bands`` bucket keys from the sign bits against the
+    seeded Gaussian planes (``_pack_band_keys`` packing)."""
+    b_p = spark.sparkContext.broadcast(_planes(dim, bands * band_bits, seed))
 
     @F.pandas_udf("array<long>")
     def buckets(vecs: pd.Series) -> pd.Series:
-        P_ = b_p.value
         V = np.array(vecs.tolist(), dtype=np.float64)
-        bits = (V @ P_.T) > 0  # [B, bands*band_bits]
-        out = []
-        for row in bits:
-            keys = []
-            for b in range(bands):
-                block = row[b * band_bits:(b + 1) * band_bits]
-                k = b
-                for j, bit in enumerate(block):
-                    k = (k << 1) | int(bit)
-                keys.append(k)
-            out.append(keys)
-        return pd.Series(out, dtype=object)
+        bits = (V @ b_p.value.T) > 0         # [B, bands*band_bits]
+        return pd.Series(_pack_band_keys(bits, bands, band_bits).tolist())
 
     return buckets
 
@@ -223,27 +264,15 @@ def _band_bucket_udf_portable(spark: SparkSession, dim: int, bands: int,
     """SQL-reproducible sibling of ``_band_bucket_udf``: the planes are the
     deterministic ±1 matrix of ``mixed_planes`` and each sign bit is an
     exact INTEGER dot of the fixed-point-quantized vector — so DuckDB
-    recomputes every band key bit-for-bit. Same key packing as the gauss
-    path: key = (band << band_bits) | sign bits in block order."""
-    R = mixed_planes(dim, bands * band_bits)
-    b_r = spark.sparkContext.broadcast(R)
+    recomputes every band key bit-for-bit. Same key packing."""
+    b_r = spark.sparkContext.broadcast(mixed_planes(dim, bands * band_bits))
 
     @F.pandas_udf("array<long>")
     def buckets(vecs: pd.Series) -> pd.Series:
-        R_ = b_r.value
         V = np.array(vecs.tolist(), dtype=np.float64)
         Q = np.floor(V * SEMDEDUP_QUANT + 0.5).astype(np.int64)
-        bits = (Q @ R_.T) >= 0               # [B, bands*band_bits], exact
-        out = []
-        for row in bits:
-            keys = []
-            for b in range(bands):
-                k = b
-                for bit in row[b * band_bits:(b + 1) * band_bits]:
-                    k = (k << 1) | int(bit)
-                keys.append(k)
-            out.append(keys)
-        return pd.Series(out, dtype=object)
+        bits = (Q @ b_r.value.T) >= 0        # [B, bands*band_bits], exact
+        return pd.Series(_pack_band_keys(bits, bands, band_bits).tolist())
 
     return buckets
 
@@ -278,9 +307,8 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
     MinHash LSH dedup: banded hyperplane signatures (Charikar 2002; per-bit
     collision prob 1-θ/π) → self-join on band buckets → exact cosine verify
     ≥ threshold. Returns (id_a, id_b, cos_sim), id_a < id_b. Never a cross
-    join; hot buckets beyond ``max_bucket_size`` are dropped via a broadcast
-    anti-join exactly like the text LSH path (exact-dup mega-groups belong
-    to exact dedup, not LSH).
+    join; candidates come from the text LSH path's generator
+    (``dedup._lsh_candidate_pairs``), hot-bucket cap included.
 
     Default 8 bands × 6 bits: candidate-recall ≈0.98 at cos 0.9, ≈0.5 at
     cos 0.5 (the S-curve knee sits near the threshold by construction).
@@ -331,21 +359,17 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
             .persist(StorageLevel.MEMORY_AND_DISK))
     if cleanup is not None:
         cleanup.append(base)
-    bk = base.select("_id", F.explode("_bkeys").alias("_bucket"))
-    # hot-bucket drop as a count window on the self-join's own exchange
-    # (guide §2.4) — same rows dropped as the old groupBy + broadcast
-    # anti-join, minus one aggregation shuffle and the eager broadcast
-    # build job; the window's bucket sort is the sort-merge join's
-    # required ordering, so both join sides reuse one shuffled+sorted
-    # subtree (see operators/dedup._lsh_candidate_pairs)
-    wb = Window.partitionBy("_bucket")
-    bk = (bk.withColumn("_n", F.count(F.lit(1)).over(wb))
-          .where(F.col("_n") <= max_bucket_size).drop("_n"))
-    a = bk.select(F.col("_id").alias("id_a"), "_bucket")
-    b = bk.select(F.col("_id").alias("id_b"), "_bucket")
-    cand_raw = (a.join(b, "_bucket")
-                .where(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b"))
+    cand = _lsh_candidate_pairs(
+        base.select("_id", F.col("_bkeys").alias("_bands")), max_bucket_size)
+    # portable: the SAME sequential fold DuckDB computes, decided on
+    # round(·, 4) ≥ threshold (F.round ≡ DuckDB round is the fuzz-validated
+    # bridge; np.round's half-even is not); gauss: numpy order, plain ≥
+    if plane_spec == "portable":
+        kernel = _seq_cos_rows
+        keep = F.round(F.col("_cos"), 4) >= F.lit(float(threshold))
+    else:
+        kernel = _cos_rows
+        keep = F.col("_cos") >= F.lit(float(threshold))
 
     # Verify-stage vector delivery (guide §8: decide with small rows, move
     # heavy bytes once). The join form attaches BOTH 64-dim vectors to
@@ -356,7 +380,7 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
     # broadcast it once (ids sorted + one float64 matrix) and ship ONLY
     # the 16-byte id pair — the UDF gathers each side by binary search.
     # The gathered rows are the same doubles the joins would deliver and
-    # the fold below is unchanged, so every cosine is bit-identical
+    # the kernel is the same, so every cosine is bit-identical
     # (oracle-checked). Bounded probe, loud fallback: one limit-collect
     # over the already-persisted signature frame (the cosine_allpairs /
     # decontaminate size-gate idiom); past the bound — any real corpus —
@@ -365,105 +389,43 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
     probe = (base.select("_id", "_v")
              .limit(EMB_VERIFY_LOOKUP_MAX_ROWS + 1).collect())
     if len(probe) <= EMB_VERIFY_LOOKUP_MAX_ROWS:
-        ids = np.fromiter((r[0] for r in probe), dtype=np.int64,
-                          count=len(probe))
-        M = (np.array([r[1] for r in probe], dtype=np.float64)
-             if probe else np.zeros((0, dim), dtype=np.float64))
-        order = np.argsort(ids)
-        lut = spark.sparkContext.broadcast((ids[order], M[order]))
+        lut = spark.sparkContext.broadcast(_lookup_table(
+            np.fromiter((r[0] for r in probe), dtype=np.int64,
+                        count=len(probe)),
+            np.array([r[1] for r in probe], dtype=np.float64)
+            if probe else np.zeros((0, dim), dtype=np.float64)))
     del probe
 
     if lut is not None:
-        b_lut = lut
+        @F.pandas_udf("double")
+        def cos(ida: pd.Series, idb: pd.Series) -> pd.Series:
+            if len(ida) == 0:
+                return pd.Series(np.zeros(0))
+            ids_, M_ = lut.value
+            return pd.Series(kernel(_gather_rows(ids_, M_, ida.to_numpy()),
+                                    _gather_rows(ids_, M_, idb.to_numpy())))
+
         # with the cheap lookup verify, pair dedup moves AFTER the
         # threshold filter: the cosine is a pure function of the id pair,
         # so deduping survivors (a few thousand rows) instead of the raw
         # candidate stream (~1M rows at bench shape) is set-identical and
         # deletes the large pre-verify exchange+sort. The join fallback
-        # below keeps dedup FIRST — there every duplicate would ship two
-        # vectors through the attach joins.
-
-        def _gather(ida: pd.Series, idb: pd.Series):
-            ids_, M_ = b_lut.value
-            A = M_[np.searchsorted(ids_, ida.to_numpy())]
-            B = M_[np.searchsorted(ids_, idb.to_numpy())]
-            return A, B
-
-        if plane_spec == "portable":
-            # same sequential fold as seq_cos_udf (bit-identical; the
-            # dim-loop adds a_j·b_j in index order like the oracle's
-            # left-to-right list_aggregate)
-            @F.pandas_udf("double")
-            def seq_cos_pair(ida: pd.Series, idb: pd.Series) -> pd.Series:
-                if len(ida) == 0:
-                    return pd.Series(np.zeros(0))
-                A, B = _gather(ida, idb)
-                dot = np.zeros(len(A))
-                na = np.zeros(len(A))
-                nb = np.zeros(len(A))
-                for j in range(A.shape[1]):
-                    dot += A[:, j] * B[:, j]
-                    na += A[:, j] * A[:, j]
-                    nb += B[:, j] * B[:, j]
-                den = (np.maximum(np.sqrt(na), 1e-12)
-                       * np.maximum(np.sqrt(nb), 1e-12))
-                return pd.Series(dot / den)
-
-            return (cand_raw.withColumn("_cos",
-                                        seq_cos_pair(F.col("id_a"),
-                                                     F.col("id_b")))
-                    .where(F.round(F.col("_cos"), 4)
-                           >= F.lit(float(threshold)))
-                    .select("id_a", "id_b",
-                            F.round("_cos", 6).alias("cos_sim"))
-                    .dropDuplicates(["id_a", "id_b"]))
-
-        @F.pandas_udf("double")
-        def cos_pair(ida: pd.Series, idb: pd.Series) -> pd.Series:
-            if len(ida) == 0:
-                return pd.Series(np.zeros(0))
-            X, Y = _gather(ida, idb)
-            num = (X * Y).sum(axis=1)
-            den = np.maximum(np.linalg.norm(X, axis=1)
-                             * np.linalg.norm(Y, axis=1), 1e-12)
-            return pd.Series(num / den)
-
-        return (cand_raw.withColumn("cos_sim", cos_pair(F.col("id_a"),
-                                                        F.col("id_b")))
-                .where(F.col("cos_sim") >= threshold)
-                .select("id_a", "id_b",
-                        F.round("cos_sim", 6).alias("cos_sim"))
+        # keeps dedup FIRST — there every duplicate would ship two vectors
+        # through the attach joins.
+        return (cand.withColumn("_cos", cos(F.col("id_a"), F.col("id_b")))
+                .where(keep)
+                .select("id_a", "id_b", F.round("_cos", 6).alias("cos_sim"))
                 .dropDuplicates(["id_a", "id_b"]))
 
-    cand = cand_raw.dropDuplicates(["id_a", "id_b"])
-    pairs = (cand
-             .join(base.select(F.col("_id").alias("id_a"),
-                               F.col("_v").alias("_va")), "id_a")
-             .join(base.select(F.col("_id").alias("id_b"),
-                               F.col("_v").alias("_vb")), "id_b"))
-
-    if plane_spec == "portable":
-        # exact-oracle verify: the SAME sequential fold DuckDB computes,
-        # decided on round(·, 4) ≥ threshold (F.round ≡ DuckDB round is
-        # the fuzz-validated bridge; np.round's half-even is not)
-        seq = seq_cos_udf()
-        return (pairs.withColumn("_cos", seq(F.col("_va"), F.col("_vb")))
-                .where(F.round(F.col("_cos"), 4) >= F.lit(float(threshold)))
-                .select("id_a", "id_b",
-                        F.round("_cos", 6).alias("cos_sim")))
-
-    @F.pandas_udf("double")
-    def cos(x: pd.Series, y: pd.Series) -> pd.Series:
-        X = np.array(x.tolist(), dtype=np.float64)
-        Y = np.array(y.tolist(), dtype=np.float64)
-        num = (X * Y).sum(axis=1)
-        den = np.maximum(np.linalg.norm(X, axis=1)
-                         * np.linalg.norm(Y, axis=1), 1e-12)
-        return pd.Series(num / den)
-
-    return (pairs.withColumn("cos_sim", cos(F.col("_va"), F.col("_vb")))
-            .where(F.col("cos_sim") >= threshold)
-            .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim")))
+    pairs = cand.dropDuplicates(["id_a", "id_b"])
+    for s in ("a", "b"):
+        pairs = pairs.join(base.select(F.col("_id").alias(f"id_{s}"),
+                                       F.col("_v").alias(f"_v{s}")),
+                           f"id_{s}")
+    return (pairs.withColumn("_cos", _vec_cos_udf(kernel)(F.col("_va"),
+                                                          F.col("_vb")))
+            .where(keep)
+            .select("id_a", "id_b", F.round("_cos", 6).alias("cos_sim")))
 
 
 def cosine_topk_lsh(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
@@ -523,16 +485,8 @@ def cosine_topk_lsh(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
     ).where(F.col("neighbor_id") != F.col("query_id")) \
      .dropDuplicates(["query_id", "neighbor_id"])
 
-    @F.pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.array(a.tolist(), dtype=np.float64)
-        B = np.array(b.tolist(), dtype=np.float64)
-        num = (A * B).sum(axis=1)
-        den = np.maximum(np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1),
-                         1e-12)
-        return pd.Series(num / den)
-
-    scored = cand.withColumn("cos_sim", cos(F.col("_qvec"), F.col("_cvec")))
+    scored = cand.withColumn(
+        "cos_sim", _vec_cos_udf(_cos_rows)(F.col("_qvec"), F.col("_cvec")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id"))
     return (scored.withColumn("rn", F.row_number().over(w))
@@ -631,16 +585,8 @@ def ivf_topk(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
                     F.col(vec_col).alias("_cvec"), "_qvec")
             .where(F.col("neighbor_id") != F.col("query_id")))
 
-    @F.pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.array(a.tolist(), dtype=np.float64)
-        B = np.array(b.tolist(), dtype=np.float64)
-        num = (A * B).sum(axis=1)
-        den = np.maximum(np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1),
-                         1e-12)
-        return pd.Series(num / den)
-
-    scored = cand.withColumn("cos_sim", cos(F.col("_qvec"), F.col("_cvec")))
+    scored = cand.withColumn(
+        "cos_sim", _vec_cos_udf(_cos_rows)(F.col("_qvec"), F.col("_cvec")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id"))
     return (scored.withColumn("rn", F.row_number().over(w))
@@ -799,8 +745,8 @@ def semantic_dedup(spark: SparkSession, df: DataFrame,
 
     # round(·,4) stays JVM-side: F.round ≡ DuckDB round is the
     # fuzz-validated bridge (np.round is half-even, DuckDB half-away).
-    _seq_cos = seq_cos_udf()
-    dropped = (cand.withColumn("_cos", _seq_cos("_ae", "_be"))
+    dropped = (cand.withColumn("_cos",
+                               _vec_cos_udf(_seq_cos_rows)("_ae", "_be"))
                .where(F.round(F.col("_cos"), 4) >= F.lit(thr))
                .select(F.col("id_b").alias("_id")).distinct()
                .withColumn("_dropped", F.lit(True)))

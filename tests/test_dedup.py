@@ -116,6 +116,61 @@ def test_hot_bucket_cap_bounds_candidates(spark):
     assert len(uncapped) == len(got) + 780
 
 
+def test_simhash_hot_bucket_cap_bounds_candidates(spark):
+    """SimHash twin of the MinHash cap test: 40 identical docs share all
+    four band buckets and are capped out of the join, while a perturbed
+    pair (buckets of 2) survives; uncapped, all C(40,2)=780 viral pairs
+    come back."""
+    from dataquality_spark.operators.dedup import simhash_near_dup_pairs
+    words = BODY.split()
+    variant = " ".join(w.upper() if i == 7 else w for i, w in enumerate(words))
+    viral = "breaking news shared boilerplate body " * 30
+    rows = ([("u_a", "2024-01-01", BODY),
+             ("u_b", "2024-01-02", variant + "!")]
+            + [(f"v{i:03d}", "2024-01-01", viral) for i in range(40)])
+    df = _pages(spark, rows)
+
+    capped = simhash_near_dup_pairs(df, max_bucket_size=10).collect()
+    got = {(r["id_a"], r["id_b"]) for r in capped}
+    assert got == {("u_a", "u_b")}
+    uncapped = simhash_near_dup_pairs(df, max_bucket_size=None).collect()
+    assert len(uncapped) == len(got) + 780
+
+
+def test_simhash_bucket_keys_keep_bands_apart(spark, monkeypatch):
+    """Pins the (band << 16) | value bucket keys with chosen signatures
+    (the text column carries the 64-bit value). Pair a/b shares bands
+    0-2; group v holds those band values one band over, so a key without
+    the band number merges a/b's buckets into v's hot ones; group w does
+    the same for a key that shifts the band by 15 instead of 16. Pair c/d
+    shares ONLY band 3 (one flipped bit in each of bands 0-2), so bands
+    that are not the four 16-bit slices lose it; a/b differ in bit 62
+    only, so a key that keeps bits above its slice loses a/b."""
+    from dataquality_spark.operators import dedup as D
+
+    def sig(*bands):                          # band 0 first
+        v = sum(x << (16 * i) for i, x in enumerate(bands))
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    a = sig(0x9111, 0x2222, 0xB333, 0x4444)
+    b = sig(0x9111, 0x2222, 0xB333, 0x0444)   # a ^ (1 << 62)
+    c = sig(0x0123, 0x0456, 0x0789, 0x0ABC)
+    d = sig(0x0122, 0x0457, 0x0788, 0x0ABC)   # Hamming 3, band 3 shared
+    v = sig(0x4444, 0x9111, 0x2222, 0xB333)
+    w = sig(0xA222, 0x1111, 0x5555, 0x3333)
+    rows = ([("a", a), ("b", b), ("c", c), ("d", d)]
+            + [(f"v{i:02d}", v) for i in range(40)]
+            + [(f"w{i:02d}", w) for i in range(40)])
+    df = spark.createDataFrame([(u, str(x)) for u, x in rows],
+                               "url string, text string")
+    monkeypatch.setattr(D, "simhash_udf", lambda *_: lambda col: col.cast("long"))
+
+    capped = D.simhash_near_dup_pairs(df, max_bucket_size=10).collect()
+    assert sorted(tuple(r) for r in capped) == [("a", "b", 1), ("c", "d", 3)]
+    uncapped = D.simhash_near_dup_pairs(df, max_bucket_size=None).collect()
+    assert len(uncapped) == 2 + 2 * 780
+
+
 def test_simhash_close_for_near_dups(spark):
     # SimHash bits stabilize with feature count — use ~300 distinct shingles
     big = " ".join(f"word{i} token{i * 7 % 311}" for i in range(150))

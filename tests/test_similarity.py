@@ -165,6 +165,55 @@ def test_embedding_near_dup_lookup_equals_join_path(spark, monkeypatch):
         assert a == b, f"{spec_name}: lookup and join paths diverge"
 
 
+@pytest.mark.parametrize("bands,band_bits", [(8, 6), (3, 1), (8, 48)])
+def test_band_key_packer_equals_scalar_spec(bands, band_bits):
+    """The vectorized packer equals the per-row loop spec it replaced:
+    key = band, then shift in the band's bits in block order."""
+    from dataquality_spark.operators.similarity import _pack_band_keys
+    bits = np.random.RandomState(band_bits).rand(
+        50, bands * band_bits) > 0.5
+    want = []
+    for row in bits:
+        keys = []
+        for b in range(bands):
+            k = b
+            for bit in row[b * band_bits:(b + 1) * band_bits]:
+                k = (k << 1) | int(bit)
+            keys.append(k)
+        want.append(keys)
+    got = _pack_band_keys(bits, bands, band_bits)
+    assert got.dtype == np.int64
+    assert got.tolist() == want
+
+
+def test_lookup_verify_fails_loudly_on_missing_or_duplicate_ids(spark):
+    """The lookup verify's gather raises on an id absent from the table
+    (past either end and in between), and the table build raises on a
+    duplicated id — both used to return a neighbour's vector silently."""
+    from dataquality_spark.operators import similarity as S
+
+    ids, M = S._lookup_table(np.array([30, 10, 20], dtype=np.int64),
+                             np.arange(6, dtype=np.float64).reshape(3, 2))
+    assert ids.tolist() == [10, 20, 30]
+    assert S._gather_rows(ids, M, np.array([30, 10])).tolist() == [
+        [0.0, 1.0], [2.0, 3.0]]
+    for missing in (5, 15, 40):
+        with pytest.raises(ValueError, match=f"id {missing} is missing"):
+            S._gather_rows(ids, M, np.array([10, missing]))
+    with pytest.raises(ValueError, match="missing"):
+        S._gather_rows(ids[:0], M[:0], np.array([10]))
+    with pytest.raises(ValueError, match="id 20 appears more than once"):
+        S._lookup_table(np.array([20, 10, 20], dtype=np.int64),
+                        np.zeros((3, 2)))
+
+    rng = np.random.RandomState(5)
+    rows = [(i % 7, rng.randn(8).tolist()) for i in range(8)]   # id 0 twice
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    with pytest.raises(ValueError, match="id 0 appears more than once"):
+        S.embedding_near_dup_pairs(spark, df, dim=8)
+
+
 def test_embedding_near_dup_portable_spec(spark):
     """The exact-oracle configuration (quantized Rademacher planes +
     sequential-fold verify) keeps the recall/precision properties of the
