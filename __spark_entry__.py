@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full quality-pipeline DAG (heuristic rules → langid +
-    perplexity UDF → scrub → skew-salted exact dedup) on the deterministic
+    perplexity UDF → scrub → exact dedup) on the deterministic
     synthetic pages corpus, summarized as per-rule metrics (stable schema:
     rule_id, pass_count, fail_count, score — 11 rows, one per pipeline
     rule)."""

@@ -5,7 +5,7 @@ Runs the headline workload at ``$SPARK_GRAFT_SF_DIR`` (default
 line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
 Headline = the full north-rule pipeline (heuristic rules → langid+perplexity
-UDF → scrub → skew-salted dedup → decisions write) over the deterministic
+UDF → scrub → exact dedup → decisions write) over the deterministic
 synthetic pages corpus sized to the scale factor (sf0.1 → 600k pages), plus
 representative operator queries over the driver's tables. Pages generation is
 excluded from timing (it is test fixture setup, not pipeline work); the

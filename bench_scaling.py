@@ -158,7 +158,7 @@ def main():
         f.write(f"""# BENCH — measured baseline
 
 Full north-rule pipeline (heuristic rules → langid+perplexity Arrow UDF →
-scrub → skew-salted exact dedup → decisions write) over the deterministic
+scrub → exact dedup → decisions write) over the deterministic
 synthetic pages corpus, {summary['rows']} rows (input: {sf_dir}).
 
 Two-cluster-size scaling evidence (sandbox stand-in for N vs 4N executors,

@@ -10,7 +10,7 @@ idiomatic Spark DAG over Common-Crawl-style pages:
       → language-ID + n-gram perplexity (batched pandas/Arrow UDFs,
         broadcast numpy model artifacts — no per-row Python)
       → regex PII/toxicity scrub (vectorized replace)
-      → exact dedup (skew-salted two-phase groupBy)
+      → exact dedup (one groupBy, skew absorbed by the map-side partial min)
       → decisions + rule_metrics + lineage, checkpointed per partition.
 
 Everything here derives from public knowledge only: the Apache Spark / PySpark

@@ -49,12 +49,10 @@ def run_rule(spark: SparkSession, dataset: DataFrame | str,
     if rule_id == "dedup":
         from dataquality_spark.metadata import validate_params
         from dataquality_spark.operators.dedup import with_dedup_flag
-        # route the validated override through (the metadata registry
-        # advertises `salt_buckets` as tunable for this rule; silently
-        # ignoring user params here was a contract gap)
-        eff = validate_params(params)
-        flagged = with_dedup_flag(dataset, text_col=text_col,
-                                  salt_buckets=int(eff["salt_buckets"]))
+        # the dedup rule has no parameters: an override is refused as
+        # unknown, never silently ignored
+        validate_params(params)
+        flagged = with_dedup_flag(dataset, text_col=text_col)
     elif rule_id in spec.HEURISTIC_RULES:
         flagged = with_rule_flags(dataset, text_col, lang_col, params)
     else:

@@ -63,7 +63,6 @@ def _state_path(out_dir: str, i: int) -> str:
 
 def run_checkpointed(spark: SparkSession, pages: DataFrame, out_dir: str,
                      n_chunks: int = 8, max_chunks: int | None = None,
-                     salt_buckets: int = 64,
                      with_classifier: bool = False,
                      lang_optional: bool = False) -> dict:
     """Process all incomplete chunks in one input pass; returns run summary.
@@ -93,8 +92,8 @@ def run_checkpointed(spark: SparkSession, pages: DataFrame, out_dir: str,
     subset = (pages.withColumn("chunk", _chunk_col(n_chunks))
               .where(F.col("chunk").isin(todo)))
     cleanup: list[DataFrame] = []
-    ann = P.run_pipeline(spark, subset, salt_buckets=salt_buckets,
-                         cleanup=cleanup, with_classifier=with_classifier,
+    ann = P.run_pipeline(spark, subset, cleanup=cleanup,
+                         with_classifier=with_classifier,
                          lang_optional=lang_optional)
     data_dir = os.path.join(out_dir, "data")
     # One job writes every todo chunk; dynamic mode replaces only the chunk=i

@@ -171,7 +171,7 @@ def link_graph_stats(links: DataFrame, src_host_col: str = "src_host",
     two-phase expand, and the output is bounded at one row per distinct
     host. Host keys are the classic skew case (a few giant hosts dominate
     a crawl) — partial aggregation absorbs count skew and AQE's skew-join
-    split covers the distinct phase, the same posture as the salted dedup
+    split covers the distinct phase, the same posture as the exact dedup
     groupBy (`operators/dedup.py`).
 
     The reference's nearest surface is whole-column membership/uniqueness

@@ -94,10 +94,7 @@ _REGISTRY: tuple[RuleMetadata, ...] = (
         _p("iqr_factor", "Perplexity IQR outlier factor",
            ParameterType.DECIMAL, spec.IQR_FACTOR, min=0.0,
            hint="reference A2 default 1.5 (`accuracy/a2.py:23`)"),)),
-    RuleMetadata("dedup", rule_dimension("dedup"), (
-        _p("salt_buckets", "Skew salt buckets", ParameterType.INTEGER,
-           64, min=1, step=1,
-           hint="result is salt-invariant; tune for reducer balance"),)),
+    RuleMetadata("dedup", rule_dimension("dedup"), ()),
     RuleMetadata("near_dup", "consistency", (
         _p("near_dup_similarity", "Near-dup similarity threshold",
            ParameterType.DECIMAL, spec.NEAR_DUP_SIMILARITY,

@@ -51,22 +51,6 @@ def score_batch(texts: pd.Series, langid_art: dict, lm_art: dict) -> pd.DataFram
     })
 
 
-def make_score_udf(spark: SparkSession, langid_art: dict, lm_art: dict):
-    """Struct-returning pandas UDF with broadcast artifacts."""
-    sc = spark.sparkContext
-    b_langid = sc.broadcast(langid_art)
-    b_lm = sc.broadcast(lm_art)
-
-    @F.pandas_udf(SCORE_SCHEMA)
-    def score(text: pd.Series) -> pd.DataFrame:
-        return score_batch(text, b_langid.value, b_lm.value)
-
-    # nondeterministic ⇒ Catalyst must not duplicate the call when the four
-    # struct fields are extracted (measured: 4× re-evaluation otherwise); the
-    # UDF is pure, this only constrains plan rewrites
-    return score.asNondeterministic()
-
-
 FUSED_SCHEMA = T.StructType(
     SCORE_SCHEMA.fields + [T.StructField("scrubbed_text", T.StringType())]
     + [T.StructField(f, T.LongType()) for f in
@@ -163,8 +147,9 @@ def with_model_scores_and_scrub(spark: SparkSession, df: DataFrame,
                                 lang_col: str = "lang",
                                 quality_art: dict | None = None,
                                 lang_optional: bool = False) -> DataFrame:
-    """Fused pipeline stage: same columns as ``with_model_scores`` plus
-    ``scrubbed_text`` (and, with ``quality_art``, ``q_prob`` +
+    """Fused pipeline stage: appends pred_lang/lang_conf/logprob, the two
+    model rule flags (r_lang_match, r_perplexity), ``scrubbed_text``, the
+    fast-path text stats (and, with ``quality_art``, ``q_prob`` +
     ``r_quality``), in a single Python runner.
 
     ``lang_optional=True`` is the raw-crawl mode: pages straight from WARC
@@ -208,28 +193,6 @@ def _fused_outputs(text_col: str, lang_col: str, lang_optional: bool,
         cols.append((F.col("_m.q_prob") >= spec.MIN_QUALITY_PROB)
                     .alias("r_quality"))
     return tuple(cols)
-
-
-def with_model_scores(spark: SparkSession, df: DataFrame,
-                      langid_art: dict, lm_art: dict,
-                      text_col: str = "text", lang_col: str = "lang"
-                      ) -> DataFrame:
-    """Append pred_lang/lang_conf/logprob + the two model rule flags
-    (r_lang_match, r_perplexity). No shuffle — one Python runner stage."""
-    udf = make_score_udf(spark, langid_art, lm_art)
-    df = df.withColumn("_m", udf(F.col(text_col)))
-    return (
-        df.select("*", "_m.pred_lang", "_m.lang_conf", "_m.logprob", "_m.lp_ok")
-        .drop("_m")
-        .withColumn(
-            "r_lang_match",
-            F.col("pred_lang").isNotNull()
-            & (F.col("pred_lang") == F.col(lang_col))
-            & (F.col("lang_conf") >= spec.MIN_LANGID_CONF),
-        )
-        .withColumn("r_perplexity", F.col("lp_ok"))
-        .drop("lp_ok")
-    )
 
 
 # --- ENGINE-PORTABLE model stage (exact-oracle pipeline path) ---------------

@@ -1,12 +1,19 @@
-"""Deduplication operators: exact (skew-salted), MinHash-LSH, SimHash,
-n-gram Jaccard.
+"""Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
 
 Exact dedup is the north-rule shuffle (BASELINE.json): groupBy on a 64-bit
-content hash of normalized text, **explicitly salted** so Zipfian-hot content
-(boilerplate duplicated across hot domains) cannot pin one reducer. Two-phase
-aggregate: partial min per (hash, salt), final min per hash — the classic
-map-side-combine shape, SURVEY.md §4.3(2). AQE skew handling remains on as
-the backstop for the join-back.
+content hash of the text, one ``min(struct(warc_ts, url))`` per hash. Skew
+(Zipfian-hot content: boilerplate duplicated across hot domains) is handled
+by the map-side partial aggregate Spark plans below the one exchange:
+``min`` is associative and commutative, so each map task folds its rows of a
+hash into one partial state, and a hash held by millions of rows reaches its
+reducer as at most one record per map task — the hot reducer's input is
+bounded by the map task count, not by the group size. A salt cannot spread
+an aggregate that is already combined: the states are one per (map task,
+hash) before anything crosses the wire, so salting only multiplies them by
+the salt count and needs a second exchange to merge them back into one row
+per hash. tests/test_dedup.py pins the plan (one exchange, partial aggregate
+below it) and the hot-group shuffle record count. AQE skew handling remains
+on as the backstop for the join-back.
 
 Re-expresses reference U1 exact-duplicate detection
 (`dimensions/uniqueness/u1.py:34-39`) with an explicit, deterministic
@@ -25,7 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataquality_spark import spec
@@ -253,46 +260,30 @@ def shingle_bands_udf(shingle_n: int = 3, bands: int = LSH_BANDS,
     return sig_bands.asNondeterministic()
 
 
-def exact_dedup_winners(df: DataFrame, id_cols: tuple[str, str] = ("warc_ts", "url"),
-                        text_col: str = "text", salt_buckets: int = 64,
-                        precomputed_hash: str | None = None,
-                        normalize: bool = False) -> DataFrame:
-    """Per-content-hash winner via salted two-phase aggregation.
+def exact_dedup_winners(df: DataFrame, id_cols: tuple[str, str] = ("warc_ts", "url")
+                        ) -> DataFrame:
+    """Per-content-hash winner of a frame that carries ``content_hash``.
 
-    Returns ``(content_hash, win)`` where win = min struct of id_cols.
-    Result is provably invariant to ``salt_buckets`` (min is associative &
-    commutative) — property-tested in tests/test_dedup.py.
+    Returns ``(content_hash, win)`` where win = min struct of id_cols: one
+    aggregate, partial min in every map task, one exchange, final min.
     """
     ts, uid = id_cols
-    h = (F.col(precomputed_hash) if precomputed_hash
-         else TX.content_hash(F.col(text_col), normalize)).alias("content_hash")
-    salted = df.select(
-        h,
-        F.pmod(F.xxhash64(F.col(uid)), F.lit(salt_buckets)).alias("_salt"),
-        F.struct(F.col(ts), F.col(uid)).alias("_id"),
-    )
-    partial = salted.groupBy("content_hash", "_salt").agg(
-        F.min("_id").alias("_win_partial")
-    )
-    return partial.groupBy("content_hash").agg(
-        F.min("_win_partial").alias("win")
-    )
+    return df.groupBy("content_hash").agg(
+        F.min(F.struct(F.col(ts), F.col(uid))).alias("win"))
 
 
 def with_dedup_flag(df: DataFrame, id_cols: tuple[str, str] = ("warc_ts", "url"),
-                    text_col: str = "text", salt_buckets: int = 64,
-                    flag_col: str = "r_dedup", normalize: bool = False) -> DataFrame:
+                    text_col: str = "text", flag_col: str = "r_dedup",
+                    normalize: bool = False) -> DataFrame:
     """Append ``r_dedup`` = True iff the row is its content group's winner.
 
-    One salted shuffle (aggregation) + one hash-join back on content_hash
+    One map-side-combined aggregation + one hash-join back on content_hash
     (AQE skew-join is the backstop for hot hashes).
     """
     ts, uid = id_cols
-    winners = exact_dedup_winners(df, id_cols, text_col, salt_buckets,
-                                  normalize=normalize)
     df = df.withColumn("content_hash",
                        TX.content_hash(F.col(text_col), normalize))
-    joined = df.join(winners, "content_hash", "left")
+    joined = df.join(exact_dedup_winners(df, id_cols), "content_hash", "left")
     return joined.withColumn(
         flag_col,
         (F.col(f"win.{ts}") == F.col(ts)) & (F.col(f"win.{uid}") == F.col(uid)),
@@ -595,7 +586,7 @@ def simhash_udf(shingle_n: int = 2, signature_spec: str = "crc32"):
 
 def dedup_paragraphs(df: DataFrame, id_col: str = "url",
                      text_col: str = "text", order_col: str | None = None,
-                     sep: str = "\n\n", salt_buckets: int = 64) -> DataFrame:
+                     sep: str = "\n\n") -> DataFrame:
     """Cross-document exact PARAGRAPH dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better" — the paragraph/span-level
     variant; C4 applies the same idea at three-sentence granularity): every
@@ -609,12 +600,12 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "url",
     literal for the re-join — pass a literal-safe separator.
 
     Scale shape: paragraphs cross the wire as 64-bit hashes only — the
-    winner aggregation is the same salted two-phase min as
+    winner aggregation is the same map-side-combined min as
     ``exact_dedup_winners`` (hot paragraphs = boilerplate are exactly the
-    skew case), the text re-attaches via one hash equi-join, and
-    reconstruction is one groupBy(id) with ``sort_array`` — a bounded
-    number of engineered shuffles regardless of corpus size, never
-    shuffling full documents.
+    skew case; each map task ships one partial state per hash), the text
+    re-attaches via one hash equi-join, and reconstruction is one
+    groupBy(id) with ``sort_array`` — a bounded number of engineered
+    shuffles regardless of corpus size, never shuffling full documents.
     """
     order_col = order_col or id_col
     paras = (df.select(
@@ -622,11 +613,8 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "url",
         F.posexplode(F.split(F.col(text_col), sep)).alias("_pos", "_para"))
         .where(F.trim("_para") != ""))
     hashed = paras.withColumn("_h", F.xxhash64("_para"))
-    salted = hashed.select(
-        "_h", F.pmod(F.xxhash64("_id"), F.lit(salt_buckets)).alias("_salt"),
-        F.struct("_ord", "_id", "_pos").alias("_k"))
-    partial = salted.groupBy("_h", "_salt").agg(F.min("_k").alias("_kp"))
-    winners = partial.groupBy("_h").agg(F.min("_kp").alias("_win"))
+    winners = hashed.groupBy("_h").agg(
+        F.min(F.struct("_ord", "_id", "_pos")).alias("_win"))
     kept = (hashed.join(winners, "_h")
             .where((F.col("_win._ord") == F.col("_ord"))
                    & (F.col("_win._id") == F.col("_id"))
@@ -694,32 +682,6 @@ def remove_boilerplate_lines(df: DataFrame, id_col: str = "url",
             .select(F.col("_id").alias(id_col),
                     F.coalesce("_clean_text", F.lit(""))
                     .alias(text_col)))
-
-
-def suggest_salt_buckets(df: DataFrame, key: Column | str,
-                         sample_fraction: float = 0.01,
-                         target_rows_per_task: int = 1_000_000,
-                         max_buckets: int = 4096,
-                         seed: int = 17) -> int:
-    """Choose the salt factor from a cheap frequency sketch of the dedup key
-    (SURVEY §4.3(2): "K_hot chosen from a cheap count sketch").
-
-    One sampled aggregation estimates the hottest key's row count; the salt
-    factor is the power of two that splits that group into partial-aggregate
-    states of at most ``target_rows_per_task`` rows. Uniform keys → 1 (no
-    salting overhead); a mega-group (the viral-boilerplate case) → enough
-    buckets to spread it. Result correctness never depends on the estimate —
-    salting is min-associative (property-tested) — so a sampling miss only
-    costs balance, never output."""
-    col = F.col(key) if isinstance(key, str) else key
-    top = (df.sample(fraction=sample_fraction, seed=seed)
-           .groupBy(col.alias("_k")).agg(F.count(F.lit(1)).alias("_n"))
-           .agg(F.max("_n").alias("_m")).collect()[0]["_m"])
-    est_hottest = int((top or 0) / max(sample_fraction, 1e-9))
-    buckets = 1
-    while buckets < max_buckets and est_hottest > target_rows_per_task * buckets:
-        buckets *= 2
-    return buckets
 
 
 def incremental_new_docs(new_docs: DataFrame, prior: DataFrame,

@@ -680,8 +680,7 @@ def semantic_dedup(spark: SparkSession, df: DataFrame,
     the scale knob (cells ≈ 2^n_planes): size it so E[cell] stays in the
     thousands, exactly like SemDeDup sizes its k-means k ∝ corpus size.
     ``n_planes="auto"`` picks it from the corpus — the smallest p with
-    E[cell] = n/2^p ≤ ``target_cell_rows`` (one count job, same contract
-    as ``salt_buckets="auto"`` on the exact-dedup path). A cell above
+    E[cell] = n/2^p ≤ ``target_cell_rows`` (one count job). A cell above
     ``max_cell_size`` fails loudly with that instruction instead of
     silently going quadratic — mirroring the cosine_allpairs guard."""
     if dim is None:

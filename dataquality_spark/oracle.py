@@ -118,7 +118,7 @@ def full_labels(pdf: pd.DataFrame, langid_art: dict, lm_art: dict) -> pd.DataFra
 
     Model scoring reuses models/udf.py::score_batch on purpose — the model IS
     the spec there; what the F1 gate then checks is the Spark-side plumbing
-    (broadcast, Arrow round-trip, flag logic, the salted dedup shuffle).
+    (broadcast, Arrow round-trip, flag logic, the dedup shuffle).
     Heuristics and dedup policy are implemented independently here.
     """
     from dataquality_spark import spec as _spec

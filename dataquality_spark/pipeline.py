@@ -3,7 +3,7 @@
     pages ──► Stage A/C: text stats + heuristic rule flags   [native exprs, no shuffle]
           ──► Stage B:   langid + perplexity                 [one Arrow UDF, no shuffle]
           ──► Stage D:   scrub                               [one Arrow UDF, no shuffle]
-          ──► Stage E:   exact dedup among surviving docs    [1 salted shuffle + join-back]
+          ──► Stage E:   exact dedup among surviving docs    [1 map-combined shuffle + join-back]
           ──► decisions(url, keep, rules, scores, scrubbed_text)
           ──► rule_metrics (one agg pass)                    [tiny]
 
@@ -14,6 +14,7 @@ is never deserialized unless the caller selects it (SURVEY.md §4.2).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,8 +75,6 @@ def input_bytes_estimate(df: DataFrame) -> int:
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame,
-                 with_dedup: bool = True, salt_buckets: int | str = 64,
-                 persist: bool = True,
                  cleanup: list[DataFrame] | None = None,
                  with_classifier: bool = False,
                  lang_optional: bool = False,
@@ -100,14 +99,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     """
     from dataquality_spark.functions import text as TX
     from dataquality_spark.operators.dedup import exact_dedup_winners
-
-    if salt_buckets == "auto":
-        # SURVEY §4.3(2): pick the salt factor from a cheap frequency sketch
-        # of the dedup key (one sampled agg over hash-only columns). The
-        # estimate affects balance only — results are salt-invariant.
-        from dataquality_spark.operators.dedup import suggest_salt_buckets
-        salt_buckets = suggest_salt_buckets(
-            pages, TX.content_hash(F.col("text")))
     art = None if portable_models else get_artifacts()
     # html is never consumed downstream (rules/models/scrub all read `text`);
     # dropping it here keeps it out of the persisted frame and the shuffle.
@@ -146,10 +137,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     gate = F.col("heuristic_pass") & F.col("r_lang_match") & F.col("r_perplexity")
     if with_classifier:
         gate = gate & F.col("r_quality")
-    if not with_dedup:
-        return df.withColumns({"pre_dedup_pass": gate,
-                               "content_hash": F.lit(None).cast("long"),
-                               "r_dedup": gate, "keep": gate})
     # raw text is dead weight after hashing + scrubbing (decisions carry
     # scrubbed_text only): keep it out of the persisted frame and the join
     df = df.select(
@@ -157,18 +144,13 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
         gate.alias("pre_dedup_pass"),
         F.when(gate, TX.content_hash(F.col("text"))).alias("content_hash"),
     )
-    if persist:
-        from pyspark import StorageLevel
-        level = (StorageLevel.DISK_ONLY
-                 if input_bytes_estimate(pages) > CACHE_MEM_MAX_BYTES
-                 else StorageLevel.MEMORY_AND_DISK)
-        df = df.persist(level)
-        if cleanup is not None:
-            cleanup.append(df)
-    winners = exact_dedup_winners(
-        df.where("pre_dedup_pass"), text_col="text", salt_buckets=salt_buckets,
-        precomputed_hash="content_hash",
-    )
+    level = (StorageLevel.DISK_ONLY
+             if input_bytes_estimate(pages) > CACHE_MEM_MAX_BYTES
+             else StorageLevel.MEMORY_AND_DISK)
+    df = df.persist(level)
+    if cleanup is not None:
+        cleanup.append(df)
+    winners = exact_dedup_winners(df.where("pre_dedup_pass"))
     # Join-back strategy (guide §3.1/§8): the probe side carries the
     # pipeline's heaviest column (scrubbed_text), while winners is three
     # narrow columns — the classic "heavy bytes shuffled to meet a small

@@ -304,19 +304,14 @@ FROM g
 
 
 # ---------------------------------------------------------------------------
-# Q4 — first-seen-wins winners per content key (window §2.5, J-4 shape)
+# Q4 — first-seen-wins winners per content key (one min + count aggregate)
 
 def q_dedup_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     key = F.concat_ws(" ", F.slice(TX.words_col(F.col("text")), 1, 2))
-    w = Window.partitionBy("k").orderBy("doc_id")
-    return (docs.select(key.alias("k"), "doc_id")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .groupBy("k")
-            .agg(F.min("doc_id").alias("winner_doc_id"))
-            .join(docs.select(key.alias("k")).groupBy("k")
-                  .agg(F.count(F.lit(1)).alias("group_size")), "k"))
+    return (docs.groupBy(key.alias("k"))
+            .agg(F.min("doc_id").alias("winner_doc_id"),
+                 F.count(F.lit(1)).alias("group_size")))
 
 
 _SQL_DEDUP_WINNERS = f"""
@@ -1298,7 +1293,7 @@ def q_pages_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full north-rule DAG → per-rule metrics, EXACT oracle as of round 5.
 
     The registry row runs the REAL `pipeline.run_pipeline` DAG (fused
-    one-UDF stage B, single salted dedup shuffle, same plan shape) over a
+    one-UDF stage B, one map-combined dedup shuffle, same plan shape) over a
     pages frame DERIVED from `documents` by pure SQL-expressible
     expressions (the `_fake_media` pattern), with `portable_models=True`:
     stage B's decisions are the fixed-point integer specs

@@ -32,7 +32,7 @@ Usage:
     python dq_tool.py data.parquet                      # all rules, defaults
     python dq_tool.py data.csv --interactive            # prompt-driven
     python dq_tool.py data.parquet --rules min_words,max_words,dedup \
-        --set min_words=20 --set salt_buckets=32 \
+        --set min_words=20 \
         --rule-weights "{'min_words': 0.4, 'max_words': 0.6}" \
         --log-dir /tmp/dq_catalog --export-xlsx /tmp/dq_log.xlsx
 
@@ -172,8 +172,7 @@ def compute_metrics(spark, df, rule_ids: list[str], params: dict,
                 f"dataset); pass --text-col")
         from dataquality_spark.operators.dedup import with_dedup_flag
         flagged = with_dedup_flag(flagged, id_cols=id_cols,
-                                  text_col=text_col,
-                                  salt_buckets=int(params["salt_buckets"]))
+                                  text_col=text_col)
     return [r.asDict() for r in
             rule_metrics(flagged, rule_ids).collect()]
 

@@ -4,7 +4,7 @@ Usage (cluster):
     python tools/package.py                       # → dist/dataquality_spark.zip
     spark-submit --py-files dist/dataquality_spark.zip run_job.py \
         --input /path/to/pages_parquet --output /path/to/run_dir \
-        --chunks 64 [--salt-buckets 256] [--synthetic N]
+        --chunks 64 [--synthetic N]
 
 Resumes automatically: completed chunks (committed state files under
 ``<output>/_state/``) are skipped, so re-submitting after an executor/driver
@@ -28,8 +28,6 @@ def main() -> int:
                     help="generate N synthetic pages instead of --input")
     ap.add_argument("--output", required=True, help="run directory")
     ap.add_argument("--chunks", type=int, default=8)
-    ap.add_argument("--salt-buckets", default=64,
-                type=lambda v: v if v == "auto" else int(v))
     ap.add_argument("--master", default=None)
     ap.add_argument("--with-classifier", action="store_true",
                     help="gate keep on the learned quality classifier too "
@@ -60,7 +58,6 @@ def main() -> int:
 
     summary = run_checkpointed(spark, pages, args.output,
                                n_chunks=args.chunks,
-                               salt_buckets=args.salt_buckets,
                                with_classifier=args.with_classifier,
                                lang_optional=lang_optional)
     rows = lineage(args.output)

@@ -1,5 +1,8 @@
-"""Dedup fixtures (fx_exactdup, fx_neardup): winner policy, salt invariance,
-LSH recall/precision at the 0.91 reference threshold."""
+"""Dedup fixtures (fx_exactdup, fx_neardup): winner policy, input-partition
+invariance, the one-exchange winners plan and its map-side combine, LSH
+recall/precision at the 0.91 reference threshold."""
+
+import re
 
 import pandas as pd
 import pytest
@@ -7,7 +10,8 @@ from pyspark.sql import functions as F
 
 from dataquality_spark import spec
 from dataquality_spark.operators.dedup import (
-    near_dup_pairs, simhash64_py, simhash_udf, with_dedup_flag,
+    dedup_paragraphs, exact_dedup_winners, near_dup_pairs, simhash64_py,
+    simhash_udf, with_dedup_flag,
 )
 
 BODY = ("the quick brown fox jumps over the lazy dog near the river "
@@ -61,17 +65,104 @@ def test_exact_dedup_normalization_opt_in(spark):
     assert not norm.loc["u_b", "r_dedup"] and not norm.loc["u_c", "r_dedup"]
 
 
-@pytest.mark.parametrize("salt", [1, 2, 64, 257])
-def test_salt_invariance(spark, salt):
-    """Winner set must be invariant w.r.t. salt bucket count (BASELINE.md)."""
+@pytest.mark.parametrize("parts", [1, 2, 64, 257])
+def test_partition_count_invariance(spark, parts):
+    """Winner set must be invariant w.r.t. the input partition count: each
+    map task folds its rows into partial min states, and min merges them
+    exactly however the rows were split (BASELINE.md)."""
     rows = [(f"u{i:03d}", f"2024-01-{(i % 27) + 1:02d}",
              BODY if i % 3 == 0 else f"distinct text {i} " * 30)
             for i in range(60)]
-    out = (with_dedup_flag(_pages(spark, rows), salt_buckets=salt)
+    out = (with_dedup_flag(_pages(spark, rows).repartition(parts))
            .toPandas().set_index("url")["r_dedup"])
-    base = (with_dedup_flag(_pages(spark, rows), salt_buckets=16)
+    base = (with_dedup_flag(_pages(spark, rows))
             .toPandas().set_index("url")["r_dedup"])
+    assert base.sum() == 41  # one BODY winner + 40 distinct texts
     assert (out.sort_index() == base.sort_index()).all()
+
+
+def _nodes(plan) -> list:
+    """Every node of a physical plan in pre-order, with AQE's wrapper and
+    query stages unwrapped (before execution: the initial plan)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _nodes(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _nodes(plan.plan())
+    kids = plan.children()
+    return [plan] + [n for i in range(kids.size())
+                     for n in _nodes(kids.apply(i))]
+
+
+def _winners_plan(frame, key: str) -> list:
+    """The subtree rooted at ``frame``'s final ``min`` aggregate grouped
+    on ``key``."""
+    grouped = re.compile(rf"key=\[{key}#\d+L?\], functions=\[min\(")
+    final = [n for n in _nodes(frame._jdf.queryExecution().executedPlan())
+             if n.nodeName().endswith("Aggregate")
+             and grouped.search(n.simpleString(100))]
+    assert len(final) == 1, [n.simpleString(100) for n in final]
+    return _nodes(final[0])
+
+
+def _assert_one_combined_exchange(frame, key: str):
+    exchanges = [n for n in _winners_plan(frame, key)
+                 if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1, [n.simpleString(100) for n in exchanges]
+    assert any(n.nodeName().endswith("Aggregate")
+               and "partial_min(" in n.simpleString(100)
+               for n in _nodes(exchanges[0]))
+
+
+def _hashed(frame):
+    return frame.withColumn("content_hash", F.xxhash64("text"))
+
+
+def test_winners_plan_one_exchange_over_partial_min(spark, artifacts):
+    """The winners aggregate of exact_dedup_winners, dedup_paragraphs and
+    run_pipeline is ONE exchange with the partial min below it — no second
+    exchange to merge salted partial states."""
+    from dataquality_spark import pipeline as P
+    from dataquality_spark.synth import generate_pages
+
+    rows = [("u_a", "2024-01-01", BODY), ("u_b", "2024-01-02", BODY)]
+    _assert_one_combined_exchange(
+        exact_dedup_winners(_hashed(_pages(spark, rows))), "content_hash")
+    docs = spark.createDataFrame(
+        [("a", "alpha\n\nbeta"), ("b", "beta")], "url string, text string")
+    _assert_one_combined_exchange(dedup_paragraphs(docs), "_h")
+    cleanup = []
+    ann = P.run_pipeline(spark, generate_pages(spark, 50, seed=3),
+                         cleanup=cleanup)
+    try:
+        _assert_one_combined_exchange(ann, "content_hash")
+    finally:
+        for f in cleanup:
+            f.unpersist()
+
+
+@pytest.mark.parametrize("parts", [4, 16])
+def test_hot_group_ships_one_record_per_map_task(spark, parts):
+    """90% of rows share one text across every input partition; the
+    winners exchange still writes at most one record per (map task,
+    content hash) — the skew is absorbed before the shuffle."""
+    n = 4000
+    pages = _hashed(spark.range(0, n, 1, parts).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.lit("2024-01-01").cast("timestamp").alias("warc_ts"),
+        F.when(F.col("id") % 10 < 9, F.lit(BODY))
+        .otherwise(F.concat(F.lit("doc "), F.col("id").cast("string")))
+        .alias("text")))
+    pairs = (pages.select(F.spark_partition_id().alias("p"), "content_hash")
+             .distinct().count())
+    assert pairs == parts + n // 10
+    winners = exact_dedup_winners(pages)
+    # collect runs winners' own plan, whose exchange then holds the metric
+    assert len(winners.collect()) == 1 + n // 10
+    written = sum(node.metrics().apply("shuffleRecordsWritten").value()
+                  for node in _winners_plan(winners, "content_hash")
+                  if node.nodeName() == "Exchange")
+    assert 0 < written <= pairs
 
 
 def test_near_dup_pairs_finds_perturbed(spark):
@@ -266,7 +357,6 @@ def test_dedup_paragraphs_semantics(spark):
     """Cross-doc + within-doc paragraph dedup with reconstruction: first
     occurrence (min (order, id, pos)) wins; blanks are not dedup keys; a
     fully-duplicated document reconstructs to ''."""
-    from dataquality_spark.operators.dedup import dedup_paragraphs
     rows = [
         ("a", 1, "alpha\n\nbeta\n\nalpha"),       # within-doc dup of alpha
         ("b", 2, "beta\n\ngamma"),                 # beta seen in a
@@ -284,31 +374,16 @@ def test_dedup_paragraphs_semantics(spark):
     }
 
 
-def test_dedup_paragraphs_salt_invariance(spark):
-    from dataquality_spark.operators.dedup import dedup_paragraphs
+def test_dedup_paragraphs_partition_count_invariance(spark):
     docs = spark.createDataFrame(
         [(i, " ".join(f"p{(i * 7 + j) % 23}" for j in range(4)).replace(
             " ", "\n\n"))
          for i in range(40)], "doc_id long, text string")
-    a = sorted(dedup_paragraphs(docs, id_col="doc_id",
-                                salt_buckets=1).collect())
-    b = sorted(dedup_paragraphs(docs, id_col="doc_id",
-                                salt_buckets=97).collect())
-    assert a == b
-
-
-def test_suggest_salt_buckets_skew_vs_uniform(spark):
-    from dataquality_spark.operators.dedup import suggest_salt_buckets
-    uniform = spark.range(20_000).selectExpr("id AS k")
-    assert suggest_salt_buckets(
-        uniform, "k", sample_fraction=0.1,
-        target_rows_per_task=1000) == 1
-    skewed = spark.range(20_000).selectExpr(
-        "CASE WHEN id % 10 < 9 THEN 0 ELSE id END AS k")  # 90% one key
-    got = suggest_salt_buckets(skewed, "k", sample_fraction=0.1,
-                               target_rows_per_task=1000)
-    assert got >= 16  # ~18k-row hot group / 1k target → >=16 buckets
-    # estimates only affect balance, never results (salt invariance holds)
+    a = sorted(dedup_paragraphs(docs, id_col="doc_id").collect())
+    for parts in (1, 2, 64, 257):
+        b = sorted(dedup_paragraphs(docs.repartition(parts),
+                                    id_col="doc_id").collect())
+        assert a == b, parts
 
 
 def test_incremental_new_docs(spark):

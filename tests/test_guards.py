@@ -106,26 +106,15 @@ def test_release_cached_scoped_to_invocation(spark):
     assert Q.release_cached(b) == 0
 
 
-def test_run_rule_dedup_routes_salt_buckets(spark, monkeypatch):
-    """api.run_rule must thread the validated salt_buckets override into
-    with_dedup_flag (it was silently dropped — advisor-flagged)."""
+def test_run_rule_dedup_has_no_parameters(spark):
+    """The dedup rule has no parameters: an override of the removed
+    salt-bucket knob is refused as unknown, not silently ignored, and the
+    rule runs without one."""
     import dataquality_spark.api as api
-    seen = {}
-    import dataquality_spark.operators.dedup as dd
-    real = dd.with_dedup_flag
-
-    def spy(df, *a, **kw):
-        seen.update(kw)
-        return real(df, *a, **kw)
-
-    monkeypatch.setattr(dd, "with_dedup_flag", spy)
     # pages-shaped input (the dedup rule keys winners on (warc_ts, url))
     from dataquality_spark.synth import generate_pages
     pages = generate_pages(spark, 200, seed=5, partitions=2)
-    score, _ = api.run_rule(spark, pages, "dedup",
-                            params={"salt_buckets": 7})
-    assert seen.get("salt_buckets") == 7
+    with pytest.raises(ValueError, match="unknown parameter 'salt_buckets'"):
+        api.run_rule(spark, pages, "dedup", params={"salt_buckets": 7})
+    score, _ = api.run_rule(spark, pages, "dedup")
     assert 0.0 <= score <= 1.0
-    # and invalid overrides are rejected, not ignored
-    with pytest.raises(ValueError):
-        api.run_rule(spark, pages, "dedup", params={"salt_buckets": 0})

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from dataquality_spark import spec
 from dataquality_spark.models import corpus, langid, ngram_lm
-from dataquality_spark.models.udf import score_batch, with_model_scores
+from dataquality_spark.models.udf import score_batch, with_model_scores_and_scrub
 
 
 def test_langid_accuracy_on_seed_corpus(artifacts):
@@ -44,7 +44,8 @@ def test_perplexity_separates_gibberish(artifacts):
 
 
 def test_model_udf_matches_local(spark, artifacts):
-    """Spark UDF output == driver-side score_batch (plumbing parity)."""
+    """Fused Spark UDF's model columns == driver-side score_batch
+    (plumbing parity)."""
     texts = (corpus.seed_corpus("en", 10) + corpus.seed_corpus("fr", 10)
              + [None, "", "zzz qqq xxx " * 40])
     pdf = pd.DataFrame({
@@ -53,7 +54,8 @@ def test_model_udf_matches_local(spark, artifacts):
         "lang": ["en"] * len(texts),
     })
     sdf = spark.createDataFrame(pdf)
-    out = with_model_scores(spark, sdf, artifacts["langid"], artifacts["lm"])
+    out = with_model_scores_and_scrub(spark, sdf, artifacts["langid"],
+                                      artifacts["lm"])
     got = out.select("url", "pred_lang", "lang_conf", "logprob",
                      "r_perplexity").toPandas().set_index("url").sort_index()
     ref = score_batch(pdf["text"], artifacts["langid"], artifacts["lm"])

@@ -9,7 +9,7 @@ Queries chosen for partitioning-sensitive machinery:
   * sequence_pack     — distributed prefix sum over a range partitioning
   * fuzzy_dedup_decisions — LSH bucketing + component fixpoint + windows
   * stratified_split  — deterministic hash bucketing
-  * dedup_winners     — salted two-phase aggregation
+  * dedup_winners     — one map-side-combined min + count aggregate
 """
 
 import pytest

@@ -71,23 +71,6 @@ def test_decisions_schema(spark, artifacts):
         f.unpersist()
 
 
-def test_pipeline_auto_salt(spark, artifacts):
-    """salt_buckets='auto' picks the factor from the frequency sketch and
-    produces the identical decisions frame (salt invariance end-to-end)."""
-    from dataquality_spark.pipeline import run_pipeline
-    from dataquality_spark.synth import generate_pages
-    pages = generate_pages(spark, 400, seed=31, partitions=4)
-    cleanup = []
-    fixed = sorted((r["url"], r["keep"]) for r in run_pipeline(
-        spark, pages, cleanup=cleanup).select("url", "keep").collect())
-    auto = sorted((r["url"], r["keep"]) for r in run_pipeline(
-        spark, pages, salt_buckets="auto", cleanup=cleanup)
-        .select("url", "keep").collect())
-    for f in cleanup:
-        f.unpersist()
-    assert fixed == auto
-
-
 def test_pipeline_classifier_stage_opt_in(spark):
     """with_classifier=True adds q_prob + the quality rule inside the SAME
     fused UDF (no second Python runner), gates keep on it, and surfaces it
@@ -96,16 +79,18 @@ def test_pipeline_classifier_stage_opt_in(spark):
     from dataquality_spark.synth import generate_pages
 
     pages = generate_pages(spark, 300, seed=11)
-    base = P.run_pipeline(spark, pages, persist=False)
+    cleanup = []
+    base = P.run_pipeline(spark, pages, cleanup=cleanup)
     assert "q_prob" not in base.columns and "r_quality" not in base.columns
 
-    ann = P.run_pipeline(spark, pages, persist=False, with_classifier=True)
+    ann = P.run_pipeline(spark, pages, cleanup=cleanup, with_classifier=True)
     assert "q_prob" in ann.columns and "r_quality" in ann.columns
 
     # the classifier must add ZERO extra Python runners (it rides the fused
     # UDF); compare Arrow node counts against the classifier-less plan
-    # (persist=False duplicates the scan across the dedup join's branches,
-    # so the absolute count is 2 on both sides)
+    # (both dedup join branches read the one persisted scored frame, which
+    # the plan prints under each branch with the same node id, so the
+    # distinct count is 1 on both sides)
     import io
     import re
     from contextlib import redirect_stdout
@@ -117,7 +102,7 @@ def test_pipeline_classifier_stage_opt_in(spark):
         return len(set(re.findall(r"\((\d+)\) ArrowEvalPython",
                                   buf.getvalue())))
 
-    assert arrow_count(ann) == arrow_count(base)
+    assert arrow_count(ann) == arrow_count(base) == 1
 
     rows = ann.select("keep", "pre_dedup_pass", "r_quality").collect()
     assert all((not r["pre_dedup_pass"]) or r["r_quality"] for r in rows)

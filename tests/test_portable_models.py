@@ -95,7 +95,8 @@ def test_portable_pipeline_fused_single_arrow_stage(spark):
     from dataquality_spark import pipeline as P
     from dataquality_spark.synth import generate_pages
     pages = generate_pages(spark, 400, seed=7)
-    ann = P.run_pipeline(spark, pages, persist=False, portable_models=True)
+    cleanup = []
+    ann = P.run_pipeline(spark, pages, cleanup=cleanup, portable_models=True)
 
     def arrow_count(frame):
         buf = io.StringIO()
@@ -104,7 +105,7 @@ def test_portable_pipeline_fused_single_arrow_stage(spark):
         return len(set(re.findall(r"\((\d+)\) ArrowEvalPython",
                                   buf.getvalue())))
 
-    base = P.run_pipeline(spark, pages, persist=False)
+    base = P.run_pipeline(spark, pages, cleanup=cleanup)
     assert arrow_count(ann) == arrow_count(base)
 
     m = P.pipeline_metrics(ann).collect()
@@ -125,5 +126,5 @@ def test_portable_pipeline_rejects_unsupported_combos(spark):
     from dataquality_spark.synth import generate_pages
     pages = generate_pages(spark, 10, seed=7)
     with pytest.raises(AssertionError):
-        P.run_pipeline(spark, pages, persist=False, portable_models=True,
+        P.run_pipeline(spark, pages, portable_models=True,
                        with_classifier=True)

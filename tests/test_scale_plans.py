@@ -1,7 +1,7 @@
 """Plan-shape assertions for the scale tier (VERDICT r2 #1): the heaviest
 queries must not force a broadcast of a scaled input table, and the known
 engineered plan features (hot-bucket cap blocklist broadcast, prefix-sum
-range partitioning, salted dedup) must actually be present in the plan.
+range partitioning) must actually be present in the plan.
 
 Runs at small size — these are STATIC plan properties, invariant to row
 count by construction (that is exactly what the audit checks: the pre-AQE

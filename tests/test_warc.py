@@ -98,9 +98,12 @@ def test_run_from_crawl_end_to_end(spark, tmp_path):
                  b"<html><body>#@%^ #@%^ #@%^</body></html>"))
     write_warc(recs, str(d / "part-0.warc.gz"))
 
-    ann = P.run_from_crawl(spark, str(d), persist=False)
+    cleanup = []
+    ann = P.run_from_crawl(spark, str(d), cleanup=cleanup)
     rows = {r["url"]: r for r in
             ann.select("url", "keep", "pred_lang", "r_lang_match").collect()}
+    for f in cleanup:
+        f.unpersist()
     assert len(rows) == 5
     # identical-content pages: exactly one survives exact dedup
     kept = [u for u, r in rows.items() if r["keep"] and "site" in u]

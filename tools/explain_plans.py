@@ -51,7 +51,7 @@ def main():
     sections = []
 
     pages = generate_pages(spark, 1000, seed=42)
-    ann = P.run_pipeline(spark, pages)  # persist=True, as in production
+    ann = P.run_pipeline(spark, pages)
     sections.append(("pipeline (pages → decisions)", formatted(ann)))
 
     for name in ["heuristic_gate", "iqr_outliers", "membership_semijoin",
