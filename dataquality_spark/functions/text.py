@@ -31,8 +31,9 @@ from dataquality_spark import spec
 # subtree (no interpreted subexpression elimination). The array formulation
 # of these stats measured 26s/600k docs at 8 cores and barely scaled; the
 # regexp_count formulations below are whole-stage-codegen'd, one pass over
-# the text each, and token-equivalent to the array definitions (a "word" is
-# a maximal \S+ run; the oracle asserts equivalence).
+# the text each, and token-equivalent to the per-word definitions of the
+# pandas oracle (oracle.py) and the DuckDB SQL (a "word" is a maximal \S+
+# run; the tests assert equivalence).
 # ---------------------------------------------------------------------------
 
 def word_count_rx(text: Column) -> Column:
@@ -136,22 +137,6 @@ def words_col(text: Column) -> Column:
     )
 
 
-def word_count(words: Column) -> Column:
-    return F.size(words).cast("long")
-
-
-def mean_word_len(words: Column) -> Column:
-    """Mean character length of words; null when there are no words."""
-    total = F.aggregate(words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w))
-    return F.when(F.size(words) > 0, total / F.size(words)).otherwise(F.lit(None))
-
-
-def alpha_ratio(words: Column) -> Column:
-    """Fraction of words containing at least one Unicode letter."""
-    n_alpha = F.size(F.filter(words, lambda w: w.rlike(spec.ALPHA_WORD_RE)))
-    return F.when(F.size(words) > 0, n_alpha / F.size(words)).otherwise(F.lit(None))
-
-
 # derive the translate charset from the canonical spec so they cannot
 # drift; the spec is a single plain character class by construction
 _SYMBOL_CHARS = spec.SYMBOL_RE[1:-1]
@@ -172,42 +157,6 @@ def symbol_count(text: Column) -> Column:
         F.length(text) - F.length(F.translate(text, _SYMBOL_CHARS, "")),
         F.lit(0)
     ).cast("long")
-
-
-def symbol_word_ratio(text: Column, words: Column) -> Column:
-    return F.when(
-        F.size(words) > 0, symbol_count(text) / F.size(words)
-    ).otherwise(F.lit(None))
-
-
-def stopword_count(words: Column, lang: Column) -> Column:
-    """Count of lowercase words in the language's stop list (fallback: en).
-
-    CASE WHEN over 13 constant arrays — only the matching branch evaluates,
-    and each branch's array literal is a codegen constant. (A single
-    ``create_map`` literal looked cleaner but rebuilt the 350-entry map per
-    row — 10× slower, measured.)
-    """
-    def count_in(stop_list: list[str]) -> Column:
-        arr = F.array(*[F.lit(w) for w in stop_list])
-        return F.size(
-            F.filter(words, lambda w: F.array_contains(arr, F.lower(w)))
-        ).cast("long")
-
-    expr = None
-    for lg in spec.LANGS:
-        if lg == "en":
-            continue
-        branch = count_in(spec.STOPWORDS[lg])
-        expr = F.when(lang == lg, branch) if expr is None else expr.when(
-            lang == lg, branch)
-    return expr.otherwise(count_in(spec.STOPWORDS["en"]))
-
-
-def stopword_ratio(words: Column, lang: Column) -> Column:
-    return F.when(
-        F.size(words) > 0, stopword_count(words, lang) / F.size(words)
-    ).otherwise(F.lit(None))
 
 
 def lines_col(text: Column) -> Column:

@@ -120,15 +120,15 @@ def _directed(pairs: DataFrame) -> DataFrame:
         F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "sim"))
 
 
-def c1_best_match(df: DataFrame, id_col: str = "url", text_col: str = "text",
-                  threshold: float = 0.91,
-                  candidates: DataFrame | None = None,
+def c1_best_match(df: DataFrame, candidates: DataFrame, id_col: str = "url",
+                  text_col: str = "text", threshold: float = 0.91,
                   rescue_score: str = "difflib") -> DataFrame:
     """Best consistent match per row with the numeric-token rescue.
 
     ``candidates``: (id_a, id_b, sim) with id_a < id_b — typically
-    ``near_dup_pairs(...)`` output (LSH, the scale path). When None, they are
-    built here via LSH at the same threshold. ``rescue_score``: ``difflib``
+    ``near_dup_pairs(...)`` output renamed ``jaccard`` → ``sim`` (LSH, the
+    scale path; the caller owns its persisted signature frame through
+    ``near_dup_pairs``' ``cleanup`` list). ``rescue_score``: ``difflib``
     (reference-exact SequenceMatcher ratio, Arrow UDF) or ``lev`` (native
     Levenshtein ratio — whole-stage-codegen'd and SQL-mirrorable; the oracle
     query uses this mode).
@@ -139,11 +139,6 @@ def c1_best_match(df: DataFrame, id_col: str = "url", text_col: str = "text",
     """
     norm = df.select(F.col(id_col).alias("_id"),
                      normalize_keep_numbers(F.col(text_col)).alias("_norm"))
-    if candidates is None:
-        from dataquality_spark.operators.dedup import near_dup_pairs
-        candidates = near_dup_pairs(
-            df, id_col=id_col, text_col=text_col,
-            jaccard_threshold=threshold).withColumnRenamed("jaccard", "sim")
     cand = _directed(candidates.select("id_a", "id_b", "sim"))
     p = (cand
          .join(norm.select(F.col("_id").alias("id_a"),

@@ -176,8 +176,7 @@ def fuzzy_dedup(df: DataFrame, id_col: str = "doc_id",
                 text_col: str = "text",
                 jaccard_threshold: float | None = None,
                 max_bucket_size: int | None = 200,
-                order_by: list[Column] | None = None,
-                signature_spec: str = "crc32") -> DataFrame:
+                order_by: list[Column] | None = None) -> DataFrame:
     """The complete fuzzy-dedup scale path, composed: MinHash-banded LSH
     candidate pairs (hot-bucket capped) → large-star/small-star connected
     components → one canonical winner per cluster. Input df + an
@@ -202,8 +201,7 @@ def fuzzy_dedup(df: DataFrame, id_col: str = "doc_id",
     pairs = near_dup_pairs(df, id_col=id_col, text_col=text_col,
                            jaccard_threshold=jaccard_threshold,
                            max_bucket_size=max_bucket_size,
-                           cleanup=cleanup,
-                           signature_spec=signature_spec)
+                           cleanup=cleanup)
     if not numeric:
         pairs = pairs.select(F.xxhash64("id_a").alias("id_a"),
                              F.xxhash64("id_b").alias("id_b"))

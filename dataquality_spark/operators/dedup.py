@@ -61,38 +61,14 @@ def _perm_params(k: int = MINHASH_PERMS) -> list[tuple[int, int]]:
 
 import re as _re
 
-_NORM_KEEP = _re.compile(r"[^a-z0-9\s]+")
-_WS = _re.compile(r"\s+")
-
-
-def shingles_py(text: str | None, n: int = 3) -> list[str]:
-    """Distinct word n-gram shingles of normalized text, order-preserving.
-
-    THE canonical shingling spec for MinHash and SimHash: lower → keep
-    alnum+space → collapse whitespace. Deliberately does NOT strip short
-    digit runs — unlike ``TX.normalize_text`` (the exact-dedup key chain,
-    which applies the reference's X-2 ``remove_short_numbers``): near-dup
-    candidates must still distinguish "chapter 12" from "chapter 13";
-    the C1 rescue handles the number semantics downstream."""
-    if text is None:
-        return []
-    t = _WS.sub(" ", _NORM_KEEP.sub("", text.lower())).strip()
-    if not t:
-        return []
-    ws = t.split(" ")
-    if len(ws) < n:
-        return [t]
-    seen = dict.fromkeys(" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1))
-    return list(seen)
-
-
 _PORT_KEEP = _re.compile(r"[^A-Za-z0-9 \t\n\r\f\v]+")
 _PORT_WS = _re.compile(r"[ \t\n\r\f\v]+")
 
 
 def shingles_portable(text: str | None, n: int = 3) -> list[str]:
-    """ENGINE-PORTABLE shingle spec (the `simhash64_py` pattern, extended
-    to SQL): same shape as ``shingles_py`` but with every step expressible
+    """Distinct word n-gram shingles of normalized text, order-preserving:
+    THE shingling spec for MinHash and SimHash. Keep ASCII alnum + space →
+    collapse whitespace → lowercase, with every step expressible
     identically in Python re AND DuckDB RE2 —
 
       * non-ASCII is stripped BEFORE lowercasing, so ``lower()`` only ever
@@ -100,9 +76,13 @@ def shingles_portable(text: str | None, n: int = 3) -> list[str]:
       * whitespace is the explicit ASCII class ``[ \\t\\n\\r\\f\\v]`` (a
         bare ``\\s`` is unicode-aware in Python but ASCII-only in RE2).
 
-    Paired with ``poly_hash31`` this makes a MinHash-LSH candidate set
-    reproducible in pure SQL — the exact-oracle path for the composed
-    fuzzy-dedup query. The crc32 spec stays the default elsewhere."""
+    Deliberately does NOT strip short digit runs — unlike
+    ``TX.normalize_text`` (the exact-dedup key chain, which applies the
+    reference's X-2 ``remove_short_numbers``): near-dup candidates must
+    still distinguish "chapter 12" from "chapter 13"; the C1 rescue
+    handles the number semantics downstream. Paired with ``poly_hash31``
+    this makes every MinHash-LSH and SimHash candidate set reproducible in
+    pure SQL."""
     if text is None:
         return []
     t = _PORT_WS.sub(" ", _PORT_KEEP.sub("", text)).strip().lower()
@@ -157,9 +137,9 @@ def poly_hash_flat(flat: list[bytes]) -> np.ndarray:
     every string in the batch to its length: padded memory stays
     ≤ 2× total string bytes. Common crawls fit one band and run at
     the single-matrix speed (the per-row version measured 0.54s/5k
-    docs vs crc32's 0.04s; this form runs at crc32 speed). Shared by
-    the portable MinHash signature spec and the portable quality-
-    classifier feature spec (models/quality.py)."""
+    docs; this form ~0.04s, the speed of a C-level per-shingle hash).
+    Shared by the MinHash and SimHash signatures and the portable
+    quality-classifier feature spec (models/quality.py)."""
     P = np.int64(_MERSENNE)
     lens = np.fromiter((len(b) for b in flat), dtype=np.int64,
                        count=len(flat))
@@ -185,13 +165,16 @@ def poly_hash_flat(flat: list[bytes]) -> np.ndarray:
 
 
 def shingle_bands_udf(shingle_n: int = 3, bands: int = LSH_BANDS,
-                      rows: int = LSH_ROWS,
-                      signature_spec: str = "crc32",
-                      emit_sig: bool = False):
+                      rows: int = LSH_ROWS, emit_sig: bool = False):
     """pandas UDF: text → struct(sh array<string>, bands array<bigint>).
     With ``emit_sig`` the struct gains ``sig: array<long>`` (the raw
     64-permutation MinHash signature) for estimator diagnostics — the
     default schema stays unchanged so existing plans are untouched.
+
+    The signature is SQL-replayable: ``shingles_portable`` shingles, each
+    hashed by ``poly_hash31`` (batch-vectorized ``poly_hash_flat``), then
+    the 64 seeded permutations and the band fold — DuckDB recomputes every
+    band key bit-for-bit.
 
     Shingling AND minhash both live here. Why not JVM expressions: Spark
     HOFs evaluate interpreted (no codegen) and projection collapse re-inlines
@@ -201,19 +184,11 @@ def shingle_bands_udf(shingle_n: int = 3, bands: int = LSH_BANDS,
     one vectorized numpy outer product per row, Arrow-batched — the standard
     Spark minhash shape at web scale.
     """
-    from zlib import crc32
-
     params = _perm_params()
     A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     B = np.array([b for _, b in params], dtype=np.int64)[:, None]
     K = np.int64(1_000_003)
     P = np.int64(_MERSENNE)
-
-    if signature_spec not in ("crc32", "portable"):
-        raise ValueError(f"unknown signature_spec {signature_spec!r}")
-    portable = signature_spec == "portable"
-
-    _poly_hash_flat = poly_hash_flat
 
     schema = "struct<sh: array<string>, bands: array<long>>"
     if emit_sig:
@@ -222,14 +197,11 @@ def shingle_bands_udf(shingle_n: int = 3, bands: int = LSH_BANDS,
     @F.pandas_udf(schema)
     def sig_bands(text_s: pd.Series) -> pd.DataFrame:
         shs, keys_out, sigs_out = [], [], []
-        if portable:
-            all_sh = [shingles_portable(t, shingle_n) for t in text_s]
-            flat = [s.encode("ascii") for sh in all_sh
-                    for s in sh]  # spec is ASCII-only
-            hv_all = _poly_hash_flat(flat) if flat else np.empty(
-                0, dtype=np.int64)
-        else:
-            all_sh = [shingles_py(t, shingle_n) for t in text_s]
+        all_sh = [shingles_portable(t, shingle_n) for t in text_s]
+        flat = [s.encode("ascii") for sh in all_sh
+                for s in sh]  # spec is ASCII-only
+        hv_all = poly_hash_flat(flat) if flat else np.empty(
+            0, dtype=np.int64)
         off = 0
         for sh in all_sh:
             if not sh:
@@ -237,12 +209,8 @@ def shingle_bands_udf(shingle_n: int = 3, bands: int = LSH_BANDS,
                 keys_out.append(None)
                 sigs_out.append(None)
                 continue
-            if portable:
-                h = hv_all[off:off + len(sh)][None, :]
-                off += len(sh)
-            else:
-                h = np.array([crc32(s.encode("utf-8")) for s in sh],
-                             dtype=np.int64)[None, :] % P
+            h = hv_all[off:off + len(sh)][None, :]
+            off += len(sh)
             sig = ((A * h + B) % P).min(axis=1)  # [MINHASH_PERMS]
             bsig = sig.reshape(bands, rows)
             keys = np.arange(1, bands + 1, dtype=np.int64)
@@ -338,7 +306,7 @@ def _lsh_candidate_pairs(base: DataFrame, max_bucket_size: int | None,
 
 def _minhash_pairs(df: DataFrame, id_col: str, text_col: str,
                    shingle_n: int, banding: tuple[int, int],
-                   signature_spec: str, emit_sig: bool,
+                   emit_sig: bool,
                    max_bucket_size: int | None,
                    skew_metrics: dict | None,
                    cleanup: list[DataFrame] | None) -> DataFrame:
@@ -355,7 +323,7 @@ def _minhash_pairs(df: DataFrame, id_col: str, text_col: str,
     from pyspark import StorageLevel
 
     udf = shingle_bands_udf(shingle_n, bands=banding[0], rows=banding[1],
-                            signature_spec=signature_spec, emit_sig=emit_sig)
+                            emit_sig=emit_sig)
     cols = ["_sh", "_sig"] if emit_sig else ["_sh"]
     base = df.select(
         F.col(id_col).alias("_id"), udf(F.col(text_col)).alias("_sb")
@@ -380,7 +348,6 @@ def minhash_pair_diagnostics(df: DataFrame, id_col: str = "url",
                              text_col: str = "text", shingle_n: int = 3,
                              banding: tuple[int, int] = (32, 2),
                              max_bucket_size: int | None = 200,
-                             signature_spec: str = "portable",
                              cleanup: list[DataFrame] | None = None
                              ) -> DataFrame:
     """Estimator-quality diagnostics for the banded MinHash-LSH path: for
@@ -395,7 +362,7 @@ def minhash_pair_diagnostics(df: DataFrame, id_col: str = "url",
     shuffle. Returns (id_a, id_b, est_jaccard, exact_jaccard, abs_err).
     """
     pairs = _minhash_pairs(df, id_col, text_col, shingle_n, banding,
-                           signature_spec, emit_sig=True,
+                           emit_sig=True,
                            max_bucket_size=max_bucket_size,
                            skew_metrics=None, cleanup=cleanup)
     n_perms = banding[0] * banding[1]
@@ -421,8 +388,7 @@ def near_dup_pairs(df: DataFrame, id_col: str = "url", text_col: str = "text",
                    skew_metrics: dict | None = None,
                    cleanup: list[DataFrame] | None = None,
                    measure: str = "jaccard",
-                   banding: tuple[int, int] | str = "auto",
-                   signature_spec: str = "crc32") -> DataFrame:
+                   banding: tuple[int, int] | str = "auto") -> DataFrame:
     """Candidate near-duplicate pairs via MinHash-banded LSH, verified with
     exact shingle Jaccard. Returns (id_a, id_b, jaccard), id_a < id_b.
 
@@ -444,7 +410,7 @@ def near_dup_pairs(df: DataFrame, id_col: str = "url", text_col: str = "text",
     if banding == "auto":
         banding = choose_banding(jaccard_threshold)
     pairs = _minhash_pairs(df, id_col, text_col, shingle_n, banding,
-                           signature_spec, emit_sig=False,
+                           emit_sig=False,
                            max_bucket_size=max_bucket_size,
                            skew_metrics=skew_metrics, cleanup=cleanup)
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
@@ -469,36 +435,13 @@ def near_dup_pairs(df: DataFrame, id_col: str = "url", text_col: str = "text",
     )
 
 
-def simhash64_py(sh: list[str]) -> int:
-    """Scalar SimHash (Charikar 2002) over shingles — the testable spec:
-    for each bit j, sum ±1 over the shingles' 64-bit hashes' bit j; bit j of
-    the result is 1 iff the sum is positive. Hash = mix64(crc32(shingle)) —
-    deterministic, 64-bit-diffused. Returns a SIGNED 64-bit int (Spark
-    ``long`` wrap-around)."""
-    from zlib import crc32
-
-    from dataquality_spark.models.corpus import mix64
-
-    if not sh:
-        return 0
-    votes = [0] * 64
-    for s in sh:
-        h = int(mix64(crc32(s.encode("utf-8"))))
-        for j in range(64):
-            votes[j] += 1 if (h >> j) & 1 else -1
-    v = 0
-    for j in range(64):
-        if votes[j] > 0:
-            v |= 1 << j
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
 def simhash64_portable_py(sh: list[str]) -> int:
-    """ENGINE-PORTABLE scalar SimHash spec (the `simhash64_py` shape under
-    the portable hash chain): shingles come from ``shingles_portable``,
-    each hashes through ``poly_hash31``, and bit j's ±1 vote is the PARITY
-    of the j-th universal permutation g_j(h) = (a_j·h + b_j) mod M — the
-    SAME ``_perm_params(64)`` table the portable MinHash signature uses,
+    """Scalar SimHash spec (Charikar 2002): bit j of the result is 1 iff
+    the sum of the shingles' ±1 votes on bit j is positive. Shingles come
+    from ``shingles_portable``, each hashes through ``poly_hash31``, and
+    bit j's vote is the PARITY of the j-th universal permutation
+    g_j(h) = (a_j·h + b_j) mod M — the SAME ``_perm_params(64)`` table the
+    MinHash signature uses,
     so DuckDB recomputes the full 64-bit signature bit-for-bit (parity of
     a residue mod the odd Mersenne prime is an unbiased coin). Returns a
     SIGNED 64-bit int (Spark ``long`` wrap-around)."""
@@ -516,65 +459,38 @@ def simhash64_portable_py(sh: list[str]) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def simhash_udf(shingle_n: int = 2, signature_spec: str = "crc32"):
-    """pandas UDF: text → 64-bit SimHash (long).
+def simhash_udf(shingle_n: int = 2):
+    """pandas UDF: text → 64-bit SimHash (long), byte-equal to the scalar
+    ``simhash64_portable_py`` spec (pytest oracle) and recomputed by the
+    DuckDB oracles bit-for-bit.
 
     Replaces the round-1 JVM formulation (nested ``aggregate`` over 64 bit
     masks × shingle hashes — interpreted CodegenFallback, O(64·|shingles|)
     re-evaluated per row; measured >300s for 5k docs). Here: one C-regex
-    shingling pass + one numpy bit-matrix reduction per row, Arrow-batched —
-    the same shape as the minhash UDF and sharing its ``shingles_py``
-    tokenizer. Byte-equal to ``simhash64_py`` (pytest oracle).
-
-    ``signature_spec="portable"`` switches to the SQL-reproducible spec
-    (``simhash64_portable_py``): portable shingles, batch-vectorized
-    ``poly_hash_flat``, and the 64 permutation parities as one numpy
-    matrix op — the exact-oracle path, same speed class as crc32.
+    shingling pass (``shingles_portable``, shared with the MinHash UDF),
+    batch-vectorized ``poly_hash_flat``, and the 64 permutation parities
+    as one numpy matrix op per row, Arrow-batched.
     """
-    from zlib import crc32
-
-    from dataquality_spark.models.corpus import mix64
-
-    if signature_spec not in ("crc32", "portable"):
-        raise ValueError(f"unknown signature_spec {signature_spec!r}")
-    portable = signature_spec == "portable"
-    bit_idx = np.arange(64, dtype=np.uint64)
-    if portable:
-        params = _perm_params()
-        A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    _poly_hash_flat = poly_hash_flat
+    params = _perm_params()
+    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
 
     @F.pandas_udf("long")
     def sim(text_s: pd.Series) -> pd.Series:
         out = np.zeros(len(text_s), dtype=np.int64)
-        if portable:
-            all_sh = [shingles_portable(t, shingle_n) for t in text_s]
-            flat = [s.encode("ascii") for sh in all_sh for s in sh]
-            hv_all = _poly_hash_flat(flat) if flat else np.empty(
-                0, dtype=np.int64)
-            off = 0
-            for i, sh in enumerate(all_sh):
-                if not sh:
-                    continue
-                h = hv_all[off:off + len(sh)][None, :]
-                off += len(sh)
-                # a,h < 2^31 ⇒ a*h + b < 2^62: no int64 overflow
-                bits = ((A * h + B) % _MERSENNE) & 1  # [64, n_sh]
-                votes = 2 * bits.sum(axis=1) - len(sh)
-                v = np.uint64(0)
-                for j in np.nonzero(votes > 0)[0]:
-                    v |= np.uint64(1) << np.uint64(j)
-                out[i] = v.astype(np.int64)
-            return pd.Series(out)
-        for i, t in enumerate(text_s):
-            sh = shingles_py(t, shingle_n)
+        all_sh = [shingles_portable(t, shingle_n) for t in text_s]
+        flat = [s.encode("ascii") for sh in all_sh for s in sh]
+        hv_all = poly_hash_flat(flat) if flat else np.empty(
+            0, dtype=np.int64)
+        off = 0
+        for i, sh in enumerate(all_sh):
             if not sh:
                 continue
-            h = np.array([mix64(crc32(s.encode("utf-8"))) for s in sh],
-                         dtype=np.uint64)
-            bits = ((h[:, None] >> bit_idx) & 1).astype(np.int64)
-            votes = 2 * bits.sum(axis=0) - len(sh)
+            h = hv_all[off:off + len(sh)][None, :]
+            off += len(sh)
+            # a,h < 2^31 ⇒ a*h + b < 2^62: no int64 overflow
+            bits = ((A * h + B) % _MERSENNE) & 1  # [64, n_sh]
+            votes = 2 * bits.sum(axis=1) - len(sh)
             v = np.uint64(0)
             for j in np.nonzero(votes > 0)[0]:
                 v |= np.uint64(1) << np.uint64(j)
@@ -717,7 +633,6 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "url",
                            text_col: str = "text", max_hamming: int = 3,
                            shingle_n: int = 2,
                            max_bucket_size: int | None = 200,
-                           signature_spec: str = "crc32",
                            cleanup: list[DataFrame] | None = None) -> DataFrame:
     """SimHash near-dup pairs, the Manku/Jain/Das Sarma WWW'07 web-dedup
     design (public): split each 64-bit SimHash into 4 contiguous 16-bit
@@ -740,7 +655,7 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "url",
     # the signature frame feeds both self-join sides — persist it so the
     # UDF runs once, not once per side (measured 7.5s → signature-once)
     base = df.select(F.col(id_col).alias("_id"),
-                     simhash_udf(shingle_n, signature_spec)(
+                     simhash_udf(shingle_n)(
                          F.col(text_col)).alias("_sh")) \
              .persist(StorageLevel.MEMORY_AND_DISK)
     if cleanup is not None:

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, both designed for a corpus that does NOT fit on one node:
+Every operator is designed for a corpus that does NOT fit on one node:
 
 * ``cosine_topk`` — exact brute force, but distributed properly: the query
   set is small and broadcast; each corpus partition computes a vectorized
@@ -8,11 +8,13 @@ Two paths, both designed for a corpus that does NOT fit on one node:
   (`mapInPandas`), so the shuffle carries at most partitions × k × n_queries
   rows; a final window takes the global top-k. No cross join materializes.
 
-* ``cosine_topk_lsh`` — random-hyperplane LSH (Charikar 2002, public): sign
-  bits against a deterministic seeded plane matrix → bucket key; candidates
-  are corpus rows whose bucket matches any query bucket (multi-probe over
-  1-bit flips); exact re-rank within candidates. Sub-linear candidate sets
-  at scale, recall controlled by n_planes/probes.
+* ``ivf_topk`` — approximate top-k via inverted-file routing: queries probe
+  their nearest centroid cells and exact-rerank only those candidates.
+
+* ``embedding_near_dup_pairs`` — all-pairs near-duplicates via banded
+  random-hyperplane LSH (Charikar 2002) over deterministic ±1 planes and
+  fixed-point integer dots, so DuckDB recomputes every band key; exact
+  cosine verify. ``semantic_dedup`` is the within-cell SemDeDup decision.
 
 Reference parity: this is the engine's generalization of the reference's
 similarity machinery (TF-IDF cosine C1/C2 `utils/column_operations.py:72-87`)
@@ -36,8 +38,8 @@ from dataquality_spark.operators.dedup import _lsh_candidate_pairs
 _TOPK_SCHEMA = "query_id long, neighbor_id long, cos_sim double, rn int"
 
 # ENFORCED bound on the query side of every ANN entry point (cosine_topk /
-# cosine_topk_lsh / ivf_topk): each collects or broadcasts the query set,
-# which is O(n_queries) DRIVER memory — fine for the intended "probe a
+# ivf_topk): each collects and broadcasts the query set, which is
+# O(n_queries) DRIVER memory — fine for the intended "probe a
 # handful of queries against a 100 TB corpus" shape, an OOM if a caller
 # passes a corpus-sized frame as `queries`. The docstring contract used to
 # be the only guard (judge-flagged, round 3); now it raises loudly with the
@@ -91,9 +93,9 @@ def cosine_topk(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
 
     ``exclude_self=True`` drops neighbor_id == query_id rows before ranking
     — use it when queries are drawn from the corpus and you are comparing
-    against the ANN paths (`cosine_topk_lsh`/`ivf_topk` always exclude
-    self-matches); the default keeps the historical include-self contract
-    the exact oracle checks."""
+    against the ANN path (`ivf_topk` always excludes self-matches); the
+    default keeps the historical include-self contract the exact oracle
+    checks."""
     qid_col = qid_col or id_col
     qids, Q = _collect_queries(queries, qid_col, vec_col)
     if len(qids) == 0:
@@ -131,38 +133,10 @@ def cosine_topk(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
                     F.round("cos_sim", 6).alias("cos_sim"), "rn"))
 
 
-def _planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    """Deterministic pseudo-Gaussian hyperplanes from the splitmix PRNG."""
-    n = dim * n_planes
-    u1 = (mix64(np.arange(n, dtype=np.uint64) + np.uint64(seed)) >> np.uint64(11)
-          ).astype(np.float64) / float(1 << 53)
-    u2 = (mix64(np.arange(n, 2 * n, dtype=np.uint64) + np.uint64(seed))
-          >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-    g = np.sqrt(-2 * np.log(np.maximum(u1, 1e-300))) * np.cos(2 * np.pi * u2)
-    return g.reshape(n_planes, dim)
-
-
-def _bucket_udf(spark: SparkSession, dim: int, n_planes: int, seed: int = 42):
-    P = _planes(dim, n_planes, seed)
-    b_p = spark.sparkContext.broadcast(P)
-
-    @F.pandas_udf("long")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        P_ = b_p.value
-        V = np.array(vecs.tolist(), dtype=np.float64)
-        bits = (V @ P_.T) > 0  # [B, n_planes]
-        keys = np.zeros(len(V), dtype=np.int64)
-        for j in range(P_.shape[0]):
-            keys |= bits[:, j].astype(np.int64) << j
-        return pd.Series(keys)
-
-    return bucket
-
-
 def _cos_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """Row-wise cosine of two [n, dim] float64 matrices in BLAS/numpy
-    reduction order, norm product clamped at 1e-12 (the gauss-spec and
-    ANN re-rank kernel)."""
+    reduction order, norm product clamped at 1e-12 (the ANN re-rank
+    kernel)."""
     num = (A * B).sum(axis=1)
     den = np.maximum(np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1),
                      1e-12)
@@ -244,27 +218,13 @@ def _pack_band_keys(bits: np.ndarray, bands: int,
             | (np.arange(bands, dtype=np.int64) << band_bits))
 
 
-def _band_bucket_udf(spark: SparkSession, dim: int, bands: int,
-                     band_bits: int, seed: int = 7):
-    """vec → array of ``bands`` bucket keys from the sign bits against the
-    seeded Gaussian planes (``_pack_band_keys`` packing)."""
-    b_p = spark.sparkContext.broadcast(_planes(dim, bands * band_bits, seed))
-
-    @F.pandas_udf("array<long>")
-    def buckets(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64)
-        bits = (V @ b_p.value.T) > 0         # [B, bands*band_bits]
-        return pd.Series(_pack_band_keys(bits, bands, band_bits).tolist())
-
-    return buckets
-
-
-def _band_bucket_udf_portable(spark: SparkSession, dim: int, bands: int,
-                              band_bits: int):
-    """SQL-reproducible sibling of ``_band_bucket_udf``: the planes are the
-    deterministic ±1 matrix of ``mixed_planes`` and each sign bit is an
-    exact INTEGER dot of the fixed-point-quantized vector — so DuckDB
-    recomputes every band key bit-for-bit. Same key packing."""
+def _band_keys_udf(spark: SparkSession, dim: int, bands: int,
+                   band_bits: int):
+    """vec → array of ``bands`` bucket keys (``_pack_band_keys`` packing)
+    from SQL-reproducible sign bits: the planes are the deterministic ±1
+    matrix of ``mixed_planes`` and each sign bit is an exact INTEGER dot
+    of the fixed-point-quantized vector — so DuckDB recomputes every band
+    key bit-for-bit."""
     b_r = spark.sparkContext.broadcast(mixed_planes(dim, bands * band_bits))
 
     @F.pandas_udf("array<long>")
@@ -297,18 +257,19 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
                              band_bits: int | str = 6,
                              id_col: str = "vec_id",
                              vec_col: str = "embedding",
-                             dim: int | None = None, seed: int = 7,
+                             dim: int | None = None,
                              max_bucket_size: int = 200,
-                             plane_spec: str = "gauss",
                              target_bucket_rows: int = 50,
                              cleanup: list[DataFrame] | None = None
                              ) -> DataFrame:
     """ALL-PAIRS embedding near-duplicates — the dense-vector analogue of
     MinHash LSH dedup: banded hyperplane signatures (Charikar 2002; per-bit
-    collision prob 1-θ/π) → self-join on band buckets → exact cosine verify
-    ≥ threshold. Returns (id_a, id_b, cos_sim), id_a < id_b. Never a cross
-    join; candidates come from the text LSH path's generator
-    (``dedup._lsh_candidate_pairs``), hot-bucket cap included.
+    collision prob 1-θ/π) → self-join on band buckets → exact cosine verify,
+    kept iff round(cos, 4) ≥ threshold. Returns (id_a, id_b, cos_sim),
+    id_a < id_b. Never a cross join; candidates come from the text LSH
+    path's generator (``dedup._lsh_candidate_pairs``), hot-bucket cap
+    included. Every step is SQL-replayable (``_band_keys_udf`` sign bits,
+    ``_seq_cos_rows`` fold), so DuckDB recomputes the pair set exactly.
 
     Default 8 bands × 6 bits: candidate-recall ≈0.98 at cos 0.9, ≈0.5 at
     cos 0.5 (the S-curve knee sits near the threshold by construction).
@@ -341,19 +302,14 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
             return spark.createDataFrame(
                 [], "id_a long, id_b long, cos_sim double")
         dim = len(head[0][0])
-    if plane_spec not in ("gauss", "portable"):
-        raise ValueError(f"unknown plane_spec {plane_spec!r}")
     df = _vec_guard(df, vec_col, dim)
     if band_bits == "auto":
         band_bits = auto_band_bits(df.count(), target_bucket_rows)
-    if plane_spec == "portable":
-        # the fixed-point quantization is undefined on a NULL element
-        # (np.floor(NaN)→int64 is UB) while SQL SUM skips the NULL term —
-        # drop such rows on both engines, exactly like semantic_dedup
-        df = df.where(~F.exists(F.col(vec_col), lambda x: x.isNull()))
-        buckets = _band_bucket_udf_portable(spark, dim, bands, band_bits)
-    else:
-        buckets = _band_bucket_udf(spark, dim, bands, band_bits, seed)
+    # the fixed-point quantization is undefined on a NULL element
+    # (np.floor(NaN)→int64 is UB) while SQL SUM skips the NULL term —
+    # drop such rows on both engines, exactly like semantic_dedup
+    df = df.where(~F.exists(F.col(vec_col), lambda x: x.isNull()))
+    buckets = _band_keys_udf(spark, dim, bands, band_bits)
     base = (df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
             .withColumn("_bkeys", buckets(F.col("_v")))
             .persist(StorageLevel.MEMORY_AND_DISK))
@@ -361,15 +317,10 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
         cleanup.append(base)
     cand = _lsh_candidate_pairs(
         base.select("_id", F.col("_bkeys").alias("_bands")), max_bucket_size)
-    # portable: the SAME sequential fold DuckDB computes, decided on
-    # round(·, 4) ≥ threshold (F.round ≡ DuckDB round is the fuzz-validated
-    # bridge; np.round's half-even is not); gauss: numpy order, plain ≥
-    if plane_spec == "portable":
-        kernel = _seq_cos_rows
-        keep = F.round(F.col("_cos"), 4) >= F.lit(float(threshold))
-    else:
-        kernel = _cos_rows
-        keep = F.col("_cos") >= F.lit(float(threshold))
+    # the SAME sequential fold DuckDB computes, decided on round(·, 4) ≥
+    # threshold (F.round ≡ DuckDB round is the fuzz-validated bridge;
+    # np.round's half-even is not)
+    keep = F.round(F.col("_cos"), 4) >= F.lit(float(threshold))
 
     # Verify-stage vector delivery (guide §8: decide with small rows, move
     # heavy bytes once). The join form attaches BOTH 64-dim vectors to
@@ -402,8 +353,9 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
             if len(ida) == 0:
                 return pd.Series(np.zeros(0))
             ids_, M_ = lut.value
-            return pd.Series(kernel(_gather_rows(ids_, M_, ida.to_numpy()),
-                                    _gather_rows(ids_, M_, idb.to_numpy())))
+            return pd.Series(_seq_cos_rows(
+                _gather_rows(ids_, M_, ida.to_numpy()),
+                _gather_rows(ids_, M_, idb.to_numpy())))
 
         # with the cheap lookup verify, pair dedup moves AFTER the
         # threshold filter: the cosine is a pure function of the id pair,
@@ -422,81 +374,14 @@ def embedding_near_dup_pairs(spark: SparkSession, df: DataFrame,
         pairs = pairs.join(base.select(F.col("_id").alias(f"id_{s}"),
                                        F.col("_v").alias(f"_v{s}")),
                            f"id_{s}")
-    return (pairs.withColumn("_cos", _vec_cos_udf(kernel)(F.col("_va"),
-                                                          F.col("_vb")))
+    return (pairs.withColumn("_cos", _vec_cos_udf(_seq_cos_rows)(
+                F.col("_va"), F.col("_vb")))
             .where(keep)
             .select("id_a", "id_b", F.round("_cos", 6).alias("cos_sim")))
 
 
-def cosine_topk_lsh(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
-                    k: int = 10, n_planes: int = 8, probes: int = 1,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    dim: int | None = None, seed: int = 42) -> DataFrame:
-    """Approximate top-k via hyperplane-LSH buckets + exact re-rank.
-
-    ``probes`` is the multi-probe Hamming RADIUS: all buckets within that
-    many bit flips of each query's bucket are probed (probes=1 → n_planes
-    extra buckets, probes=2 adds the C(n_planes,2) two-bit flips, …),
-    trading candidates for recall.
-    """
-    if dim is None:
-        head = (queries.where(F.col(vec_col).isNotNull())
-                .select(vec_col).head(1))
-        if not head:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        dim = len(head[0][0])
-    corpus = _vec_guard(corpus, vec_col, dim)
-    queries = _vec_guard(queries, vec_col, dim)
-    # same enforced bound as _collect_queries: the probe table below is
-    # broadcast (hint-forced — it does NOT self-reverse as data grows), so
-    # a corpus-sized query frame would OOM every executor. Pruned one-column
-    # scan, stops at bound+1 rows.
-    n_q = queries.select(id_col).limit(ANN_MAX_QUERIES + 1).count()
-    if n_q > ANN_MAX_QUERIES:
-        raise ValueError(
-            f"ANN query set exceeds ANN_MAX_QUERIES={ANN_MAX_QUERIES}: "
-            f"cosine_topk_lsh broadcasts the query-probe table. For "
-            f"corpus-scale all-to-all similarity use "
-            f"operators.similarity.embedding_near_dup_pairs, or batch "
-            f"the query frame.")
-    bucket = _bucket_udf(spark, dim, n_planes, seed)
-    c = corpus.withColumn("_bucket", bucket(F.col(vec_col)))
-    q = queries.withColumn("_bucket", bucket(F.col(vec_col)))
-
-    # multi-probe expansion: every XOR mask of popcount ≤ probes
-    import itertools
-    probe_cols = [F.col("_bucket")]
-    for r in range(1, min(probes, n_planes) + 1):
-        for combo in itertools.combinations(range(n_planes), r):
-            mask = 0
-            for j in combo:
-                mask |= 1 << j
-            probe_cols.append(F.col("_bucket").bitwiseXOR(F.lit(mask)))
-    q_probes = q.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(F.array(*probe_cols)).alias("_bucket"),
-    )
-    cand = c.join(F.broadcast(q_probes), "_bucket").select(
-        F.col("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        "_qvec",
-    ).where(F.col("neighbor_id") != F.col("query_id")) \
-     .dropDuplicates(["query_id", "neighbor_id"])
-
-    scored = cand.withColumn(
-        "cos_sim", _vec_cos_udf(_cos_rows)(F.col("_qvec"), F.col("_cvec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_sim", 6).alias("cos_sim"), "rn"))
-
-
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the centroid-routed scale path complementing LSH.
+# IVF (inverted-file) ANN — the centroid-routed approximate top-k path.
 # Public design: Sivic & Zisserman "Video Google" inverted files / FAISS IVF.
 # ---------------------------------------------------------------------------
 
@@ -559,9 +444,9 @@ def ivf_topk(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
     cells; each query probes its ``nprobe`` nearest cells and exact-reranks
     only those candidates. (query_id, neighbor_id, cos_sim, rn).
 
-    Plan shape mirrors `cosine_topk_lsh`: cell assignment is shuffle-free,
-    the query-probe table is tiny and broadcast, so the only shuffle is the
-    candidate window — sub-linear in the corpus for nprobe << n_cells.
+    Plan shape: cell assignment is shuffle-free, the query-probe table is
+    tiny and broadcast, so the only shuffle is the candidate window —
+    sub-linear in the corpus for nprobe << n_cells.
     ``nprobe == n_cells`` degenerates to exact brute force (recall 1.0),
     which the tests exploit as an equivalence oracle."""
     if centroids is None:
@@ -630,7 +515,7 @@ def mixed_planes(dim: int, n_planes: int) -> np.ndarray:
     pairs identical), which collapses banded-LSH recall (21/25 on the
     planted fixture). Interleaving two mod-mult rounds with xor-shifts
     breaks the linearity: max |corr| 0.38, mean 0.10 — Gaussian-grade
-    (24/25 on the same fixture, matching gauss planes). Every step is
+    (24/25 on the same fixture, as seeded Gaussian planes). Every step is
     exact BIGINT on both engines (products < 2^61, no overflow; DuckDB
     mirrors with xor()/>>). semdedup keeps the 1-round spec: its keys
     only partition cells, where plane correlation costs nothing."""

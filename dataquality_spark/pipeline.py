@@ -245,18 +245,16 @@ def metrics_from_decisions(decisions: DataFrame,
 
 def run_from_crawl(spark: SparkSession, warc_path: str,
                    **pipeline_kwargs) -> DataFrame:
-    """The complete crawl-bytes → decisions DAG: WARC archives → per-record
-    (url, warc_ts, html) → stdlib HTML→text extraction → the full quality
-    pipeline in raw-crawl mode (no claimed language column — the language
-    rule passes on model confidence alone; see ``lang_optional``).
+    """The complete crawl-bytes → decisions DAG: ``sources.warc.crawl_pages``
+    → the full quality pipeline in raw-crawl mode (no claimed language
+    column — the language rule passes on model confidence alone; see
+    ``lang_optional``).
 
     One extra Arrow UDF stage (the extractor) ahead of the fused model UDF;
     everything downstream is the standard single-engineered-shuffle plan.
     """
-    from dataquality_spark.functions.html_extract import with_extracted_text
-    from dataquality_spark.sources.warc import read_warc
+    from dataquality_spark.sources.warc import crawl_pages
 
-    pages = (with_extracted_text(read_warc(spark, warc_path), out_col="text")
-             .withColumn("lang", F.lit(None).cast("string")))
     pipeline_kwargs.setdefault("lang_optional", True)
-    return run_pipeline(spark, pages, **pipeline_kwargs)
+    return run_pipeline(spark, crawl_pages(spark, warc_path),
+                        **pipeline_kwargs)

@@ -1351,8 +1351,8 @@ def _sql_pages_pipeline() -> str:
     documents-derived pages frame: heuristic stats → 8 rule flags →
     portable langid/LM rules → dedup winner window → the 11-row metrics
     unpivot. Thresholds come from `spec`; rule semantics mirror
-    `rules/heuristics.py` (array forms — token-equivalent to the engine's
-    regexp_count forms, property-tested engine-side); float divisions are
+    `rules/heuristics.py` (the SQL counts over word arrays, token-equivalent
+    to the engine's regexp_count forms, property-tested); float divisions are
     single IEEE ops on identical integers, exact on both engines."""
     from dataquality_spark.models import ngram_lm as LM
     from dataquality_spark.models import udf as U
@@ -1610,8 +1610,8 @@ FROM perdoc GROUP BY lang, pred_lang
 
 
 def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-banded LSH near-dup pairs (the at-scale near-dup path),
-    under the portable signature spec — EXACT oracle as of round 4: the
+    """MinHash-banded LSH near-dup pairs (the at-scale near-dup path) —
+    EXACT oracle: the SQL-replayable signature spec lets DuckDB run the
     same shared CTE prefix the fuzzy-dedup oracle replays (shingles →
     poly hashes → 64 permutations → 32×2 banding → hot-bucket cap →
     candidates), finished with the exact-Jaccard verify instead of the
@@ -1621,7 +1621,7 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pins: list[DataFrame] = []
     out = near_dup_pairs(docs, id_col="doc_id", jaccard_threshold=0.5,
-                         signature_spec="portable", cleanup=pins)
+                         cleanup=pins)
     return _register_pins(out, pins)
 
 
@@ -1647,8 +1647,8 @@ SELECT id_a, id_b, round(f, 6) AS jaccard FROM sims WHERE f >= 0.5
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs embedding near-dups via banded hyperplane LSH + exact
-    cosine verify, under the PORTABLE plane spec (quantized Rademacher
-    signatures, semdedup's LCG constants) — EXACT oracle as of round 4:
+    cosine verify (quantized ±1-plane signatures, semdedup's LCG
+    constants) — EXACT oracle:
     DuckDB recomputes the band keys from pure integer arithmetic, replays
     the hot-bucket cap and the candidate self-join, and decides each pair
     with the same sequential fold / round(·,4) bridge the engine uses.
@@ -1665,7 +1665,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins: list[DataFrame] = []
     out = embedding_near_dup_pairs(
         spark, emb.unionByName(shadow), threshold=0.999, dim=64,
-        plane_spec="portable", cleanup=pins)
+        cleanup=pins)
     return _register_pins(out, pins)
 
 
@@ -2733,9 +2733,8 @@ WHERE rn <= 3
 
 
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manku-style banded SimHash near-dup join under the PORTABLE
-    signature spec (`operators/dedup.py::simhash64_portable_py`) — EXACT
-    oracle: the 4×16-bit banding guarantees 100% recall at Hamming≤3
+    """Manku-style banded SimHash near-dup join (signature spec
+    `operators/dedup.py::simhash64_portable_py`) — EXACT oracle: the 4×16-bit banding guarantees 100% recall at Hamming≤3
     (pigeonhole), so with the hot-bucket cap off the banded join equals
     the brute-force pair set DuckDB computes directly from the
     recomputed signatures. The cap (`max_bucket_size`) stays the
@@ -2746,19 +2745,18 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pins: list[DataFrame] = []
     out = simhash_near_dup_pairs(docs, id_col="doc_id", max_hamming=3,
-                                 max_bucket_size=None,
-                                 signature_spec="portable", cleanup=pins)
+                                 max_bucket_size=None, cleanup=pins)
     return _register_pins(out, pins)
 
 
 def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash fingerprints: distribution of 16-bit prefix buckets, under
-    the portable signature spec so DuckDB recomputes every signature
-    bit-for-bit (EXACT oracle; was rows-only under the crc32 spec)."""
+    """SimHash fingerprints: distribution of 16-bit prefix buckets. DuckDB
+    recomputes every signature bit-for-bit from the SQL-replayable spec
+    (EXACT oracle)."""
     from dataquality_spark.operators.dedup import simhash_udf
     docs = _t(spark, sf_dir, "documents")
     return (docs.select(F.shiftrightunsigned(
-                simhash_udf(2, signature_spec="portable")(F.col("text")),
+                simhash_udf(2)(F.col("text")),
                 48).alias("bucket"))
             .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
 
@@ -3513,10 +3511,9 @@ FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
 # Q48 — the composed fuzzy-dedup SCALE path with a FULL exact oracle:
 # LSH pairs → connected components → canonical winners. MinHash is not
 # probabilistic-per-run — it is a pure function of (shingles, seeded
-# permutations) — so the whole composition is SQL-expressible once the
-# signature spec is engine-portable (`signature_spec="portable"`:
-# ASCII-class shingles + base-31 poly hash, `operators/dedup.py::
-# shingles_portable`). The oracle recomputes the 64 seeded permutations,
+# permutations) — so the whole composition is SQL-expressible because the
+# signature spec is engine-portable (ASCII-class shingles + base-31 poly
+# hash, `operators/dedup.py::shingles_portable`). The oracle recomputes the 64 seeded permutations,
 # the 32×2 banding fold, the hot-bucket cap, the exact-Jaccard verify
 # (integer predicate 2·|∩| ≥ |∪|), the component fixpoint (recursive CTE)
 # and the winner window — candidate-set-exact, not just decision-exact.
@@ -3526,7 +3523,6 @@ def q_fuzzy_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     out = fuzzy_dedup(docs, id_col="doc_id", text_col="text",
                       jaccard_threshold=0.5,
-                      signature_spec="portable",
                       order_by=[F.desc_nulls_last(F.length("text")),
                                 F.asc("doc_id")])
     return out.select("doc_id", "component", "is_winner")
@@ -5464,7 +5460,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = TX.words_col(F.col("text"))
     d = docs.select(
         "doc_id",
-        TX.word_count(words).cast("long").alias("n_words"),
+        F.size(words).cast("long").alias("n_words"),
         F.greatest(F.regexp_count(F.col("text"), F.lit(r"[.!?]+")),
                    F.lit(1)).cast("long").alias("n_sents"),
         F.regexp_count(F.lower("text"), F.lit("[aeiouy]+"))
@@ -5501,8 +5497,8 @@ FROM d
 # Q85 — MinHash estimator error: for every banded-LSH candidate pair, the
 # 64-permutation signature-agreement Jaccard ESTIMATE next to the exact
 # shingle Jaccard and the absolute error — the dedup-tuning diagnostic
-# ("is 64 perms enough at this threshold"). Rides the SAME portable
-# signature spec + candidate prefix as fuzzy_dedup_decisions, so the
+# ("is 64 perms enough at this threshold"). Rides the SAME signature
+# spec + candidate prefix as fuzzy_dedup_decisions, so the
 # DuckDB oracle recomputes signatures bit-for-bit and the estimate is an
 # integer count / 64.0 on both engines.
 
@@ -5512,8 +5508,7 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins: list[DataFrame] = []
     out = minhash_pair_diagnostics(
         docs, id_col="doc_id", text_col="text", shingle_n=3,
-        banding=(32, 2), max_bucket_size=200, signature_spec="portable",
-        cleanup=pins)
+        banding=(32, 2), max_bucket_size=200, cleanup=pins)
     return _register_pins(out, pins)
 
 

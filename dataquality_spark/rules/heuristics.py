@@ -40,7 +40,9 @@ def with_text_stats(df: DataFrame, text_col: str = "text",
 
     Uses the single-pass regexp_count forms (functions/text.py §regex stats)
     — whole-stage-codegen'd, no interpreted higher-order functions in the
-    hot path; token-equivalence with the array forms is oracle-tested.
+    hot path. The per-word reference forms are the pandas oracle
+    (``oracle.text_stats_row``) and the registry's DuckDB SQL; tests
+    compare these stats with both.
     (A Python-side PER-ROW counter inside the fused UDF was prototyped and
     measured SLOWER than these JVM passes — ~240µs/row for the token loop
     vs ~10µs/row here — so the standalone path keeps the regex forms.)

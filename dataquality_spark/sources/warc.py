@@ -158,9 +158,8 @@ def pages_from_warc_bytes(raw: bytes, source: str = "") -> pd.DataFrame:
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Distributed WARC read: binaryFile listing → per-file record parse.
-    Returns (url, warc_ts, html, record_type, source_file); compose with
-    ``functions/html_extract.with_extracted_text`` + the pipeline for the
-    full crawl-bytes → decisions DAG."""
+    Returns (url, warc_ts, html, record_type, source_file); ``crawl_pages``
+    turns it into the pipeline's pages input."""
     files = spark.read.format("binaryFile").load(path) \
         .select("path", "content")
 
@@ -170,6 +169,18 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                 yield pages_from_warc_bytes(bytes(content), source=str(p))
 
     return files.mapInPandas(parse, PAGES_FROM_WARC_SCHEMA)
+
+
+def crawl_pages(spark: SparkSession, path: str) -> DataFrame:
+    """The pages input table of a raw crawl: ``read_warc`` records with the
+    extracted ``text`` and ``lang`` NULL (a crawl claims no language, so
+    the pipeline runs with ``lang_optional=True``)."""
+    from pyspark.sql import functions as F
+
+    from dataquality_spark.functions.html_extract import with_extracted_text
+
+    return (with_extracted_text(read_warc(spark, path), out_col="text")
+            .withColumn("lang", F.lit(None).cast("string")))
 
 
 def write_warc(records: list[tuple[str, str, bytes]], path: str,

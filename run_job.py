@@ -34,7 +34,7 @@ def main() -> int:
                          "(fused into the model UDF; adds the 'quality' rule)")
     args = ap.parse_args()
 
-    from dataquality_spark import pipeline, scoring
+    from dataquality_spark import scoring
     from dataquality_spark.checkpoint import lineage, run_checkpointed
     from dataquality_spark.session import get_spark
     from dataquality_spark.synth import generate_pages
@@ -44,13 +44,8 @@ def main() -> int:
     if args.synthetic:
         pages = generate_pages(spark, args.synthetic, seed=42)
     elif args.input_warc:
-        from dataquality_spark.functions.html_extract import with_extracted_text
-        from dataquality_spark.sources.warc import read_warc
-        from pyspark.sql import functions as F
-        pages = (with_extracted_text(read_warc(spark, args.input_warc),
-                                     out_col="text")
-                 .withColumn("lang", F.lit(None).cast("string")))
-        lang_optional = True
+        from dataquality_spark.sources.warc import crawl_pages
+        pages, lang_optional = crawl_pages(spark, args.input_warc), True
     elif args.input:
         pages = spark.read.parquet(args.input)
     else:

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataquality_spark.operators.c1 import c1_best_match, seq_ratio_udf
-from dataquality_spark.operators.dedup import shingles_py
+from dataquality_spark.operators.dedup import shingles_portable
 
 # id → raw text. Mix of: typo pairs sharing a short number (rescued),
 # same-name different-number pairs (dropped by the rescue), no-number pairs
@@ -44,7 +44,7 @@ def _norm(t):
 
 
 def _jacc(a, b):
-    sa, sb = set(shingles_py(a)), set(shingles_py(b))
+    sa, sb = set(shingles_portable(a)), set(shingles_portable(b))
     if not sa or not sb:
         return 0.0
     return len(sa & sb) / len(sa | sb)

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from dataquality_spark import spec
 from dataquality_spark.operators.dedup import (
-    dedup_paragraphs, exact_dedup_winners, near_dup_pairs, simhash64_py,
-    simhash_udf, with_dedup_flag,
+    dedup_paragraphs, exact_dedup_winners, near_dup_pairs, simhash_udf,
+    with_dedup_flag,
 )
 
 BODY = ("the quick brown fox jumps over the lazy dog near the river "
@@ -278,27 +278,11 @@ def test_simhash_close_for_near_dups(spark):
     assert ham_ac >= 20, ham_ac
 
 
-def test_simhash_udf_matches_python_oracle(spark):
-    """The vectorized numpy kernel must equal the scalar simhash64_py spec
-    bit-for-bit (incl. sign wrap and empty/None inputs)."""
-    from dataquality_spark.operators.dedup import shingles_py
-    texts = [
-        "the quick brown fox jumps over the lazy dog and runs away fast",
-        "a b", "", None, "single",
-        " ".join(f"w{i}" for i in range(200)),
-        "ümlaut schön straße und zahlen 42 99 hier",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    got = [r["sh"] for r in
-           df.select(simhash_udf()(F.col("text")).alias("sh")).collect()]
-    want = [simhash64_py(shingles_py(t, 2)) for t in texts]
-    assert got == want
-
-
 def test_simhash_portable_udf_matches_scalar_spec(spark):
-    """The portable (exact-oracle) SimHash: the batch-vectorized UDF must
-    equal the scalar simhash64_portable_py spec bit-for-bit, including
-    sign wrap, empty/None inputs, and non-ASCII stripped-to-empty text."""
+    """The batch-vectorized SimHash UDF must equal the scalar
+    simhash64_portable_py spec bit-for-bit, including sign wrap,
+    empty/None inputs, non-ASCII stripped-to-empty text and mixed
+    non-ASCII text with digits."""
     from dataquality_spark.operators.dedup import (
         shingles_portable, simhash64_portable_py)
     texts = [
@@ -306,20 +290,21 @@ def test_simhash_portable_udf_matches_scalar_spec(spark):
         "a b", "", None, "single", "データのみ",  # strips to empty
         " ".join(f"w{i}" for i in range(200)),
         "İstanbul 42 mixed ascii and ünicode here",
+        "ümlaut schön straße und zahlen 42 99 hier",
     ]
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     got = [r["sh"] for r in df.select(
-        simhash_udf(2, signature_spec="portable")(F.col("text"))
-        .alias("sh")).collect()]
+        simhash_udf(2)(F.col("text")).alias("sh")).collect()]
     want = [simhash64_portable_py(shingles_portable(t, 2)) for t in texts]
     assert got == want
-    with pytest.raises(ValueError):
-        simhash_udf(2, signature_spec="md5")
 
 
 def test_simhash_portable_banded_join_equals_brute_force(spark):
-    """Uncapped banded join under the portable spec (the registry/oracle
-    configuration) equals the brute-force Hamming<=3 pair set."""
+    """Manku-style banded SimHash join: the pairs within Hamming<=3 are
+    exactly the brute-force set (100% recall by pigeonhole over 4x16-bit
+    bands, nothing beyond the threshold), uncapped (the registry/oracle
+    configuration) and at the default hot-bucket cap; 4 bands cannot
+    guarantee recall past Hamming 3, so max_hamming=4 is refused."""
     from itertools import combinations
     from dataquality_spark.operators.dedup import (
         shingles_portable, simhash64_portable_py, simhash_near_dup_pairs)
@@ -327,13 +312,16 @@ def test_simhash_portable_banded_join_equals_brute_force(spark):
     base = " ".join(f"word{i} tok{i * 3 % 97}" for i in range(120))
     words = base.split()
     texts = {"d0": base,
-             # one changed word: measured Hamming 3 under the portable spec
+             # one changed word: measured Hamming 3
              "near": " ".join(w + "z" if i == 5 else w
                               for i, w in enumerate(words)),
              # heavier perturbation: measured Hamming 11 (must NOT pair)
              "mid": " ".join(w + "z" if i % 60 == 0 else w
                              for i, w in enumerate(words)),
              "far": " ".join(f"zzz{i} qq{i * 7}" for i in range(120))}
+    for k in (2, 5):  # increasing perturbation
+        texts[f"d{k}"] = " ".join(
+            w + "z" if i % (60 // k) == 0 else w for i, w in enumerate(words))
 
     hashes = {u: simhash64_portable_py(shingles_portable(t, 2))
               & ((1 << 64) - 1) for u, t in texts.items()}
@@ -344,13 +332,17 @@ def test_simhash_portable_banded_join_equals_brute_force(spark):
     df = spark.createDataFrame(
         [(u, "2024-01-01", t) for u, t in texts.items()],
         "url string, warc_ts string, text string")
-    got_rows = simhash_near_dup_pairs(
-        df, max_hamming=3, max_bucket_size=None,
-        signature_spec="portable").collect()
-    assert {tuple(sorted((r["id_a"], r["id_b"]))) for r in got_rows} == want
-    for r in got_rows:
-        a, b = r["id_a"], r["id_b"]
-        assert r["hamming"] == bin(hashes[a] ^ hashes[b]).count("1")
+    for cap in (None, 200):
+        got_rows = simhash_near_dup_pairs(
+            df, max_hamming=3, max_bucket_size=cap).collect()
+        assert {tuple(sorted((r["id_a"], r["id_b"])))
+                for r in got_rows} == want, cap
+        for r in got_rows:
+            a, b = r["id_a"], r["id_b"]
+            assert r["hamming"] == bin(hashes[a] ^ hashes[b]).count("1")
+
+    with pytest.raises(ValueError):
+        simhash_near_dup_pairs(df, max_hamming=4)
 
 
 def test_dedup_paragraphs_semantics(spark):
@@ -424,45 +416,6 @@ def test_near_dup_containment_measure(spark):
 
     with pytest.raises(ValueError):
         near_dup_pairs(df, measure="dice")
-
-
-def test_simhash_near_dup_pairs_exact_recall(spark):
-    """Manku-style banded SimHash join: pairs within Hamming<=3 are found
-    with 100% recall (pigeonhole over 4x16-bit bands) and nothing beyond
-    the threshold survives — verified against a brute-force oracle."""
-    from itertools import combinations
-    from dataquality_spark.operators.dedup import (
-        shingles_py, simhash64_py, simhash_near_dup_pairs)
-
-    texts = {}
-    base = " ".join(f"word{i} tok{i * 3 % 97}" for i in range(120))
-    words = base.split()
-    texts["d0"] = base
-    for k in (1, 2, 5):  # increasing perturbation
-        texts[f"d{k}"] = " ".join(
-            w + "z" if i % (60 // k) == 0 else w for i, w in enumerate(words))
-    texts["far"] = " ".join(f"zzz{i} qq{i * 7}" for i in range(120))
-
-    hashes = {u: simhash64_py(shingles_py(t, 2)) & ((1 << 64) - 1)
-              for u, t in texts.items()}
-    want = set()
-    for a, b in combinations(sorted(texts), 2):
-        if bin(hashes[a] ^ hashes[b]).count("1") <= 3:
-            want.add((a, b))
-
-    df = spark.createDataFrame(
-        [(u, "2024-01-01", t) for u, t in texts.items()],
-        "url string, warc_ts string, text string")
-    got_rows = simhash_near_dup_pairs(df, max_hamming=3).collect()
-    got = {tuple(sorted((r["id_a"], r["id_b"]))) for r in got_rows}
-    assert got == want
-    assert want, "fixture must contain at least one close pair"
-    for r in got_rows:
-        a, b = r["id_a"], r["id_b"]
-        assert r["hamming"] == bin(hashes[a] ^ hashes[b]).count("1")
-
-    with pytest.raises(ValueError):
-        simhash_near_dup_pairs(df, max_hamming=4)
 
 
 def test_choose_banding_and_low_threshold_recall(spark):
@@ -580,7 +533,7 @@ FROM (SELECT lower(trim(regexp_replace(regexp_replace(coalesce(?, ''),
 
 
 def test_portable_udf_batch_hash_equals_scalar(spark):
-    """The vectorized left-padded fold inside the portable UDF must equal
+    """The vectorized left-padded fold inside the MinHash UDF must equal
     the scalar poly_hash31 spec — checked through the full UDF output
     (signature band keys recomputed from scalar hashes)."""
     import numpy as np
@@ -597,7 +550,7 @@ def test_portable_udf_batch_hash_equals_scalar(spark):
              # without inflating every other shingle in the batch to 20k
              "x" * 20_000]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    udf = shingle_bands_udf(3, bands=32, rows=2, signature_spec="portable")
+    udf = shingle_bands_udf(3, bands=32, rows=2)
     rows = (df.select(udf("text").alias("s"))
             .select("s.sh", "s.bands").collect())
     params = _perm_params()

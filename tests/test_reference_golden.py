@@ -203,12 +203,20 @@ def test_c1_projname_no_near_dups(spark, fixture_pdf):
     fixture (logged 100%): our LSH-candidate best-match must agree — zero
     matches above threshold among the project names."""
     from dataquality_spark.operators.c1 import c1_best_match
+    from dataquality_spark.operators.dedup import near_dup_pairs
     df = (_sdf(spark, fixture_pdf, ["PROJ_NAME"])
           .where(F.col("PROJ_NAME").isNotNull())
           .withColumn("url", F.col("PROJ_NAME")))
-    out = c1_best_match(df, id_col="url", text_col="PROJ_NAME",
+    cleanup = []
+    cand = near_dup_pairs(df, id_col="url", text_col="PROJ_NAME",
+                          jaccard_threshold=0.91, cleanup=cleanup
+                          ).withColumnRenamed("jaccard", "sim")
+    out = c1_best_match(df, cand, id_col="url", text_col="PROJ_NAME",
                         threshold=0.91)
-    assert out.count() == 0
+    n = out.count()
+    for f in cleanup:
+        f.unpersist()
+    assert n == 0
 
 
 def test_a2_grouped_iqr_score(spark, fixture_pdf):

@@ -1,11 +1,12 @@
-"""ANN operators: brute-force correctness vs numpy, LSH recall."""
+"""ANN operators: brute-force correctness vs numpy, IVF recall, embedding
+near-dup LSH recall and its SQL-replayable spec, SemDeDup."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dataquality_spark.operators.similarity import cosine_topk, cosine_topk_lsh
+from dataquality_spark.operators.similarity import cosine_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,8 +52,6 @@ def test_ann_query_bound_guards_trip(spark, emb, monkeypatch):
     with pytest.raises(ValueError, match="ANN_MAX_QUERIES"):
         S.cosine_topk(spark, corpus, big_q, k=3)
     with pytest.raises(ValueError, match="ANN_MAX_QUERIES"):
-        S.cosine_topk_lsh(spark, corpus, big_q, k=3, dim=64)
-    with pytest.raises(ValueError, match="ANN_MAX_QUERIES"):
         S.ivf_topk(spark, corpus, big_q, k=3, n_cells=4)
     # under the bound: unchanged behavior
     small_q = emb.where(F.col("vec_id") < 4)
@@ -60,48 +59,10 @@ def test_ann_query_bound_guards_trip(spark, emb, monkeypatch):
     assert out.count() == 12
 
 
-def test_lsh_recall_on_planted_neighbors(spark, emb):
-    """LSH recall is only meaningful when near neighbors exist (the corpus
-    embeddings are random ⇒ top-1 cosine ≈ 0.37, where no LSH can bucket
-    reliably). Plant queries = corpus vectors + small noise (cos ≈ 0.99)
-    and require the true neighbor to be found for most queries."""
-    pdf = emb.toPandas()
-    V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    rng = np.random.RandomState(7)
-    n_q = 20
-    q_rows = []
-    for i in range(n_q):
-        base = V[i] / np.linalg.norm(V[i])
-        noisy = base + 0.015 * rng.randn(len(base))  # cos ≈ 0.993
-        q_rows.append((10_000 + i, noisy.astype(np.float32).tolist()))
-    queries = spark.createDataFrame(
-        pd.DataFrame(q_rows, columns=["vec_id", "embedding"]))
-    approx = cosine_topk_lsh(spark, emb, queries, k=3, n_planes=6,
-                             probes=1).toPandas()
-    hits = sum(
-        1 for i in range(n_q)
-        if int(pdf["vec_id"].iloc[i]) in set(
-            approx[approx.query_id == 10_000 + i]["neighbor_id"])
-    )
-    assert hits / n_q >= 0.8, f"planted-neighbor recall {hits}/{n_q}"
-
-
-def test_lsh_sims_are_exact_for_found(spark, emb):
-    """LSH re-rank scores must equal brute-force scores for shared pairs."""
-    queries = emb.where(F.col("vec_id") < 3)
-    corpus = emb.where(F.col("vec_id") >= 3)
-    exact = cosine_topk(spark, corpus, queries, k=5).toPandas()
-    approx = cosine_topk_lsh(spark, corpus, queries, k=5, n_planes=4).toPandas()
-    m = exact.merge(approx, on=["query_id", "neighbor_id"],
-                    suffixes=("_e", "_a"))
-    assert len(m) > 0
-    assert np.allclose(m["cos_sim_e"], m["cos_sim_a"], atol=1e-6)
-
-
 def test_embedding_near_dup_pairs_recall_and_precision(spark):
     """Planted near-dup clusters: every emitted pair is exact-verified
-    (precision 1 by construction); planted-pair recall ≥ 0.9; unrelated
-    vectors produce no pairs."""
+    (round(cos, 4) ≥ threshold, precision 1 by construction); planted-pair
+    recall ≥ 0.9; unrelated vectors produce no pairs."""
     from dataquality_spark.operators.similarity import embedding_near_dup_pairs
 
     rng = np.random.RandomState(11)
@@ -125,7 +86,7 @@ def test_embedding_near_dup_pairs_recall_and_precision(spark):
     got = embedding_near_dup_pairs(spark, df, threshold=0.9).toPandas()
     got_pairs = {tuple(sorted(p)) for p in zip(got["id_a"], got["id_b"])}
     # precision: every returned pair truly ≥ threshold (verify stage)
-    assert (got["cos_sim"] >= 0.9).all()
+    assert (np.round(got["cos_sim"], 4) >= 0.9).all()
     # recall on planted pairs
     found = len(planted & got_pairs)
     assert found / len(planted) >= 0.9, f"recall {found}/{len(planted)}"
@@ -137,9 +98,9 @@ def test_embedding_near_dup_pairs_recall_and_precision(spark):
 def test_embedding_near_dup_lookup_equals_join_path(spark, monkeypatch):
     """The verify stage's two vector-delivery modes — broadcast id→vector
     lookup (small corpora) and the attach-join fallback (past the probe
-    bound) — must produce IDENTICAL rows bit-for-bit, under both plane
-    specs. Forcing the bound to 0 exercises the join path on the same
-    input."""
+    bound) — must produce IDENTICAL rows bit-for-bit, at a loose and a
+    near-1 threshold. Forcing the bound to 0 exercises the join path on
+    the same input."""
     from dataquality_spark.operators import similarity as S
 
     rng = np.random.RandomState(23)
@@ -152,17 +113,17 @@ def test_embedding_near_dup_lookup_equals_join_path(spark, monkeypatch):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["vec_id", "embedding"]))
 
-    for spec_name, thr in (("gauss", 0.9), ("portable", 0.999)):
+    for thr in (0.9, 0.999):
         a = S.embedding_near_dup_pairs(
-            spark, df, threshold=thr, dim=16, plane_spec=spec_name
+            spark, df, threshold=thr, dim=16
         ).orderBy("id_a", "id_b").collect()
         monkeypatch.setattr(S, "EMB_VERIFY_LOOKUP_MAX_ROWS", 0)
         b = S.embedding_near_dup_pairs(
-            spark, df, threshold=thr, dim=16, plane_spec=spec_name
+            spark, df, threshold=thr, dim=16
         ).orderBy("id_a", "id_b").collect()
         monkeypatch.undo()
-        assert len(a) > 0, f"{spec_name}: planted scaled twins not found"
-        assert a == b, f"{spec_name}: lookup and join paths diverge"
+        assert len(a) > 0, f"{thr}: planted scaled twins not found"
+        assert a == b, f"{thr}: lookup and join paths diverge"
 
 
 @pytest.mark.parametrize("bands,band_bits", [(8, 6), (3, 1), (8, 48)])
@@ -215,39 +176,46 @@ def test_lookup_verify_fails_loudly_on_missing_or_duplicate_ids(spark):
 
 
 def test_embedding_near_dup_portable_spec(spark):
-    """The exact-oracle configuration (quantized Rademacher planes +
-    sequential-fold verify) keeps the recall/precision properties of the
-    gauss path on the same planted fixture."""
-    from dataquality_spark.operators.similarity import embedding_near_dup_pairs
+    """The embedding near-dup spec is SQL-replayable: every band key equals
+    the scalar integer spec (fixed-point quantized vector · ``mixed_planes``
+    row, sign bit ``>= 0``, band number then bits in block order), and a
+    pair is kept iff round(cos, 4) ≥ threshold — a pair whose cosine sits
+    just below the threshold but rounds onto it is kept, one that rounds
+    below it is not."""
+    from dataquality_spark.operators import similarity as S
 
-    rng = np.random.RandomState(11)
-    rows, planted = [], set()
-    vid = 0
-    for c in range(25):
-        base = rng.randn(64)
-        base /= np.linalg.norm(base)
-        noisy = base + 0.05 * rng.randn(64)
-        rows.append((vid, base.astype(np.float32).tolist()))
-        rows.append((vid + 1, noisy.astype(np.float32).tolist()))
-        planted.add((vid, vid + 1))
-        vid += 2
-    for _ in range(100):
-        v = rng.randn(64)
-        rows.append((vid, (v / np.linalg.norm(v)).astype(np.float32).tolist()))
-        vid += 1
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    V = np.random.RandomState(11).randn(30, 8)
+    V[0] = 0.0  # every integer dot is exactly 0: all sign bits are 1
+    df = spark.createDataFrame([(i, V[i].tolist()) for i in range(30)],
+                               "vec_id long, embedding array<double>")
+    bands, band_bits = 4, 3
+    udf = S._band_keys_udf(spark, 8, bands, band_bits)
+    got = {r.vec_id: r.k for r in
+           df.select("vec_id", udf("embedding").alias("k")).collect()}
+    R = S.mixed_planes(8, bands * band_bits).tolist()
+    for i in range(30):
+        q = [int(np.floor(x * S.SEMDEDUP_QUANT + 0.5)) for x in V[i]]
+        bits = [sum(a * b for a, b in zip(q, plane)) >= 0 for plane in R]
+        want = []
+        for b in range(bands):
+            k = b
+            for bit in bits[b * band_bits:(b + 1) * band_bits]:
+                k = (k << 1) | int(bit)
+            want.append(k)
+        assert got[i] == want, i
 
-    got = embedding_near_dup_pairs(
-        spark, df, threshold=0.9, plane_spec="portable").toPandas()
-    got_pairs = {tuple(sorted(p)) for p in zip(got["id_a"], got["id_b"])}
-    assert (np.round(got["cos_sim"], 4) >= 0.9).all()
-    found = len(planted & got_pairs)
-    assert found / len(planted) >= 0.9, f"recall {found}/{len(planted)}"
-    assert not (got_pairs - planted)
+    # one plane-dominant axis: every sign bit agrees, so all three share
+    # every bucket and only the decision rule separates them
+    def unit(c, sign):
+        return [c, sign * float(np.sqrt(1 - c * c))] + [0.0] * 6
 
-    with pytest.raises(ValueError):
-        embedding_near_dup_pairs(spark, df, plane_spec="sobol")
+    edge = spark.createDataFrame(
+        [(0, [1.0] + [0.0] * 7), (1, unit(0.99988, 1.0)),
+         (2, unit(0.99984, -1.0))],
+        "vec_id long, embedding array<double>")
+    rows = S.embedding_near_dup_pairs(spark, edge, threshold=0.9999,
+                                      dim=8).collect()
+    assert [tuple(r) for r in rows] == [(0, 1, 0.99988)]
 
 
 def test_embedding_near_dup_hot_bucket_cap(spark):
@@ -331,28 +299,15 @@ def test_ivf_centroids_deterministic(spark, emb):
     assert np.array_equal(c1, c2)  # invariant to input partitioning
 
 
-def test_lsh_probes_radius_two_expands_candidates(spark):
-    """Regression: probes used to silently behave as 1 for any value >= 1;
-    radius-2 multi-probe must reach buckets two bit-flips away."""
-    from dataquality_spark.operators.similarity import cosine_topk_lsh
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    queries = emb.where("vec_id < 5")
-    r1 = (cosine_topk_lsh(spark, emb, queries, k=10, n_planes=8, probes=1)
-          .count())
-    r2 = (cosine_topk_lsh(spark, emb, queries, k=10, n_planes=8, probes=2)
-          .count())
-    assert r2 >= r1  # never fewer results with a wider probe radius
-
-
 def test_embedding_ops_null_and_empty_guards(spark):
     """Regression: empty or null-bearing embedding frames used to crash in
     first()[0] / ragged np.array instead of degrading gracefully."""
     from dataquality_spark.operators.similarity import (
-        cosine_topk, cosine_topk_lsh, embedding_near_dup_pairs)
+        cosine_topk, embedding_near_dup_pairs, ivf_topk)
     empty = (spark.read.parquet(f"{SF}/embeddings.parquet")
              .where("vec_id < 0"))
     assert embedding_near_dup_pairs(spark, empty).count() == 0
-    assert cosine_topk_lsh(spark, empty, empty).count() == 0
+    assert ivf_topk(spark, empty, empty, centroids=np.eye(64)).count() == 0
     assert cosine_topk(spark, empty, empty).count() == 0
     # a null vector among valid rows is dropped, not fatal
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(20)

@@ -80,11 +80,8 @@ def test_truncated_warc_stops_cleanly():
     assert pages_from_warc_bytes(b"garbage").empty
 
 
-def test_run_from_crawl_end_to_end(spark, tmp_path):
-    """WARC bytes in, keep/drop decisions out — the north-rule DAG starting
-    from crawl archives instead of a prepared pages table."""
-    from dataquality_spark import pipeline as P
-
+def _crawl_dir(tmp_path):
+    """Four identical in-domain pages and one symbol-junk page."""
     from dataquality_spark.models import corpus
 
     d = tmp_path / "crawl2"
@@ -97,9 +94,16 @@ def test_run_from_crawl_end_to_end(spark, tmp_path):
     recs.append(("http://junk.example/p", "2024-01-02T03:04:06Z",
                  b"<html><body>#@%^ #@%^ #@%^</body></html>"))
     write_warc(recs, str(d / "part-0.warc.gz"))
+    return str(d)
+
+
+def test_run_from_crawl_end_to_end(spark, tmp_path):
+    """WARC bytes in, keep/drop decisions out — the north-rule DAG starting
+    from crawl archives instead of a prepared pages table."""
+    from dataquality_spark import pipeline as P
 
     cleanup = []
-    ann = P.run_from_crawl(spark, str(d), cleanup=cleanup)
+    ann = P.run_from_crawl(spark, _crawl_dir(tmp_path), cleanup=cleanup)
     rows = {r["url"]: r for r in
             ann.select("url", "keep", "pred_lang", "r_lang_match").collect()}
     for f in cleanup:
@@ -112,3 +116,27 @@ def test_run_from_crawl_end_to_end(spark, tmp_path):
     assert not rows["http://junk.example/p"]["keep"]
     # raw-crawl mode: null claimed lang + confident model => rule passes
     assert rows[kept[0]]["r_lang_match"] and rows[kept[0]]["pred_lang"] == "en"
+
+
+def test_checkpointed_crawl_pages_equal_run_from_crawl(spark, tmp_path):
+    """``run_job.py --input-warc`` runs ``run_checkpointed`` over
+    ``crawl_pages`` with ``lang_optional=True``: its written decisions must
+    equal ``run_from_crawl``'s, url by url."""
+    from dataquality_spark import pipeline as P
+    from dataquality_spark.checkpoint import read_decisions, run_checkpointed
+    from dataquality_spark.sources.warc import crawl_pages
+
+    d = _crawl_dir(tmp_path)
+    cols = ("url", "keep", "scrubbed_text")
+    cleanup = []
+    want = sorted(tuple(r) for r in P.run_from_crawl(
+        spark, d, cleanup=cleanup).select(*cols).collect())
+    for f in cleanup:
+        f.unpersist()
+    out = str(tmp_path / "run")
+    run_checkpointed(spark, crawl_pages(spark, d), out, n_chunks=2,
+                     lang_optional=True)
+    got = sorted(tuple(r) for r in
+                 read_decisions(spark, out).select(*cols).collect())
+    assert len(want) == 5 and sum(k for _, k, _ in want) == 1
+    assert got == want

@@ -95,7 +95,7 @@ def _embedding_neardup_auto(spark, sf_dir: str):
     pins: list = []
     out = embedding_near_dup_pairs(
         spark, emb.unionByName(shadow), threshold=0.999, dim=64,
-        plane_spec="portable", band_bits="auto", cleanup=pins)
+        band_bits="auto", cleanup=pins)
     return Q._register_pins(out, pins)
 
 
