@@ -6,7 +6,6 @@ queries through the same noop-sink methodology, with optional repeats,
 so A/B experiments can be run back-to-back inside one window:
 
     python bench_extra.py [-r N] query [query ...]
-    python bench_extra.py --pipeline          # pipeline stage isolation
 
 Prints one JSON line per run: {"queries": {name: [sec, ...]}, ...}.
 """

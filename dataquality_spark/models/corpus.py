@@ -37,20 +37,15 @@ _SYLLABLES: dict[str, list[str]] = {
 VOCAB_SIZE = 160  # content words per language
 
 
-def _mix(x: np.ndarray | int) -> np.ndarray | int:
-    """splitmix64 finalizer — the engine's one deterministic PRNG primitive."""
-    x = np.uint64(x) if np.isscalar(x) else x.astype(np.uint64)
-    with np.errstate(over="ignore"):
-        x = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-        z = x
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        z = z ^ (z >> np.uint64(31))
-    return z
-
-
-def mix64(x):
-    return _mix(x)
+def mix64(x: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer over a whole uint64 array — the engine's one
+    deterministic PRNG primitive. Array arithmetic wraps mod 2^64 without
+    an overflow check, so no ``np.errstate`` is needed; draw every value a
+    caller needs in ONE call rather than one scalar at a time."""
+    z = np.asarray(x).astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15)
+    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return z ^ (z >> np.uint64(31))
 
 
 def _lang_seed(lang: str) -> int:
@@ -62,18 +57,21 @@ def _lang_seed(lang: str) -> int:
 
 @lru_cache(maxsize=None)
 def content_vocab(lang: str) -> list[str]:
-    """VOCAB_SIZE deterministic pseudo-words with the language's syllables."""
+    """VOCAB_SIZE deterministic pseudo-words with the language's syllables.
+    Two draws: one seed per word (its syllable count), then one per
+    (word, syllable) over the VOCAB_SIZE × 4 grid."""
     syl = _SYLLABLES[lang]
     base = "bcdfglmnprstv"
     vowels = "aeiou"
-    seed = _lang_seed(lang)
+    u = mix64(np.uint64(_lang_seed(lang))
+              + np.arange(VOCAB_SIZE, dtype=np.uint64) * np.uint64(7919))
+    n_syl = (2 + u % np.uint64(3)).tolist()
+    grid = mix64(u[:, None]
+                 + np.arange(4, dtype=np.uint64) * np.uint64(104729)).tolist()
     out = []
-    for w in range(VOCAB_SIZE):
-        u = int(_mix(seed + w * 7919))
-        n_syl = 2 + (u % 3)
+    for vs, n in zip(grid, n_syl):
         parts = []
-        for k in range(n_syl):
-            v = int(_mix(u + k * 104729))
+        for v in vs[:n]:
             parts.append(base[v % len(base)] + vowels[(v >> 8) % len(vowels)])
             if (v >> 16) % 3 == 0:
                 parts.append(syl[(v >> 24) % len(syl)])
@@ -87,19 +85,15 @@ def full_vocab(lang: str) -> list[str]:
     return list(spec.STOPWORDS[lang]) + content_vocab(lang)
 
 
-def seed_corpus(lang: str, n_docs: int = 200, words_per_doc: int = 60) -> list[str]:
-    """Deterministic training documents for the langid / LM models."""
-    pool = full_vocab(lang)
+def seed_corpus(lang: str, n_docs: int = 200) -> list[str]:
+    """Deterministic 60-word training documents for the langid / LM
+    models: the whole (doc, word) grid is one draw."""
+    pool = np.array(full_vocab(lang), dtype=object)
     n_stop = len(spec.STOPWORDS[lang])
-    seed = _lang_seed(lang) ^ 0xC0FFEE
-    docs = []
-    for d in range(n_docs):
-        ws = []
-        for k in range(words_per_doc):
-            u = int(_mix(seed + d * 1_000_003 + k))
-            if u % 100 < 40:  # ~40% stop words, like the generator
-                ws.append(pool[u % n_stop])
-            else:
-                ws.append(pool[n_stop + (u >> 16) % (len(pool) - n_stop)])
-        docs.append(" ".join(ws))
-    return docs
+    u = mix64(np.uint64(_lang_seed(lang) ^ 0xC0FFEE)
+              + np.arange(n_docs, dtype=np.uint64)[:, None] * np.uint64(1_000_003)
+              + np.arange(60, dtype=np.uint64))
+    ix = np.where(u % np.uint64(100) < np.uint64(40),  # ~40% stop words
+                  u % np.uint64(n_stop),
+                  n_stop + (u >> np.uint64(16)) % np.uint64(len(pool) - n_stop))
+    return [" ".join(ws) for ws in pool[ix.astype(np.int64)].tolist()]

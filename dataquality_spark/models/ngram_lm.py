@@ -15,6 +15,8 @@ pandas oracle.
 
 from __future__ import annotations
 
+from functools import cache
+
 import numpy as np
 import pandas as pd
 
@@ -57,10 +59,10 @@ def _doc_logprob(text: str, tri_c: np.ndarray, ctx_c: np.ndarray) -> float:
     return float(np.log(num / den).sum() / n)
 
 
-def train_lm(seed_docs: dict[str, list[str]] | None = None) -> dict:
+def train_lm() -> dict:
     """Per-language trigram/context count tables + IQR logprob bounds."""
     langs = spec.LANGS
-    docs = seed_docs or {lg: corpus.seed_corpus(lg) for lg in langs}
+    docs = {lg: corpus.seed_corpus(lg) for lg in langs}
     tri_tab = np.zeros((len(langs), N_BUCKETS), dtype=np.float32)
     ctx_tab = np.zeros((len(langs), N_BUCKETS), dtype=np.float32)
     lo = np.zeros(len(langs)); hi = np.zeros(len(langs))
@@ -251,13 +253,8 @@ def lm_score_portable_batch(texts, lang_idx: np.ndarray, art: dict
     return n_out, s_out
 
 
-_PORTABLE_LM: dict | None = None
-
-
+@cache
 def get_portable_lm() -> dict:
     """Train-once-per-process portable LM (shared by the Spark UDF stage
     and the oracle-SQL generator)."""
-    global _PORTABLE_LM
-    if _PORTABLE_LM is None:
-        _PORTABLE_LM = train_lm_portable()
-    return _PORTABLE_LM
+    return train_lm_portable()

@@ -51,12 +51,9 @@ _MERSENNE = (1 << 31) - 1
 def _perm_params(k: int = MINHASH_PERMS) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod p."""
     from dataquality_spark.models.corpus import mix64
-    out = []
-    for i in range(k):
-        a = (int(mix64(2 * i + 1)) % (_MERSENNE - 1)) + 1
-        b = int(mix64(2 * i + 2)) % _MERSENNE
-        out.append((a, b))
-    return out
+    u = mix64(np.arange(1, 2 * k + 1, dtype=np.uint64)).tolist()
+    return [(ua % (_MERSENNE - 1) + 1, ub % _MERSENNE)
+            for ua, ub in zip(u[0::2], u[1::2])]
 
 
 import re as _re

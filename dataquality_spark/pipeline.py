@@ -14,6 +14,8 @@ is never deserialized unless the caller selects it (SURVEY.md §4.2).
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,18 +29,13 @@ from dataquality_spark.rules.heuristics import (
 
 PIPELINE_RULES = spec.ALL_RULES + ["dedup"]
 
-_ARTIFACTS: dict | None = None
 
-
+@cache
 def get_artifacts() -> dict:
-    """Train-once-per-process model artifacts (deterministic, seed corpus)."""
-    global _ARTIFACTS
-    if _ARTIFACTS is None:
-        _ARTIFACTS = {
-            "langid": langid.train_langid(),
-            "lm": ngram_lm.train_lm(),
-        }
-    return _ARTIFACTS
+    """Train-once-per-process model artifacts (deterministic, seed corpus).
+    ``functools.cache`` returns the SAME objects on every call: the fused
+    UDF's broadcast cache (models/udf.py) keys on their ids."""
+    return {"langid": langid.train_langid(), "lm": ngram_lm.train_lm()}
 
 
 # Above this estimated input size the scored frame is cached DISK_ONLY
@@ -117,8 +114,9 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
         # SQL-replayable mode the exact pipeline-metrics oracle runs;
         # same fused one-UDF contract). Decision surfaces only: callers
         # needing the graded lang_conf/logprob floats use the default.
-        assert not with_classifier and not lang_optional, \
-            "portable_models composes with the default stage options only"
+        if with_classifier or lang_optional:
+            raise ValueError("portable_models composes with the default "
+                             "stage options only")
     q_art = None
     if with_classifier:
         from dataquality_spark.models import quality

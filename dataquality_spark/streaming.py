@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataquality_spark import spec
-from dataquality_spark.rules.heuristics import with_rule_flags
+from dataquality_spark.rules.heuristics import rule_counts, with_rule_flags
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -53,9 +53,8 @@ def stream_rule_metrics_query(spark: SparkSession, input_dir: str,
     flagged = stream_flagged(spark, input_dir)
     aggs = []
     for r in spec.HEURISTIC_RULES:
-        flag = F.col(f"r_{r}")
-        aggs.append(F.count(F.when(flag, 1)).alias(f"{r}__pass"))
-        aggs.append(F.count(F.when(~flag, 1)).alias(f"{r}__fail"))
+        p, f = rule_counts(F.col(f"r_{r}"))
+        aggs += [p.alias(f"{r}__pass"), f.alias(f"{r}__fail")]
     agg = flagged.agg(*aggs)
     return (agg.writeStream.outputMode("complete")
             .format("memory").queryName(query_name).start())

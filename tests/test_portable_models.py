@@ -125,6 +125,6 @@ def test_portable_pipeline_rejects_unsupported_combos(spark):
     from dataquality_spark import pipeline as P
     from dataquality_spark.synth import generate_pages
     pages = generate_pages(spark, 10, seed=7)
-    with pytest.raises(AssertionError):
-        P.run_pipeline(spark, pages, portable_models=True,
-                       with_classifier=True)
+    for combo in ({"with_classifier": True}, {"lang_optional": True}):
+        with pytest.raises(ValueError, match="portable_models"):
+            P.run_pipeline(spark, pages, portable_models=True, **combo)
