@@ -14,12 +14,16 @@ value hash at sf0.01):
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from dataquality_spark import spec
 from dataquality_spark.functions import text as TX
@@ -28,33 +32,50 @@ from dataquality_spark.functions import text as TX
 # helpers
 
 def _t(spark: SparkSession, sf_dir: str, name: str,
-       fan: bool = True) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _fan_small_scan(df) if fan else df
+       spread: bool = False) -> DataFrame:
+    """Read driver table ``name`` with no Spark job: one footer read on the
+    driver gives the schema and the split count.
 
+    Schema: Spark's row metadata when the footer holds it (files Spark
+    wrote), else the Arrow schema with zone-less timestamps as
+    ``timestamp_ntz``, which is what Spark infers for them. A
+    ``timestamp[ns]`` column with no Spark metadata (INT96 or NANOS in the
+    file) raises: Spark reads it as ``timestamp`` or not at all.
 
-def _fan_small_scan(df: DataFrame) -> DataFrame:
-    """Scan-parallelism floor (guide §2.5 "input skew" / §6 small files):
-    a table written as one single-row-group parquet file scans as ONE
-    task, so every downstream narrow stage — Arrow UDFs, interpreted
-    HOFs, regex projections — runs serially on one core while the rest
-    idle. When the scan yields fewer splits than the session's
-    parallelism, fan it out with one round-robin repartition (rows
-    balance exactly; `sortBeforeRepartition` keeps the assignment
-    deterministic under retries). SCALE-ADAPTIVE by construction: any
-    input with >= one split per core — every real corpus — skips the
-    repartition entirely, so plans at scale are unchanged. Filter
-    pushdown and column pruning pass through a Repartition node
-    (verified in-plan: PushedFilters/ReadSchema intact), so the scan
-    still prunes. ``SPARK_GRAFT_NO_SCAN_FAN=1`` disables it for A/B.
+    Spread: a table with fewer row groups than cores scans in fewer tasks
+    than cores, and every narrow stage above the scan runs on those tasks
+    alone. ``documents``, the one free-text table, then always gets one
+    round-robin repartition to the cores (rows balance exactly; the sort
+    before it keeps the assignment deterministic under retries): its
+    queries run regexes, tokenizers and Arrow UDFs per row. Other tables
+    spread only where a call passes ``spread=True``. Their queries are
+    mostly aggregates and joins, where the extra exchange costs more than
+    it saves: at sf0.1 on 4 cores, against spreading every small table,
+    none of the 38 queries that read no ``documents`` got more than 10%
+    slower and 36 got faster.
+    The ``spread=True`` reads are the scans that feed a heavy per-row stage
+    and ran 26-44% slower unspread: ``range_join``, ``embedding_knn``,
+    ``url_features``. A table with a row group per core never spreads.
     """
-    import os as _os
-    if _os.environ.get("SPARK_GRAFT_NO_SCAN_FAN"):
-        return df
-    spark = df.sparkSession
+    path = f"{sf_dir}/{name}.parquet"
+    footer = pads.dataset(path, format="parquet")
+    arrow = footer.schema
+    spark_meta = (arrow.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_meta:
+        schema = StructType.fromJson(json.loads(spark_meta))
+    else:
+        for f in arrow:
+            if "timestamp[ns" in str(f.type):
+                raise ValueError(
+                    f"table {name}: column {f.name} is {f.type} with no "
+                    "Spark metadata (INT96 or NANOS); Spark would not read "
+                    "it as timestamp_ntz")
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    df = spark.read.schema(schema).parquet(path)
     cores = spark.sparkContext.defaultParallelism
-    # driver-side split count of the planned scan (no job is launched)
-    if df.rdd.getNumPartitions() < cores:
+    if (name == "documents" or spread) and sum(
+            frag.num_row_groups for frag in footer.get_fragments()) < cores:
         return df.repartition(cores)
     return df
 
@@ -423,11 +444,8 @@ GROUP BY 1
 # Q8 — chronology predicate across a join (F-8 / A4: nulls valid)
 
 def q_chronology(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan=False: numeric join over pushed-down scans — the scan fan's
-    # repartition costs more than the serial work it saves (A/B-measured,
-    # OPTIMIZATION_r06.md)
-    li = _t(spark, sf_dir, "lineitem", fan=False)
-    o = _t(spark, sf_dir, "orders", fan=False)
+    li = _t(spark, sf_dir, "lineitem")
+    o = _t(spark, sf_dir, "orders")
     j = li.join(o, li.l_orderkey == o.o_orderkey)
     viol = (F.col("l_shipdate") < F.col("o_orderdate")) & F.col(
         "l_shipdate").isNotNull() & F.col("o_orderdate").isNotNull()
@@ -453,9 +471,8 @@ FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 # Q9 — row-sum consistency check (G-3 / A3): order total vs line items
 
 def q_rowsum_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan=False: aggregate-then-join of numeric columns (A/B-measured)
-    li = _t(spark, sf_dir, "lineitem", fan=False)
-    o = _t(spark, sf_dir, "orders", fan=False)
+    li = _t(spark, sf_dir, "lineitem")
+    o = _t(spark, sf_dir, "orders")
     per_order = li.groupBy("l_orderkey").agg(
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))
               * (1 + F.col("l_tax"))).alias("recomputed"))
@@ -562,7 +579,7 @@ WHERE len(list_intersect(a.s, b.s))::double
 # Q12 — brute-force cosine top-k over embeddings (ANN baseline)
 
 def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings", spread=True)
     qv = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
     corpus = emb.where(F.col("vec_id") >= 5).select(
@@ -1092,7 +1109,7 @@ FROM (
 
 def q_iqr_group_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataquality_spark.functions.stats import iqr_group_score
-    ev = _t(spark, sf_dir, "events", fan=False)  # agg-only (A/B-measured)
+    ev = _t(spark, sf_dir, "events")
     return iqr_group_score(ev, "event_type", "value",
                            factor=1.5, min_score=0.85)
 
@@ -1751,7 +1768,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins + residual filter — never a BroadcastNestedLoopJoin): event values
     against part-derived intervals [2*p_size, 2*p_size + 7)."""
     from dataquality_spark.operators.rangejoin import range_join
-    ev = _t(spark, sf_dir, "events").select("event_id", "value")
+    ev = _t(spark, sf_dir, "events", spread=True).select("event_id", "value")
     part = (_t(spark, sf_dir, "part")
             .where(F.col("p_partkey") % 20 == 0)
             .select("p_partkey",
@@ -1776,7 +1793,7 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly, daily, and grand-total buckets via native grouping sets
     (Catalyst expands them in a single aggregation — the continuous-
     aggregate pattern without a second scan per granularity)."""
-    ev = _t(spark, sf_dir, "events", fan=False)  # agg-only (A/B-measured)
+    ev = _t(spark, sf_dir, "events")
     b = ev.select(
         F.date_trunc("day", "ts").alias("day"),
         F.date_trunc("hour", "ts").alias("hour"),
@@ -1850,7 +1867,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation (`operators/asof.py` — one exchange, never a range join);
     the oracle is DuckDB's native ASOF LEFT JOIN."""
     from dataquality_spark.operators.asof import asof_join
-    ev = _t(spark, sf_dir, "events", fan=False)  # window/join-only (A/B-measured)
+    ev = _t(spark, sf_dir, "events")
     clicks = (ev.where(F.col("event_type") == "click")
               .select("event_id", "user_id", "ts", "value"))
     errors = (ev.where(F.col("event_type") == "error")
@@ -1877,7 +1894,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard two-window composite, one shuffle on user_id reused by
     both windows (lag and cumsum share the partitioning). Emits per-session
     rollups."""
-    ev = _t(spark, sf_dir, "events", fan=False)  # window-only (A/B-measured)
+    ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond-exact epoch: unix_timestamp truncates to seconds, which
     # would split sessions differently from a fractional-epoch engine
@@ -1930,7 +1947,7 @@ def q_url_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts + booleans, float-free). ZERO shuffle: one codegen projection,
     no UDF (functions/text.url_shape_features)."""
     from dataquality_spark.functions.text import url_shape_features
-    ev = _t(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events", spread=True)
     e, uid = F.col("event_id"), F.col("user_id")
     host = F.concat(F.lit("s"), (uid % 50).cast("string"),
                     F.when(e % 2 == 0, F.lit(".m")).otherwise(F.lit("")),
@@ -4198,13 +4215,11 @@ def q_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # diverges at the 6dp house rounding once group sums reach ~1e7.
 
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan=False on the whole join tree: decimal agg over pushed-down scans
-    # (A/B-measured, OPTIMIZATION_r06.md)
-    li = _t(spark, sf_dir, "lineitem", fan=False)
-    orders = _t(spark, sf_dir, "orders", fan=False)
-    cust = _t(spark, sf_dir, "customer", fan=False)
-    nat = _t(spark, sf_dir, "nation", fan=False)
-    reg = _t(spark, sf_dir, "region", fan=False)
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    cust = _t(spark, sf_dir, "customer")
+    nat = _t(spark, sf_dir, "nation")
+    reg = _t(spark, sf_dir, "region")
     rev = (F.col("l_extendedprice").cast("decimal(18,2)")
            * (F.lit(1).cast("decimal(18,2)")
               - F.col("l_discount").cast("decimal(18,2)")))
@@ -4708,7 +4723,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is integer arithmetic plus one bit-portable IEEE division
     per centroid coordinate (operators/clustering.py)."""
     from dataquality_spark.operators.clustering import kmeans_clusters
-    embs = _t(spark, sf_dir, "embeddings", fan=False)  # iterative agg (A/B-measured)
+    embs = _t(spark, sf_dir, "embeddings")
     pins: list[DataFrame] = []
     out = kmeans_clusters(spark, embs, k=_KMEANS_K, iters=_KMEANS_ITERS,
                           dim=64, cleanup=pins)

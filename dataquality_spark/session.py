@@ -96,9 +96,7 @@ def get_spark(
         # Arrow batch size for the UDF stages: larger batches amortize the
         # JVM↔Python round-trip but grow the row queue the Arrow writer
         # buffers; measured sweep in BENCH/BASELINE.md (SURVEY §4.3(1)).
-        # Env override for experiments.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
