@@ -74,6 +74,17 @@ def alpha_ratio_rx(text: Column, wc: Column,
     return F.when(wc > 0, (wc - non_alpha) / wc).otherwise(F.lit(None))
 
 
+def stopword_hits(text: Column, stoplist: list[str]) -> Column:
+    """Tokens of ``text`` (lowercased) exactly equal to a word of
+    ``stoplist``: one codegen'd alternation pass, counting exactly the
+    whitespace-delimited tokens an array membership test accepts;
+    longest-first ordering so prefixes never shadow longer stop words.
+    NULL text counts 0."""
+    alts = "|".join(sorted(stoplist, key=len, reverse=True))
+    pat = rf"(^|\s)({alts})(?=\s|$)"
+    return F.coalesce(F.regexp_count(F.lower(text), F.lit(pat)), F.lit(0))
+
+
 def stopword_count_rx(text: Column, lang: Column,
                       pre: Column | None = None) -> Column:
     """Tokens exactly equal to a stop word, via one alternation pass per
@@ -91,20 +102,15 @@ def stopword_count_rx(text: Column, lang: Column,
     generated code past the JIT threshold — 13 extra translate calls in
     the CASE branches took the whole projection 5.9s → 34s at
     600k/local[32]."""
-    def count_for(words: list[str]) -> Column:
-        alts = "|".join(sorted(words, key=len, reverse=True))
-        pat = rf"(^|\s)({alts})(?=\s|$)"
-        return F.coalesce(
-            F.regexp_count(F.lower(text), F.lit(pat)), F.lit(0)).cast("long")
-
     expr = None
     for lg in spec.LANGS:
         if lg == "en":
             continue
-        branch = count_for(spec.STOPWORDS[lg])
+        branch = stopword_hits(text, spec.STOPWORDS[lg]).cast("long")
         expr = F.when(lang == lg, branch) if expr is None else expr.when(
             lang == lg, branch)
-    out = expr.otherwise(count_for(spec.STOPWORDS["en"]))
+    out = expr.otherwise(
+        stopword_hits(text, spec.STOPWORDS["en"]).cast("long"))
     if pre is not None:
         # precomputed per-language counts (the fused UDF's gated ASCII
         # fast path — functions/stats_batch): pick the claimed language's

@@ -5,26 +5,39 @@ prep (public knowledge: Joulin et al. 2016 "Bag of Tricks" architecture —
 averaged hashed n-gram features into a linear model; Touvron et al. 2023
 describe filtering CommonCrawl with exactly such a classifier). Complements
 the HEURISTIC gate (rules/heuristics.py): the rules encode thresholds, the
-classifier learns a decision surface from labeled examples and produces a
-graded probability usable for head/middle/tail bucketing.
+classifier learns a decision surface from labeled examples.
 
-Everything is deterministic and self-contained: positives come from the
-seed corpus (models/corpus.py), negatives from a junk generator covering
-the canonical web-garbage failure modes (gibberish, symbol spam, repetition
-spam, digit spam). Training is full-batch logistic regression in numpy with
-a manual CSR layout — forward and gradient are two ``np.bincount`` calls
-per epoch, no per-doc Python in the loop. The trained artifact is a plain
-dict of numpy arrays: picklable, broadcast once, scored inside an
-Arrow-batched pandas UDF like the langid/LM artifacts (models/udf.py).
+ONE feature spec, engine-portable: every hashing step is expressible
+identically in numpy AND DuckDB SQL — the `shingles_portable`/`poly_hash31`
+pattern that made the composed fuzzy-dedup query exact-oracle:
 
-Word hashing uses ``zlib.crc32`` (stable across processes — NEVER builtin
-``hash()``, which is salted per interpreter) + the splitmix64 finalizer.
+  * normalize like `shingles_portable` (strip non-ASCII BEFORE lower, the
+    explicit ASCII whitespace class) so SQL `lower()` == Python `.lower()`;
+  * word hash = base-31 polynomial over codepoints mod Mersenne-31
+    (`poly_hash31`); bigram combiner = (h_i·1000003 + h_{i+1}) mod M;
+  * char 2-/3-grams = the same base-31 fold over the codepoints of the
+    first Q_MAX_CHARS normalized chars — subword grams are what generalize
+    to never-seen junk vocabulary (gibberish, symbol runs and digit
+    strings have characteristic character n-grams even when every token
+    is novel, the reason fastText uses subword features);
+  * weights QUANTIZED to int64 fixed point (QSCALE) so the per-doc score
+    `Σ wq[bucket] + bq·n_feat` is pure integer arithmetic — exact in any
+    summation order, NO float knife edge between engines (the round(·,4)
+    lesson from ivf_knn/cosine_allpairs, 912ac1b).
+
+The trained, quantized artifact is committed (models/artifacts/); the
+pipeline's classifier stage (``run_pipeline(with_classifier=True)``) and
+the registry queries score with it, so no process trains at run time.
+Training is deterministic: positives come from the seed corpus
+(models/corpus.py), negatives from a junk generator covering the canonical
+web-garbage failure modes (gibberish, symbol spam, repetition spam, digit
+spam); full-batch logistic regression in numpy with a manual CSR layout —
+forward and gradient are two ``np.bincount`` calls per epoch.
 """
 
 from __future__ import annotations
 
 import os as _os
-import zlib
 from functools import lru_cache as _lru_cache
 
 import numpy as np
@@ -36,57 +49,7 @@ from dataquality_spark.models import corpus
 N_WORD_BUCKETS = 1 << 12
 N_CHAR_BUCKETS = 1 << 12
 N_BUCKETS = N_WORD_BUCKETS + N_CHAR_BUCKETS
-MAX_WORDS = 512  # score on a prefix — plenty for a quality signal
-_WMASK = np.uint64(N_WORD_BUCKETS - 1)
-_P = np.uint64(1099511628211)
-
-
-def _doc_buckets(text: str | None) -> np.ndarray:
-    """Hashed feature bucket ids for one document: word 1-/2-grams in the
-    lower bucket half, char 2-/3-grams (langid's subword hasher) in the
-    upper half. Word grams catch template junk (SEO phrases, repeated
-    boilerplate); SUBWORD grams are what generalize to never-seen junk
-    vocabulary — gibberish, symbol runs, and digit strings have
-    characteristic character n-grams even when every token is novel (the
-    same reason fastText uses subword features)."""
-    from dataquality_spark.models import langid as L
-
-    if not isinstance(text, str):  # None / NaN-from-pandas
-        text = ""
-    ws = text.lower().split()[:MAX_WORDS]
-    if not ws:
-        return np.zeros(0, dtype=np.int64)
-    h = np.fromiter((zlib.crc32(w.encode("utf-8")) for w in ws),
-                    dtype=np.uint64, count=len(ws))
-    uni = corpus.mix64(h)
-    grams = [uni & _WMASK]
-    if len(h) > 1:
-        with np.errstate(over="ignore"):
-            grams.append(corpus.mix64(h[:-1] * _P ^ h[1:]) & _WMASK)
-    with np.errstate(over="ignore"):
-        cg = L._ngram_buckets(L._codepoints(text)) % np.uint64(N_CHAR_BUCKETS)
-    grams.append(cg + np.uint64(N_WORD_BUCKETS))
-    return np.concatenate(grams).astype(np.int64)
-
-
-# --- ENGINE-PORTABLE feature spec (exact-oracle path) -----------------------
-#
-# Same architecture (averaged hashed word 1-/2-grams + char 2-/3-grams into
-# a logreg), but every hashing step is expressible identically in numpy AND
-# DuckDB SQL — the `shingles_portable`/`poly_hash31` pattern that made the
-# composed fuzzy-dedup query exact-oracle:
-#
-#   * normalize like `shingles_portable` (strip non-ASCII BEFORE lower, the
-#     explicit ASCII whitespace class) so SQL `lower()` == Python `.lower()`;
-#   * word hash = base-31 polynomial over codepoints mod Mersenne-31
-#     (`poly_hash31`); bigram combiner = (h_i·1000003 + h_{i+1}) mod M;
-#   * char 2-/3-grams = the same base-31 fold over the codepoints of the
-#     first Q_MAX_CHARS normalized chars;
-#   * weights QUANTIZED to int64 fixed point (QSCALE) so the per-doc score
-#     `Σ wq[bucket] + bq·n_feat` is pure integer arithmetic — exact in any
-#     summation order, NO float knife edge between engines (the round(·,4)
-#     lesson from ivf_knn/cosine_allpairs, 912ac1b).
-
+MAX_WORDS = 512     # score on a prefix — plenty for a quality signal
 Q_MAX_CHARS = 256   # char-gram prefix of the NORMALIZED text
 QSCALE = 1_000_000  # fixed-point weight scale
 _QK = 1_000_003     # word-bigram combiner (same constant as the LSH fold)
@@ -99,62 +62,87 @@ def _normalize_portable(text) -> str:
     return _PORT_WS.sub(" ", _PORT_KEEP.sub("", text)).strip().lower()
 
 
-def portable_buckets_batch(texts) -> list[np.ndarray]:
-    """Bucket-id arrays (one per doc) under the portable spec, batched:
-    ONE `poly_hash_flat` call hashes every word of the batch (banded-pad
-    matrix fold — the vectorized kernel the portable MinHash spec uses)."""
-    from dataquality_spark.operators.dedup import _MERSENNE, poly_hash_flat
+def word_hashes_batch(texts, max_words: int | None = None
+                      ) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """The batch word-hash step of the portable spec, shared with DSIR
+    (operators/dsir.py): (normalized texts, words per doc, the flat int64
+    ``poly_hash31`` of every word, docs in order). Each doc keeps its first
+    ``max_words`` words (all when None). Each DISTINCT word of the batch
+    is hashed once and gathered back out: a batch repeats its vocabulary
+    (3,000 synthetic pages hold 570k words but 4.6k distinct ones), so the
+    banded ``poly_hash_flat`` fold runs over the vocabulary only."""
+    from dataquality_spark.operators.dedup import poly_hash_flat
 
     norm = [_normalize_portable(t) for t in texts]
-    words_per = [n.split(" ")[:MAX_WORDS] if n else [] for n in norm]
-    flat = [w.encode("ascii") for ws in words_per for w in ws]
-    hv = (poly_hash_flat(flat) if flat
-          else np.zeros(0, dtype=np.int64))
-    M = np.int64(_MERSENNE)
-    out, off = [], 0
-    for ws, n in zip(words_per, norm):
-        k = len(ws)
-        h = hv[off:off + k]
-        off += k
-        if k == 0:
-            out.append(np.zeros(0, dtype=np.int64))
-            continue
-        grams = [h % N_WORD_BUCKETS]
-        if k > 1:
-            grams.append((h[:-1] * _QK + h[1:]) % M % N_WORD_BUCKETS)
-        cp = np.frombuffer(n[:Q_MAX_CHARS].encode("ascii"),
-                           dtype=np.uint8).astype(np.int64)
-        if len(cp) >= 2:
-            h2 = (cp[:-1] * 31 + cp[1:]) % M
-            grams.append(h2 % N_CHAR_BUCKETS + N_WORD_BUCKETS)
-            if len(cp) >= 3:
-                h3 = (h2[:-1] * 31 + cp[2:]) % M
-                grams.append(h3 % N_CHAR_BUCKETS + N_WORD_BUCKETS)
-        out.append(np.concatenate(grams))
+    words = [n.split(" ")[:max_words] if n else [] for n in norm]
+    counts = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    flat = [w for ws in words for w in ws]
+    if not flat:
+        return norm, counts, np.zeros(0, dtype=np.int64)
+    codes, vocab = pd.factorize(np.array(flat, dtype=object))
+    return norm, counts, poly_hash_flat([w.encode("ascii") for w in vocab])[codes]
+
+
+def _starts(counts: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: each doc's offset in a flat per-doc array."""
+    out = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=out[1:])
     return out
 
 
-def _csr_from_buckets(bucket_list) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    idx_parts, doc_parts, data_parts = [], [], []
-    for i, b in enumerate(bucket_list):
-        if len(b) == 0:
-            continue
-        idx_parts.append(b)
-        doc_parts.append(np.full(len(b), i, dtype=np.int64))
-        data_parts.append(np.full(len(b), 1.0 / len(b)))
-    if not idx_parts:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, np.zeros(0)
-    return (np.concatenate(idx_parts), np.concatenate(doc_parts),
-            np.concatenate(data_parts))
+def _fold(h: np.ndarray, counts: np.ndarray, span: int, mult: int
+          ) -> tuple[np.ndarray, np.ndarray]:
+    """Base-``mult`` fold mod Mersenne-31 over every window of ``span``+1
+    consecutive values inside one doc of a flat per-doc array, and the
+    window count per doc."""
+    from dataquality_spark.operators.dedup import _MERSENNE
+    g = h
+    for j in range(1, span + 1):
+        g = (g[:-1] * mult + h[j:]) % _MERSENNE
+    ends = np.repeat(_starts(counts) + counts, counts)[:len(g)]
+    return g[np.arange(len(g)) + span < ends], np.maximum(counts - span, 0)
 
 
-def _csr(texts, feature_spec: str = "crc") -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def interleave(parts) -> tuple[np.ndarray, np.ndarray]:
+    """(values, counts) flat per-doc feature kinds → (features per doc,
+    one flat array holding each doc's features kind by kind, docs in
+    order): a scatter, no per-doc Python."""
+    n = sum(c for _, c in parts)
+    out = np.empty(int(n.sum()), dtype=np.int64)
+    base = _starts(n)
+    for v, c in parts:
+        out[np.repeat(base - _starts(c), c) + np.arange(len(v))] = v
+        base = base + c
+    return n, out
+
+
+def split_docs(n: np.ndarray, flat: np.ndarray) -> list[np.ndarray]:
+    """A flat per-doc array as one array per doc."""
+    return [flat[s:s + k] for s, k in zip(_starts(n).tolist(), n.tolist())]
+
+
+def portable_buckets_batch(texts) -> tuple[np.ndarray, np.ndarray]:
+    """(n_feat per doc, flat bucket ids) for a batch, fully vectorized:
+    each doc's buckets are its word unigrams and bigrams (lower half),
+    then its char 2-grams and 3-grams (upper half), in that order."""
+    norm, k, h = word_hashes_batch(texts, MAX_WORDS)
+    pre = [n[:Q_MAX_CHARS] for n in norm]
+    m = np.fromiter(map(len, pre), dtype=np.int64, count=len(pre))
+    cp = np.frombuffer("".join(pre).encode("ascii"),
+                       dtype=np.uint8).astype(np.int64)
+    bi, c2, c3 = _fold(h, k, 1, _QK), _fold(cp, m, 1, 31), _fold(cp, m, 2, 31)
+    return interleave([
+        (h % N_WORD_BUCKETS, k), (bi[0] % N_WORD_BUCKETS, bi[1]),
+        (c2[0] % N_CHAR_BUCKETS + N_WORD_BUCKETS, c2[1]),
+        (c3[0] % N_CHAR_BUCKETS + N_WORD_BUCKETS, c3[1])])
+
+
+def _csr(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(bucket_idx, doc_ids, data) with data = 1/n_features per doc —
     averaged features, the fastText formulation."""
-    if feature_spec == "portable":
-        return _csr_from_buckets(portable_buckets_batch(list(texts)))
-    return _csr_from_buckets([_doc_buckets(t) for t in texts])
+    n, idx = portable_buckets_batch(texts)
+    return (idx, np.repeat(np.arange(len(n)), n),
+            np.repeat(1.0 / np.maximum(n, 1), n))
 
 
 # --- deterministic junk generator (negative class) -------------------------
@@ -189,16 +177,12 @@ def junk_corpus(n_docs: int = 200, seed: int = 0xBAD) -> list[str]:
 
 # --- training --------------------------------------------------------------
 
-@_lru_cache(maxsize=4)
-def train_quality(n_per_class: int = 600, epochs: int = 800,
-                  lr: float = 100.0, l2: float = 1e-6,
-                  feature_spec: str = "crc") -> dict:
+def train_quality() -> dict:
     """Binary logistic regression, full-batch GD, fixed schedule —
     bit-deterministic. Positives: seed-corpus docs round-robin over the
-    supported languages; negatives: junk_corpus. Cached per-process like
-    ``pipeline.get_artifacts`` (callers must not mutate the arrays).
-    ``feature_spec="portable"`` trains on the SQL-expressible feature
-    hashing above (the exact-oracle path for the registered query)."""
+    supported languages; negatives: junk_corpus. Regenerates the committed
+    artifact (tools/gen_quality_artifact.py); nothing trains at run time."""
+    n_per_class, epochs, lr, l2 = 600, 800, 100.0, 1e-6
     langs = spec.LANGS
     per_lang = n_per_class // len(langs) + 1
     pos = []
@@ -208,7 +192,7 @@ def train_quality(n_per_class: int = 600, epochs: int = 800,
     neg = junk_corpus(n_per_class)
     texts = pos + neg
     y = np.concatenate([np.ones(len(pos)), np.zeros(len(neg))])
-    idx, doc_ids, data = _csr(texts, feature_spec=feature_spec)
+    idx, doc_ids, data = _csr(texts)
     n = len(texts)
 
     w = np.zeros(N_BUCKETS)
@@ -221,35 +205,7 @@ def train_quality(n_per_class: int = 600, epochs: int = 800,
                          minlength=N_BUCKETS) / n + l2 * w
         w -= lr * gw
         b -= lr * float(err.mean())
-    return {"w": w, "b": b, "n_buckets": N_BUCKETS,
-            "feature_spec": feature_spec}
-
-
-def predict_batch(texts: pd.Series, art: dict) -> np.ndarray:
-    """P(quality) per text; empty/null text scores exactly 0.0 (no features
-    ⇒ junk by definition, matching the heuristic min-words rule)."""
-    vals = texts.tolist()
-    idx, doc_ids, data = _csr(vals, feature_spec=art.get("feature_spec", "crc"))
-    n = len(vals)
-    scores = (np.bincount(doc_ids, weights=art["w"][idx] * data, minlength=n)
-              + art["b"])
-    probs = 1.0 / (1.0 + np.exp(-scores))
-    has_features = np.bincount(doc_ids, minlength=n) > 0
-    probs[~has_features] = 0.0
-    return probs
-
-
-def make_quality_udf(spark, art: dict):
-    """Double-returning Arrow-batched UDF with the broadcast artifact."""
-    from pyspark.sql import functions as F
-
-    b_art = spark.sparkContext.broadcast(art)
-
-    @F.pandas_udf("double")
-    def quality_prob(text: pd.Series) -> pd.Series:
-        return pd.Series(predict_batch(text, b_art.value))
-
-    return quality_prob
+    return {"w": w, "b": b}
 
 
 # --- quantized portable artifact (exact-oracle scoring) ---------------------
@@ -264,8 +220,6 @@ def quantized_artifact(art: dict) -> dict:
     ``n_feat·QSCALE·(mean(w[bucket]) + b)`` — so keep = (logit_num > 0)
     is bit-identical in numpy and SQL. |wq| ≲ 1e8, n_feat ≤ ~1.5e3 ⇒
     |logit_num| < 2^48: no int64 overflow."""
-    assert art.get("feature_spec") == "portable", \
-        "quantized scoring is defined for the portable feature spec"
     return {"wq": np.rint(art["w"] * QSCALE).astype(np.int64),
             "bq": int(round(art["b"] * QSCALE))}
 
@@ -304,14 +258,21 @@ def load_quantized_artifact(path: str = ARTIFACT_PATH) -> dict:
 def logit_batch(texts, qart: dict) -> tuple[np.ndarray, np.ndarray]:
     """(n_feat, logit_num) int64 arrays per text — pure integer arithmetic,
     exact in any summation order. Empty/null text ⇒ (0, 0) ⇒ drop."""
-    buckets = portable_buckets_batch(texts)
-    wq, bq = qart["wq"], qart["bq"]
-    n_feat = np.fromiter((len(b) for b in buckets), dtype=np.int64,
-                         count=len(buckets))
-    logit = np.fromiter(
-        (int(wq[b].sum()) + bq * len(b) if len(b) else 0 for b in buckets),
-        dtype=np.int64, count=len(buckets))
+    n_feat, buckets = portable_buckets_batch(texts)
+    logit = np.zeros(len(n_feat), dtype=np.int64)
+    has = n_feat > 0
+    if has.any():
+        logit[has] = (np.add.reduceat(qart["wq"][buckets], _starts(n_feat)[has])
+                      + qart["bq"] * n_feat[has])
     return n_feat, logit
+
+
+def probability(n_feat: np.ndarray, logit: np.ndarray) -> np.ndarray:
+    """P(quality) = sigmoid(logit_num / (n_feat·QSCALE)), the sigmoid of
+    mean(w[bucket]) + b; 0.0 for a doc with no features. The graded
+    score only: the keep decision is the exact ``logit_num > 0``."""
+    p = 1.0 / (1.0 + np.exp(-logit / (np.maximum(n_feat, 1) * QSCALE)))
+    return np.where(n_feat > 0, p, 0.0)
 
 
 def make_quality_logit_udf(spark, qart: dict):

@@ -51,14 +51,44 @@ def score_batch(texts: pd.Series, langid_art: dict, lm_art: dict) -> pd.DataFram
     })
 
 
-FUSED_SCHEMA = T.StructType(
-    SCORE_SCHEMA.fields + [T.StructField("scrubbed_text", T.StringType())]
-    + [T.StructField(f, T.LongType()) for f in
-       ("word_cnt", "nonws_len", "symbol_cnt", "nb_lines", "nb_distinct")]
-    # gated fast-path stats (functions/stats_batch): NULL on rows the
-    # ASCII gate rejects — the JVM regex forms decide those via coalesce
-    + [T.StructField("letterless", T.LongType()),
-       T.StructField("stop_cnts", T.ArrayType(T.IntegerType()))])
+# the portable spec's model fields: fixed-point integer surfaces
+# (models/langid.py § portable, models/ngram_lm.py § portable)
+PORTABLE_SCORE_SCHEMA = T.StructType([
+    T.StructField("pred_idx", T.IntegerType()),
+    T.StructField("lg_n", T.IntegerType()),      # langid feature count
+    T.StructField("margin", T.LongType()),       # best − runner-up, int64
+    T.StructField("lm_n", T.IntegerType()),      # trigram count
+    T.StructField("lm_num", T.LongType()),       # Σ quantized logprob terms
+])
+
+
+def portable_score_batch(texts: pd.Series, plang_art: dict,
+                         plm_art: dict) -> pd.DataFrame:
+    """The portable spec's ``score_batch``: one batched langid call yields
+    pred + margin + feature count, then the LM scores under that pred."""
+    pred, margin, lg_n = L.portable_scores_batch(
+        list(texts.to_numpy(object)), plang_art)
+    lm_n, lm_num = LM.lm_score_portable_batch(texts.tolist(), pred, plm_art)
+    return pd.DataFrame({"pred_idx": pred.astype(np.int32),
+                         "lg_n": lg_n.astype(np.int32),
+                         "margin": margin,
+                         "lm_n": lm_n.astype(np.int32),
+                         "lm_num": lm_num})
+
+
+# the fields both model specs share: the scrub, the fixed-ASCII-class text
+# stats and the gated fast-path stats (functions/stats_batch: NULL on rows
+# the ASCII gate rejects — the JVM regex forms decide those via coalesce)
+_STAT_FIELDS = ("word_cnt", "nonws_len", "symbol_cnt", "nb_lines",
+                "nb_distinct", "letterless", "stop_cnts")
+_SHARED_FIELDS = (
+    [T.StructField("scrubbed_text", T.StringType())]
+    + [T.StructField(f, T.LongType()) for f in _STAT_FIELDS[:-1]]
+    + [T.StructField("stop_cnts", T.ArrayType(T.IntegerType()))])
+# the classifier's fields (with a quality artifact only): the exact
+# integer decision numerator and the graded probability
+_QUALITY_FIELDS = [T.StructField("q_logit", T.LongType()),
+                   T.StructField("q_prob", T.DoubleType())]
 
 
 def _emit_stats(out: pd.DataFrame, text: pd.Series) -> pd.DataFrame:
@@ -83,16 +113,24 @@ _FUSED_UDFS: dict[tuple[int, int, int], tuple] = {}
 _FUSED_LOCK = threading.Lock()
 
 
+def _is_portable(langid_art: dict) -> bool:
+    """The fixed-point langid artifact carries int64 ``dq`` tables where
+    the float one carries ``W``."""
+    return "dq" in langid_art
+
+
 def make_score_scrub_udf(spark: SparkSession, langid_art: dict, lm_art: dict,
                          quality_art: dict | None = None):
     """Fused langid+perplexity+scrub UDF: ONE Arrow transfer of the text
     column instead of two (each ArrowEvalPython node ships `text` JVM→Python
     independently; fusing measured 11.4s→9.8s for the UDF stages at
-    sf0.1/local[32]). Pure composition of the shared kernels
-    (``score_batch`` + ``scrub_series``) — parity tests on each kernel
-    cover the fused path. When ``quality_art`` is given, the learned quality
-    classifier (models/quality.py) rides the SAME Arrow crossing as one more
-    struct field instead of a second Python runner.
+    sf0.1/local[32]). Pure composition of the shared kernels (the model
+    spec's scorer — ``score_batch``, or ``portable_score_batch`` for the
+    fixed-point artifacts — + ``scrub_series_sparse`` + ``stats_batch``);
+    parity tests on each kernel cover the fused path. When ``quality_art``
+    (the committed quantized classifier) is given, the quality classifier
+    (models/quality.py) rides the SAME Arrow crossing as two more struct
+    fields instead of a second Python runner.
 
     Built once per SparkContext and artifact set (``_FUSED_UDFS``): the
     model broadcasts pickle ~8.5 MB, and a new UDF re-pickles its closure,
@@ -116,14 +154,15 @@ def _build_score_scrub_udf(sc, langid_art: dict, lm_art: dict,
     b_langid = sc.broadcast(langid_art)
     b_lm = sc.broadcast(lm_art)
     b_q = sc.broadcast(quality_art) if quality_art is not None else None
-    schema = FUSED_SCHEMA
-    if b_q is not None:
-        schema = T.StructType(FUSED_SCHEMA.fields
-                              + [T.StructField("q_prob", T.DoubleType())])
+    score, fields = ((portable_score_batch, PORTABLE_SCORE_SCHEMA.fields)
+                     if _is_portable(langid_art)
+                     else (score_batch, SCORE_SCHEMA.fields))
+    schema = T.StructType(fields + _SHARED_FIELDS
+                          + (_QUALITY_FIELDS if b_q is not None else []))
 
     @F.pandas_udf(schema)
     def score_scrub(text: pd.Series) -> pd.DataFrame:
-        out = score_batch(text, b_langid.value, b_lm.value)
+        out = score(text, b_langid.value, b_lm.value)
         # sparse scrub: unchanged rows return None and the JVM coalesces
         # with the original column — halves the Arrow return traffic
         # (scrub.scrub_series_sparse; byte-identical after coalesce)
@@ -135,7 +174,9 @@ def _build_score_scrub_udf(sc, langid_art: dict, lm_art: dict,
         out = _emit_stats(out, text)
         if b_q is not None:
             from dataquality_spark.models import quality
-            out["q_prob"] = quality.predict_batch(text, b_q.value)
+            n_feat, logit = quality.logit_batch(text.tolist(), b_q.value)
+            out["q_logit"] = logit
+            out["q_prob"] = quality.probability(n_feat, logit)
         return out
 
     return score_scrub.asNondeterministic()
@@ -157,45 +198,28 @@ def with_model_scores_and_scrub(spark: SparkSession, df: DataFrame,
     whenever the model is confident (the claimed-vs-predicted agreement
     check only applies where a claim exists).
 
+    With the fixed-point artifacts (``langid.get_portable_langid``,
+    ``ngram_lm.get_portable_lm`` — ``run_pipeline(portable_models=True)``)
+    the model fields are margin/lg_n/lm_n/lm_num and pred_lang, and every
+    model decision is integer arithmetic (``_portable_decisions``).
+
     Two projections: the UDF call, then every output read straight off its
     struct (the UDF is nondeterministic, so it must sit in its own
     projection to run once per row)."""
+    portable = None
+    if _is_portable(langid_art):
+        if lang_optional:
+            raise ValueError("portable_models has no lang_optional mode: "
+                             "its language rule needs a claimed language")
+        portable = (tuple(langid_art["langs"]), tuple(lm_art["lo_q"].tolist()),
+                    tuple(lm_art["hi_q"].tolist()))
     udf = make_score_scrub_udf(spark, langid_art, lm_art,
                                quality_art=quality_art)
     outputs = _fused_outputs(text_col, lang_col, lang_optional,
-                             quality_art is not None)
+                             quality_art is not None, portable)
     return (df.withColumn("_m", udf(F.col(text_col)))
             .select(*df.columns, *outputs))
 
-
-@functools.lru_cache(maxsize=16)
-def _fused_outputs(text_col: str, lang_col: str, lang_optional: bool,
-                   with_quality: bool) -> tuple[Column, ...]:
-    """The fused stage's output columns over the UDF struct ``_m``, in
-    output order; built once per argument set."""
-    pred_lang = F.col("_m.pred_lang")
-    agree = pred_lang == F.col(lang_col)
-    if lang_optional:
-        agree = F.col(lang_col).isNull() | agree
-    cols = [F.col(f"_m.{f}") for f in ("pred_lang", "lang_conf", "logprob")]
-    cols.append(F.coalesce(F.col("_m.scrubbed_text"), F.col(text_col))
-                .alias("scrubbed_text"))
-    cols += [F.col(f"_m.{f}") for f in (
-        "word_cnt", "nonws_len", "symbol_cnt", "nb_lines", "nb_distinct",
-        "letterless", "stop_cnts")]
-    if with_quality:
-        cols.append(F.col("_m.q_prob"))
-    cols.append((pred_lang.isNotNull() & agree
-                 & (F.col("_m.lang_conf") >= spec.MIN_LANGID_CONF))
-                .alias("r_lang_match"))
-    cols.append(F.col("_m.lp_ok").alias("r_perplexity"))
-    if with_quality:
-        cols.append((F.col("_m.q_prob") >= spec.MIN_QUALITY_PROB)
-                    .alias("r_quality"))
-    return tuple(cols)
-
-
-# --- ENGINE-PORTABLE model stage (exact-oracle pipeline path) ---------------
 
 # r_lang_match margin floor, in L_QSCALE units PER FEATURE: the portable
 # analogue of MIN_LANGID_CONF (a softmax level has no integer mirror; a
@@ -204,102 +228,69 @@ def _fused_outputs(text_col: str, lang_col: str, lang_optional: bool,
 # derive the rule from it.
 L_MARGIN_PER_FEAT = 10_000
 
-PORTABLE_SCHEMA = T.StructType([
-    T.StructField("pred_idx", T.IntegerType()),
-    T.StructField("lg_n", T.IntegerType()),      # langid feature count
-    T.StructField("margin", T.LongType()),       # best − runner-up, int64
-    T.StructField("lm_n", T.IntegerType()),      # trigram count
-    T.StructField("lm_num", T.LongType()),       # Σ quantized logprob terms
-    T.StructField("scrubbed_text", T.StringType()),
-] + [T.StructField(f, T.LongType()) for f in
-     ("word_cnt", "nonws_len", "symbol_cnt", "nb_lines", "nb_distinct")]
-  + [T.StructField("letterless", T.LongType()),
-     T.StructField("stop_cnts", T.ArrayType(T.IntegerType()))])
 
-
-def make_portable_score_scrub_udf(spark: SparkSession, plang_art: dict,
-                                  plm_art: dict):
-    """Fused PORTABLE langid+LM+scrub UDF: the fixed-point integer surfaces
-    (models/langid.py § portable, models/ngram_lm.py § portable) plus the
-    byte-exact scrub, one Arrow crossing — same fusion contract as
-    ``make_score_scrub_udf``."""
-    from dataquality_spark.models import langid as L
-    from dataquality_spark.models import ngram_lm as LM
-    from dataquality_spark.scrub import scrub_series_sparse
-    sc = spark.sparkContext
-    b_lg = sc.broadcast(plang_art)
-    b_lm = sc.broadcast(plm_art)
-
-    @F.pandas_udf(PORTABLE_SCHEMA)
-    def portable_score_scrub(text: pd.Series) -> pd.DataFrame:
-        # one batched scorer call yields pred + margin + feature count
-        # (the old per-row portable_lang_buckets pass for lg_n is free now)
-        pred, margin, lg_n = L.portable_scores_batch(
-            list(text.to_numpy(object)), b_lg.value)
-        lm_n, lm_num = LM.lm_score_portable_batch(
-            text.tolist(), pred, b_lm.value)
-        out = pd.DataFrame({
-            "pred_idx": pred.astype(np.int32),
-            "lg_n": lg_n.astype(np.int32),
-            "margin": margin,
-            "lm_n": lm_n.astype(np.int32),
-            "lm_num": lm_num,
-            # sparse scrub (see make_score_scrub_udf): JVM coalesces
-            "scrubbed_text": scrub_series_sparse(text),
-        })
-        # fixed-ASCII-class text stats + gated fast-path stats on the
-        # same crossing (bit-identical to the JVM forms — stats_batch)
-        return _emit_stats(out, text)
-
-    return portable_score_scrub.asNondeterministic()
-
-
-def with_portable_scores_and_scrub(spark: SparkSession, df: DataFrame,
-                                   text_col: str = "text",
-                                   lang_col: str = "lang") -> DataFrame:
-    """PORTABLE stage-B: same r_lang_match / r_perplexity / scrubbed_text
-    contract as ``with_model_scores_and_scrub``, but every decision is pure
-    integer arithmetic — SQL-replayable, which is what makes the full
-    pipeline-metrics query exact-oracle. The rules:
+def _portable_decisions(lang_col: str, langs: tuple, lo_q: tuple,
+                        hi_q: tuple) -> tuple[Column, Column, Column]:
+    """(pred_lang, r_lang_match, r_perplexity) of the portable spec — every
+    decision pure integer arithmetic, SQL-replayable, which is what makes
+    the full pipeline-metrics query exact-oracle:
 
       r_lang_match  = pred == claimed AND margin ≥ lg_n·L_MARGIN_PER_FEAT
       r_perplexity  = lm_n > 0 AND lo_q[pred]·lm_n ≤ lm_num ≤ hi_q[pred]·lm_n
     """
-    from dataquality_spark.models import langid as L
-    from dataquality_spark.models import ngram_lm as LM
-    plang = L.get_portable_langid()
-    plm = LM.get_portable_lm()
-    udf = make_portable_score_scrub_udf(spark, plang, plm)
-    df = df.withColumn("_m", udf(F.col(text_col)))
-    lang_arr = F.array(*[F.lit(c) for c in plang["langs"]])
-    lo_arr = F.array(*[F.lit(int(v)) for v in plm["lo_q"].tolist()])
-    hi_arr = F.array(*[F.lit(int(v)) for v in plm["hi_q"].tolist()])
-    pred_ok = F.col("_m.pred_idx") >= 0
-    pred_lang = F.when(pred_ok,
-                       F.element_at(lang_arr, F.col("_m.pred_idx") + 1))
-    lo_b = F.when(pred_ok, F.element_at(lo_arr, F.col("_m.pred_idx") + 1))
-    hi_b = F.when(pred_ok, F.element_at(hi_arr, F.col("_m.pred_idx") + 1))
-    return (
-        df.select("*", "_m.margin", "_m.lg_n", "_m.lm_n", "_m.lm_num",
-                  "_m.scrubbed_text", "_m.word_cnt", "_m.nonws_len",
-                  "_m.symbol_cnt", "_m.nb_lines", "_m.nb_distinct",
-                  "_m.letterless", "_m.stop_cnts")
-        .withColumn("scrubbed_text",
-                    F.coalesce(F.col("scrubbed_text"), F.col(text_col)))
-        .withColumn("pred_lang", pred_lang)
-        .withColumn(
-            "r_lang_match",
-            F.coalesce(
-                pred_ok & (F.col("pred_lang") == F.col(lang_col))
-                & (F.col("margin")
-                   >= F.col("lg_n").cast("long") * F.lit(L_MARGIN_PER_FEAT)),
-                F.lit(False)))
-        .withColumn(
-            "r_perplexity",
-            F.coalesce(
-                pred_ok & (F.col("lm_n") > 0)
-                & (F.col("lm_num") >= lo_b * F.col("lm_n").cast("long"))
-                & (F.col("lm_num") <= hi_b * F.col("lm_n").cast("long")),
-                F.lit(False)))
-        .drop("_m")
-    )
+    pred = F.col("_m.pred_idx")
+    pred_ok = pred >= 0
+
+    def lookup(values: list) -> Column:
+        return F.when(pred_ok, F.element_at(
+            F.array(*[F.lit(v) for v in values]), pred + 1))
+
+    pred_lang, lo_b, hi_b = lookup(langs), lookup(lo_q), lookup(hi_q)
+    lm_n = F.col("_m.lm_n").cast("long")
+    lang_match = F.coalesce(
+        pred_ok & (pred_lang == F.col(lang_col))
+        & (F.col("_m.margin")
+           >= F.col("_m.lg_n").cast("long") * F.lit(L_MARGIN_PER_FEAT)),
+        F.lit(False))
+    perplexity = F.coalesce(
+        pred_ok & (F.col("_m.lm_n") > 0)
+        & (F.col("_m.lm_num") >= lo_b * lm_n)
+        & (F.col("_m.lm_num") <= hi_b * lm_n),
+        F.lit(False))
+    return pred_lang, lang_match, perplexity
+
+
+@functools.lru_cache(maxsize=16)
+def _fused_outputs(text_col: str, lang_col: str, lang_optional: bool,
+                   with_quality: bool,
+                   portable: tuple | None) -> tuple[Column, ...]:
+    """The fused stage's output columns over the UDF struct ``_m``, in
+    output order; built once per argument set. The shared fields sit
+    between the spec's model fields and its rule flags. ``portable``:
+    the fixed-point spec's (langs, lo_q, hi_q), None for the float spec."""
+    if portable:
+        cols = [F.col(f"_m.{f}") for f in ("margin", "lg_n", "lm_n", "lm_num")]
+        pred_lang, lang_match, perplexity = _portable_decisions(
+            lang_col, *portable)
+        flags = [pred_lang.alias("pred_lang")]
+    else:
+        cols = [F.col(f"_m.{f}") for f in ("pred_lang", "lang_conf", "logprob")]
+        pred_lang = F.col("_m.pred_lang")
+        agree = pred_lang == F.col(lang_col)
+        if lang_optional:
+            agree = F.col(lang_col).isNull() | agree
+        lang_match = (pred_lang.isNotNull() & agree
+                      & (F.col("_m.lang_conf") >= spec.MIN_LANGID_CONF))
+        perplexity = F.col("_m.lp_ok")
+        flags = []
+    cols.append(F.coalesce(F.col("_m.scrubbed_text"), F.col(text_col))
+                .alias("scrubbed_text"))
+    cols += [F.col(f"_m.{f}") for f in _STAT_FIELDS]
+    if with_quality:
+        cols.append(F.col("_m.q_prob"))
+    cols += flags
+    cols += [lang_match.alias("r_lang_match"), perplexity.alias("r_perplexity")]
+    if with_quality:
+        cols.append((F.col("_m.q_logit") > 0).alias("r_quality"))
+    return tuple(cols)
+

@@ -29,7 +29,7 @@ Deviations from the paper, chosen deliberately and documented:
 Feature spec (ENGINE-PORTABLE, shared machinery with the portable
 quality classifier): normalize via ``shingles_portable``'s regexes
 (strip non-ASCII BEFORE lower, explicit ASCII whitespace class), word
-hash = ``poly_hash31`` (vectorized ``poly_hash_flat``), unigram bucket =
+hash = ``poly_hash31`` (``quality.word_hashes_batch``), unigram bucket =
 h % B, bigram bucket = (h_i·1000003 + h_{i+1}) % M % B, B = 4096.
 
 Scale: the bucket-count aggregation is ONE groupBy over exploded grams
@@ -61,29 +61,15 @@ _QK = 1_000_003  # bigram combiner — same constant as the LSH/classifier fold
 def dsir_buckets_batch(texts) -> list[np.ndarray]:
     """Hashed uni+bigram bucket ids WITH MULTIPLICITY per text (bag
     semantics — unlike the classifier's set-like features, DSIR weighs a
-    bucket once per occurrence). One banded ``poly_hash_flat`` call
-    hashes every word of the batch."""
-    from dataquality_spark.models.quality import _normalize_portable
-    from dataquality_spark.operators.dedup import _MERSENNE, poly_hash_flat
+    bucket once per occurrence, and keeps every word: no prefix cap).
+    The word hashes come from the classifier's batch word-hash step."""
+    from dataquality_spark.models.quality import (
+        _fold, interleave, split_docs, word_hashes_batch)
 
-    norm = [_normalize_portable(t) for t in texts]
-    words_per = [n.split(" ") if n else [] for n in norm]
-    flat = [w.encode("ascii") for ws in words_per for w in ws]
-    hv = poly_hash_flat(flat) if flat else np.zeros(0, dtype=np.int64)
-    M = np.int64(_MERSENNE)
-    out, off = [], 0
-    for ws in words_per:
-        k = len(ws)
-        h = hv[off:off + k]
-        off += k
-        if k == 0:
-            out.append(np.zeros(0, dtype=np.int64))
-            continue
-        grams = [h % DSIR_BUCKETS]
-        if k > 1:
-            grams.append((h[:-1] * _QK + h[1:]) % M % DSIR_BUCKETS)
-        out.append(np.concatenate(grams))
-    return out
+    _, k, h = word_hashes_batch(texts)
+    bi, nb = _fold(h, k, 1, _QK)
+    return split_docs(*interleave([(h % DSIR_BUCKETS, k),
+                                   (bi % DSIR_BUCKETS, nb)]))
 
 
 def make_dsir_buckets_udf():

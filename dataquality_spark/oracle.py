@@ -100,18 +100,6 @@ def heuristic_labels(pdf: pd.DataFrame, text_col: str = "text",
     return out
 
 
-def normalize_text_py(text) -> str:
-    """Pandas mirror of functions/text.py::normalize_text (reference X-1
-    order: lower → short-digit strip → alnum+space filter → ws collapse)."""
-    if text is None or (isinstance(text, float) and np.isnan(text)):
-        return ""
-    t = str(text).strip().lower()
-    t = re.sub(r"\b\d{1,4}\b", "", t)
-    t = re.sub(r"[^a-z0-9\s]", "", t)
-    t = re.sub(r"\s+", " ", t).strip()
-    return t
-
-
 def full_labels(pdf: pd.DataFrame, langid_art: dict, lm_art: dict) -> pd.DataFrame:
     """Complete oracle labels: heuristics + model rules + exact-dedup winner
     → ``keep``; plus ``scrubbed_text``. Ground truth for the F1 ≥ 0.99 gate.

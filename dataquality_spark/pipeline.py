@@ -96,7 +96,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     """
     from dataquality_spark.functions import text as TX
     from dataquality_spark.operators.dedup import exact_dedup_winners
-    art = None if portable_models else get_artifacts()
     # html is never consumed downstream (rules/models/scrub all read `text`);
     # dropping it here keeps it out of the persisted frame and the shuffle.
     # Column pruning would skip it at scan time anyway (SURVEY.md §4.2).
@@ -106,28 +105,25 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     # must sit where rows are narrowest (measured 3× on the full frame).
     # langid+perplexity+scrub are FUSED into one UDF so `text` crosses the
     # JVM↔Python boundary once (measured 11.4s→9.8s at sf0.1/local[32]).
-    # Optional learned-quality stage (with_classifier): the classifier rides
-    # the SAME fused UDF crossing as one more struct field — no extra Python
-    # runner, no extra Arrow transfer of `text`.
+    # Optional learned-quality stage (with_classifier): the committed
+    # fixed-point classifier rides the SAME fused UDF crossing as two more
+    # struct fields — no extra Python runner, no extra Arrow transfer of
+    # `text`, and no training at run time.
+    q_art = None
+    if with_classifier:
+        from dataquality_spark.models import quality
+        q_art = quality.load_quantized_artifact()
     if portable_models:
         # ENGINE-PORTABLE stage B (fixed-point integer rules — the
         # SQL-replayable mode the exact pipeline-metrics oracle runs;
         # same fused one-UDF contract). Decision surfaces only: callers
         # needing the graded lang_conf/logprob floats use the default.
-        if with_classifier or lang_optional:
-            raise ValueError("portable_models composes with the default "
-                             "stage options only")
-    q_art = None
-    if with_classifier:
-        from dataquality_spark.models import quality
-        q_art = quality.train_quality()
-    if portable_models:
-        from dataquality_spark.models.udf import with_portable_scores_and_scrub
-        df = with_portable_scores_and_scrub(spark, df)
+        models = (langid.get_portable_langid(), ngram_lm.get_portable_lm())
     else:
-        df = with_model_scores_and_scrub(spark, df, art["langid"], art["lm"],
-                                         quality_art=q_art,
-                                         lang_optional=lang_optional)
+        art = get_artifacts()
+        models = (art["langid"], art["lm"])
+    df = with_model_scores_and_scrub(spark, df, *models, quality_art=q_art,
+                                     lang_optional=lang_optional)
     # the fused UDF already emitted the fixed-ASCII-class counts — the
     # rules projection only runs the Unicode-table-sensitive stats
     # (alpha \p{L}, stopword lower()) in the JVM (functions/stats_batch)

@@ -534,18 +534,26 @@ SELECT name, cand AS best_match, sim FROM (
 # Q11 — exact n-gram Jaccard pairs (J-2 / C1 verify stage; brute force is the
 # correctness oracle — the scale path is the LSH query below, rows-only)
 
+def _shingles3(text: F.Column) -> F.Column:
+    """Distinct word 3-gram shingles (a doc under 3 words is one shingle);
+    array_remove('') : a no-word doc must have NO shingles (matching the
+    oracle, where the empty slice stringifies to NULL) — fuzz-found."""
+    words = TX.words_col(text)
+    return F.array_remove(F.array_distinct(F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)))), "")
+
+
+# the DuckDB spelling of _shingles3, shared by the all-pairs oracles
+_SQL_SHINGLES3 = f"""list_filter(list_distinct(list_transform(
+             range(1, greatest(len({_SQL_WORDS}) - 3, 0) + 2),
+             i -> array_to_string(list_slice({_SQL_WORDS}, i, i + 2), ' ')
+         )), x -> x IS NOT NULL AND x <> '')"""
+
+
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    # array_remove('') : a no-word doc must have NO shingles (matching the
-    # oracle, where the empty slice stringifies to NULL) — fuzz-found
-    sh = docs.select("doc_id", F.array_remove(F.array_distinct(
-        F.transform(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.size(TX.words_col(F.col("text"))) - 3, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ", F.slice(TX.words_col(F.col("text")), i + 1, 3)),
-        )), "").alias("sh"))
+    sh = docs.select("doc_id", _shingles3(F.col("text")).alias("sh"))
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
@@ -558,11 +566,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_JACCARD_PAIRS = f"""
 WITH sh AS (
-  SELECT doc_id,
-         list_filter(list_distinct(list_transform(
-             range(1, greatest(len({_SQL_WORDS}) - 3, 0) + 2),
-             i -> array_to_string(list_slice({_SQL_WORDS}, i, i + 2), ' ')
-         )), x -> x IS NOT NULL AND x <> '') AS s
+  SELECT doc_id, {_SQL_SHINGLES3} AS s
   FROM documents
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -1662,6 +1666,39 @@ SELECT id_a, id_b, round(f, 6) AS jaccard FROM sims WHERE f >= 0.5
 """
 
 
+def _shadow_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings plus a ×2-scaled shadow copy of each (vec_id + 1M):
+    every (id, id+1M) pair has cosine exactly 1, so the near-dup decision
+    surface is exercised on the driver's near-orthogonal fixture. The
+    oracles' spelling is ``_sql_shadow_ctes``."""
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    shadow = emb.select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"))
+    return emb.unionByName(shadow)
+
+
+def _sql_shadow_ctes(dim: int) -> str:
+    """DuckDB mirror of ``_shadow_embeddings``: the ``aug`` CTE (corpus +
+    shadow copy) and ``qv`` (its well-formed vectors, with the fixed-point
+    quantization ``q`` the plane dots use)."""
+    from dataquality_spark.operators.similarity import SEMDEDUP_QUANT
+    return f"""aug AS (
+  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS embedding
+  FROM embeddings
+  UNION ALL
+  SELECT vec_id + 1000000, list_transform(embedding, x -> x::DOUBLE * 2.0)
+  FROM embeddings
+),
+qv AS (
+  SELECT vec_id, embedding,
+         list_transform(embedding,
+             x -> CAST(floor(x * {SEMDEDUP_QUANT} + 0.5) AS BIGINT)) AS q
+  FROM aug WHERE embedding IS NOT NULL AND len(embedding) = {dim}
+        AND len(list_filter(embedding, x -> x IS NULL)) = 0
+)"""
+
+
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs embedding near-dups via banded hyperplane LSH + exact
     cosine verify (quantized ±1-plane signatures, semdedup's LCG
@@ -1675,13 +1712,9 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id, id+1M) pair has cosine exactly 1 — LSH recall pytest-gated, and
     whatever the banding yields, BOTH engines yield it identically."""
     from dataquality_spark.operators.similarity import embedding_near_dup_pairs
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    shadow = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"))
     pins: list[DataFrame] = []
     out = embedding_near_dup_pairs(
-        spark, emb.unionByName(shadow), threshold=0.999, dim=64,
+        spark, _shadow_embeddings(spark, sf_dir), threshold=0.999, dim=64,
         cleanup=pins)
     return _register_pins(out, pins)
 
@@ -1696,25 +1729,11 @@ def _sql_embedding_neardup(bands: int = 8, band_bits: int = 6,
     ((band << band_bits) | sign bits in block order), same hot-bucket
     cap, same sequential-fold verify."""
     from dataquality_spark.operators.similarity import (
-        SEMDEDUP_LCG_A, SEMDEDUP_LCG_C, SEMDEDUP_LCG_M, SEMDEDUP_QUANT,
-        SEMDEDUP_SIGN_BIT)
+        SEMDEDUP_LCG_A, SEMDEDUP_LCG_C, SEMDEDUP_LCG_M, SEMDEDUP_SIGN_BIT)
     A, C, M = SEMDEDUP_LCG_A, SEMDEDUP_LCG_C, SEMDEDUP_LCG_M
     n_planes = bands * band_bits
     return f"""
-WITH aug AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS embedding
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, list_transform(embedding, x -> x::DOUBLE * 2.0)
-  FROM embeddings
-),
-qv AS (
-  SELECT vec_id, embedding,
-         list_transform(embedding,
-             x -> CAST(floor(x * {SEMDEDUP_QUANT} + 0.5) AS BIGINT)) AS q
-  FROM aug WHERE embedding IS NOT NULL AND len(embedding) = {dim}
-        AND len(list_filter(embedding, x -> x IS NULL)) = 0
-),
+WITH {_sql_shadow_ctes(dim)},
 pidx AS (
   SELECT pp.p AS p, jj.j AS j,
          ({A}::BIGINT * (pp.p * {dim} + jj.j) + {C}) % {M} AS s
@@ -2882,13 +2901,6 @@ SELECT doc_id, {_sql_scrub_chain()} AS scrubbed_text FROM documents
 # neither engine does float threshold comparisons). Labels are the MIN doc
 # id per component; singletons label themselves.
 
-def _shingles3(text: F.Column) -> F.Column:
-    words = TX.words_col(text)
-    return F.array_remove(F.array_distinct(F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)))), "")
-
-
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataquality_spark.operators.components import neardup_components
     docs = _t(spark, sf_dir, "documents")
@@ -2911,11 +2923,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle and the leakage-safe-split oracle (which buckets ON the label).
 _CC_CTES = f"""
 WITH RECURSIVE sh AS (
-  SELECT doc_id,
-         list_filter(list_distinct(list_transform(
-             range(1, greatest(len({_SQL_WORDS}) - 3, 0) + 2),
-             i -> array_to_string(list_slice({_SQL_WORDS}, i, i + 2), ' ')
-         )), x -> x IS NOT NULL AND x <> '') AS s
+  SELECT doc_id, {_SQL_SHINGLES3} AS s
   FROM documents
 ),
 e0 AS (
@@ -3450,8 +3458,8 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compared value is the integer decision numerator Σwq[bucket] + bq·n_feat
 # — exact in any summation order on both engines, no float knife edge
 # (the `_sql_fuzzy_dedup` constants-from-the-operator pattern). The
-# graded-probability surface (crc spec, `make_quality_udf`) stays the
-# pipeline's scoring path; this query pins the decision algebra.
+# pipeline's classifier stage (`run_pipeline(with_classifier=True)`)
+# scores with the same artifact and keeps on the same `logit_num > 0`.
 
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataquality_spark.models import quality
@@ -4416,15 +4424,11 @@ FROM dom d LEFT JOIN bl b ON b.domain = d.domain
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataquality_spark.operators.similarity import semantic_dedup
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    shadow = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"))
     # dim pinned to the oracle's hardcoded 64: a dimension change must fail
     # loudly (the guard drops wrong-length vectors on BOTH engines) instead
     # of diverging silently, and the explicit value skips the head(1)
     # inference job the operator would otherwise run
-    return semantic_dedup(spark, emb.unionByName(shadow),
+    return semantic_dedup(spark, _shadow_embeddings(spark, sf_dir),
                           threshold=0.999, n_planes=6, dim=64)
 
 
@@ -4435,24 +4439,10 @@ def _sql_semdedup(n_planes: int = 6, dim: int = 64,
     same LCG, the same floor(v·QUANT + 0.5) fixed-point dot, the same
     first-seen-wins drop rule."""
     from dataquality_spark.operators.similarity import (
-        SEMDEDUP_LCG_A, SEMDEDUP_LCG_C, SEMDEDUP_LCG_M, SEMDEDUP_QUANT,
-        SEMDEDUP_SIGN_BIT)
+        SEMDEDUP_LCG_A, SEMDEDUP_LCG_C, SEMDEDUP_LCG_M, SEMDEDUP_SIGN_BIT)
     sign_div = 1 << SEMDEDUP_SIGN_BIT
     return f"""
-WITH aug AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS embedding
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000, list_transform(embedding, x -> x::DOUBLE * 2.0)
-  FROM embeddings
-),
-qv AS (
-  SELECT vec_id, embedding,
-         list_transform(embedding,
-             x -> CAST(floor(x * {SEMDEDUP_QUANT} + 0.5) AS BIGINT)) AS q
-  FROM aug WHERE embedding IS NOT NULL AND len(embedding) = {dim}
-        AND len(list_filter(embedding, x -> x IS NULL)) = 0
-),
+WITH {_sql_shadow_ctes(dim)},
 dots AS (
   SELECT vec_id, pp.p AS p,
          SUM((CASE WHEN ((({SEMDEDUP_LCG_A}::BIGINT * (pp.p * {dim} + jj.j)
@@ -5601,21 +5591,11 @@ ORDER BY cluster_size
 _CONFUSION_LANGS = ["de", "en", "es", "fr"]
 
 
-def _stopword_hits(text: F.Column, stoplist: list[str]) -> F.Column:
-    # one codegen'd alternation pass per candidate language — counts
-    # exactly the whitespace-delimited tokens the array membership test
-    # accepts (the stopword_count_rx equivalence class, see _gate_flags);
-    # longest-first ordering so prefixes never shadow longer stop words
-    alts = "|".join(sorted(stoplist, key=len, reverse=True))
-    pat = rf"(^|\s)({alts})(?=\s|$)"
-    return F.coalesce(
-        F.regexp_count(F.lower(text), F.lit(pat)), F.lit(0)).cast("int")
-
-
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     txt = F.coalesce(F.col("text"), F.lit(""))
-    hits = {lg: _stopword_hits(txt, spec.STOPWORDS[lg])
+    # one alternation pass per candidate language (TX.stopword_hits)
+    hits = {lg: TX.stopword_hits(txt, spec.STOPWORDS[lg]).cast("int")
             for lg in _CONFUSION_LANGS}
     best = F.array_max(F.array(*[
         F.struct(hits[lg].alias("h"), F.lit(lg).alias("l"))

@@ -56,9 +56,6 @@ MAX_DUP_LINE_FRACTION = 0.30
 # language-ID gate (model stage)
 MIN_LANGID_CONF = 0.65
 
-# learned quality-classifier gate (optional stage, models/quality.py)
-MIN_QUALITY_PROB = 0.5
-
 # perplexity gate: per-language IQR outlier bounds, factor from the reference
 # default (`dimensions/accuracy/a2.py:23`)
 IQR_FACTOR = 1.5

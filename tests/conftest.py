@@ -19,4 +19,4 @@ def artifacts():
 @pytest.fixture(scope="session")
 def artifacts_q():
     from dataquality_spark.models import quality
-    return quality.train_quality()
+    return quality.load_quantized_artifact()

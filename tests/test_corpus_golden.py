@@ -114,3 +114,16 @@ def test_oracle_sql_digests():
     from dataquality_spark.queries import ORACLE_SQL
     for name in ("pages_pipeline", "langid_scores"):
         assert _digest(ORACLE_SQL[name]) == GOLDEN[f"oracle_{name}"], name
+
+
+def test_oracle_window_holds_exact_oracles():
+    """The correctness gate checks the FIRST 50 registry entries: every
+    one of them has a DuckDB oracle, and the window holds the three
+    late-added exact oracles (toxicity_score, attribute_spans,
+    threshold_calibration)."""
+    from dataquality_spark.queries import ORACLE_SQL, QUERIES
+    window = list(QUERIES)[:50]
+    assert len(window) == 50
+    assert [q for q in window if q not in ORACLE_SQL] == []
+    assert {"toxicity_score", "attribute_spans",
+            "threshold_calibration"} <= set(window)

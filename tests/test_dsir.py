@@ -12,12 +12,14 @@ from dataquality_spark.operators.dsir import (DSIR_BUCKETS, _QK,
 
 
 def _scalar_buckets(text):
-    """Slow per-word reference: poly_hash31 fold, uni then bigram buckets
-    in spec order — the vectorized batch must match exactly."""
-    from dataquality_spark.models.quality import _normalize_portable
-    from dataquality_spark.operators.dedup import _MERSENNE, poly_hash31
+    """Slow per-word reference, independent of the batch kernel: the
+    portable normalization spelled with its regexes, poly_hash31 fold, uni
+    then bigram buckets in spec order — the vectorized batch must match
+    exactly."""
+    from dataquality_spark.operators.dedup import (_MERSENNE, _PORT_KEEP,
+                                                   _PORT_WS, poly_hash31)
 
-    n = _normalize_portable(text)
+    n = _PORT_WS.sub(" ", _PORT_KEEP.sub("", text or "")).strip().lower()
     if not n:
         return []
     h = [poly_hash31(w) for w in n.split(" ")]

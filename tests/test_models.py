@@ -70,58 +70,6 @@ def test_model_udf_matches_local(spark, artifacts):
     assert (got["r_perplexity"].astype(bool) == ref["lp_ok"].astype(bool)).all()
 
 
-# --- quality classifier (models/quality.py) --------------------------------
-
-def test_quality_classifier_separates_junk(artifacts_q):
-    """Held-out positives (unseen seed-corpus docs) and held-out junk of all
-    four kinds (different generator seed) must separate at 0.5."""
-    import pandas as pd
-    from dataquality_spark import spec
-    from dataquality_spark.models import corpus, quality
-
-    art = artifacts_q
-    pos = []
-    for lg in spec.LANGS:
-        pos.extend(corpus.seed_corpus(lg, n_docs=150)[120:])
-    pp = quality.predict_batch(pd.Series(pos), art)
-    assert (pp > 0.5).mean() >= 0.99
-    for kind in range(4):
-        junk = [quality._junk_doc(0xFEED * 1_000_003 + d)
-                for d in range(kind, 120, 4)]
-        pj = quality.predict_batch(pd.Series(junk), art)
-        assert (pj < 0.5).mean() >= 0.95, f"junk kind {kind}"
-
-
-def test_quality_training_deterministic():
-    """Two independent trainings (past the lru_cache, which would hand
-    back the same object) agree bit for bit."""
-    from dataquality_spark.models import quality
-    train = quality.train_quality.__wrapped__
-    a, b = train(epochs=40), train(epochs=40)
-    assert a["w"] is not b["w"]
-    assert a["w"].tobytes() == b["w"].tobytes()
-    assert a["b"] == b["b"]
-
-
-def test_quality_udf_parity_and_nulls(spark, artifacts_q):
-    """The Arrow UDF must equal predict_batch through the full Spark
-    plumbing (broadcast, batching, nulls); empty/null text scores 0.0."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from dataquality_spark.models import quality
-
-    texts = ["the quick brown fox and the lazy dog run home again",
-             "", None, "xqzjvk wpfmtr zzkkqq " * 10]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "i: long, text: string")
-    udf = quality.make_quality_udf(spark, artifacts_q)
-    got = (df.select("i", udf("text").alias("p")).toPandas()
-           .sort_values("i")["p"].to_numpy())
-    want = quality.predict_batch(pd.Series(texts), artifacts_q)
-    assert abs(got - want).max() < 1e-12
-    assert got[1] == 0.0 and got[2] == 0.0
-
-
 # --- quantized PORTABLE artifact (the exact-oracle decision spec) -----------
 
 def test_quality_portable_artifact_reproducible():
@@ -131,20 +79,21 @@ def test_quality_portable_artifact_reproducible():
     import numpy as np
     from dataquality_spark.models import quality
 
-    retrained = quality.quantized_artifact(
-        quality.train_quality(feature_spec="portable"))
+    import inspect
+    assert not inspect.signature(quality.train_quality).parameters
+    retrained = quality.quantized_artifact(quality.train_quality())
     committed = quality.load_quantized_artifact()
     assert np.array_equal(retrained["wq"], committed["wq"])
     assert retrained["bq"] == committed["bq"]
 
 
-def test_quality_portable_separates_junk():
+def test_quality_portable_separates_junk(artifacts_q):
     """Quantization must not cost separation: held-out positives and all
     four held-out junk kinds split on the SIGN of the integer logit."""
     from dataquality_spark import spec
     from dataquality_spark.models import corpus, quality
 
-    qart = quality.load_quantized_artifact()
+    qart = artifacts_q
     pos = []
     for lg in spec.LANGS:
         pos.extend(corpus.seed_corpus(lg, n_docs=150)[120:])
@@ -157,7 +106,7 @@ def test_quality_portable_separates_junk():
         assert (lj <= 0).mean() >= 0.95, f"junk kind {kind}"
 
 
-def test_quality_logit_udf_parity_and_edges(spark):
+def test_quality_logit_udf_parity_and_edges(spark, artifacts_q):
     """The integer-logit Arrow UDF equals logit_batch through Spark
     plumbing; null/empty/whitespace/non-ASCII-only text gives (0, 0) —
     the no-features ⇒ drop contract on both engines."""
@@ -168,7 +117,7 @@ def test_quality_logit_udf_parity_and_edges(spark):
              "xqzjvk wpfmtr zzkkqq " * 10]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "i: long, text: string")
-    qart = quality.load_quantized_artifact()
+    qart = artifacts_q
     udf = quality.make_quality_logit_udf(spark, qart)
     got = (df.select("i", udf("text").alias("s"))
            .select("i", "s.n_feat", "s.logit_num").toPandas()
@@ -178,6 +127,53 @@ def test_quality_logit_udf_parity_and_edges(spark):
     assert (got["logit_num"].to_numpy() == lg).all()
     for j in (1, 2, 3, 4):
         assert nf[j] == 0 and lg[j] == 0
+    p = quality.probability(nf, lg)
+    assert (p[[1, 2, 3, 4]] == 0.0).all()
+    assert ((p > 0.5) == (lg > 0))[[0, 5]].all()
+
+
+# the hostile inputs of the batch word-hash step: null, empty, a lone
+# vertical tab, non-ASCII, the \x1c-\x1f separators (whitespace to
+# str.split, stripped by the portable spec), punctuation only, one
+# 5,000-character token, repeated words
+HOSTILE = [None, "", "\x0b", "naïve café — 東京 İstanbul", "\x1c\x1d\x1e\x1f",
+           "a\x1cb\x1fc d", "!!! ??? ... --- ###", "x" * 5000, "one",
+           "the the the"]
+
+
+def test_word_hash_step_buckets_pinned():
+    """The batch word-hash step (each distinct word hashed once, then
+    gathered) and the vectorized gram kernels give the SAME per-doc
+    bucket arrays as the per-doc kernels they replaced: SHA-256 of
+    (per-doc lengths, flat buckets) taken from those kernels on 3,000
+    synthetic pages plus the hostile inputs, for the classifier and for
+    DSIR."""
+    import hashlib
+
+    from dataquality_spark.models import quality
+    from dataquality_spark.operators.dsir import dsir_buckets_batch
+    from dataquality_spark.synth import gen_pages_pdf
+
+    texts = (gen_pages_pdf(np.arange(3000), 11, 3000)["text"].tolist()
+             + HOSTILE)
+
+    def digest(per_doc):
+        n = np.array([len(b) for b in per_doc], dtype=np.int64)
+        return hashlib.sha256(
+            n.tobytes() + np.concatenate(per_doc).astype(np.int64).tobytes()
+        ).hexdigest()
+
+    n, flat = quality.portable_buckets_batch(texts)
+    assert digest(quality.split_docs(n, flat)) == (
+        "a1b10cec19255fce2ab01cb8224f34f2c94bad3c400cccbb61077ccfe5aef57c")
+    assert digest(dsir_buckets_batch(texts)) == (
+        "3cc3c2c709d1058ec75fb2d0a653ef406c423d9b147a9c8c4a8ec97d755dd510")
+    # a doc's buckets do not depend on its batch
+    one = [quality.portable_buckets_batch([t])[1] for t in HOSTILE]
+    assert all(np.array_equal(a, b) for a, b in
+               zip(one, quality.split_docs(n, flat)[-len(HOSTILE):]))
+    empty = quality.portable_buckets_batch([])
+    assert len(empty[0]) == 0 and len(empty[1]) == 0
 
 
 def test_fused_udf_once_per_spark_context():

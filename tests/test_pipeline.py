@@ -71,6 +71,33 @@ def test_decisions_schema(spark, artifacts):
         f.unpersist()
 
 
+@pytest.mark.parametrize("portable", [False, True])
+def test_pipeline_classifier_rule_is_committed_logit(spark, portable):
+    """The classifier stage scores with the committed fixed-point artifact
+    under both model specs: per row, r_quality is the sign of the integer
+    logit the quality_classifier query computes, and q_prob its sigmoid."""
+    import numpy as np
+
+    from dataquality_spark.models import quality
+
+    qart = quality.load_quantized_artifact()
+    pages = generate_pages(spark, 6000, seed=42)
+    cleanup = []
+    ann = pipeline.run_pipeline(spark, pages, cleanup=cleanup,
+                                with_classifier=True,
+                                portable_models=portable)
+    got = (ann.select("url", "r_quality", "q_prob")
+           .join(pages.select("url", "text"), "url").collect())
+    for f in cleanup:
+        f.unpersist()
+    assert len(got) == 6000
+    for r in got:
+        n_feat, logit = quality.logit_batch([r["text"]], qart)
+        assert r["r_quality"] == bool(logit[0] > 0), r["url"]
+        assert np.isclose(r["q_prob"], quality.probability(n_feat, logit)[0],
+                          rtol=0, atol=1e-15), r["url"]
+
+
 def test_pipeline_classifier_stage_opt_in(spark):
     """with_classifier=True adds q_prob + the quality rule inside the SAME
     fused UDF (no second Python runner), gates keep on it, and surfaces it

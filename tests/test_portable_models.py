@@ -122,9 +122,17 @@ def test_portable_pipeline_fused_single_arrow_stage(spark):
 
 
 def test_portable_pipeline_rejects_unsupported_combos(spark):
+    """lang_optional needs the float spec's confidence; the classifier
+    stage composes with the portable spec (one quality kernel for both)."""
     from dataquality_spark import pipeline as P
     from dataquality_spark.synth import generate_pages
     pages = generate_pages(spark, 10, seed=7)
-    for combo in ({"with_classifier": True}, {"lang_optional": True}):
-        with pytest.raises(ValueError, match="portable_models"):
-            P.run_pipeline(spark, pages, portable_models=True, **combo)
+    with pytest.raises(ValueError, match="portable_models"):
+        P.run_pipeline(spark, pages, portable_models=True, lang_optional=True)
+    cleanup = []
+    ann = P.run_pipeline(spark, pages, cleanup=cleanup, portable_models=True,
+                         with_classifier=True)
+    m = {r["rule_id"]: r for r in P.pipeline_metrics(ann).collect()}
+    assert m["quality"]["pass_count"] + m["quality"]["fail_count"] == 10
+    for f in cleanup:
+        f.unpersist()

@@ -19,7 +19,7 @@ from dataquality_spark.models import quality  # noqa: E402
 
 
 def main() -> None:
-    art = quality.train_quality(feature_spec="portable")
+    art = quality.train_quality()
     qart = quality.quantized_artifact(art)
     quality.save_quantized_artifact(qart)
     nz = int((qart["wq"] != 0).sum())
